@@ -37,36 +37,10 @@ object SparkEntry {
     (streaming.EventPipeline.queries, streaming.EventPipeline.oracle),
     (streaming.RunningTotals.queries, streaming.RunningTotals.oracle),
     (streaming.Scd2Stream.queries, streaming.Scd2Stream.oracle),
-    (streaming.KnnStream.queries, streaming.KnnStream.oracle),
-    (streaming.GateStream.queries, streaming.GateStream.oracle),
-    (streaming.DedupStream.queries, streaming.DedupStream.oracle),
     (streaming.DriftStream.queries, streaming.DriftStream.oracle),
-    (streaming.GraphAnnStream.queries, streaming.GraphAnnStream.oracle),
-    (streaming.GraphInsertStream.queries, streaming.GraphInsertStream.oracle),
-    (streaming.AlignStream.queries, streaming.AlignStream.oracle),
-    (streaming.SearchStream.queries, streaming.SearchStream.oracle),
-    (streaming.ChunkStream.queries, streaming.ChunkStream.oracle),
     (streaming.CompLabelStream.queries, streaming.CompLabelStream.oracle),
-    (streaming.LmqlStream.queries, streaming.LmqlStream.oracle),
-    (streaming.LtrStream.queries, streaming.LtrStream.oracle),
-    (streaming.HybridStream.queries, streaming.HybridStream.oracle),
-    (streaming.DsirStream.queries, streaming.DsirStream.oracle),
-    (streaming.Rm3Stream.queries, streaming.Rm3Stream.oracle),
-    (streaming.MaxsimStream.queries, streaming.MaxsimStream.oracle),
     (streaming.MvStream.queries, streaming.MvStream.oracle),
-    (streaming.BandsStream.queries, streaming.BandsStream.oracle),
-    (streaming.IndexMergeStream.queries, streaming.IndexMergeStream.oracle),
-    (streaming.SplitGateStream.queries, streaming.SplitGateStream.oracle),
-    (streaming.SampleStream.queries, streaming.SampleStream.oracle),
-    (streaming.PhashStream.queries, streaming.PhashStream.oracle),
-    (streaming.CeStream.queries, streaming.CeStream.oracle),
-    (streaming.ClipStream.queries, streaming.ClipStream.oracle),
-    (streaming.AudioDupStream.queries, streaming.AudioDupStream.oracle),
-    (streaming.MmrStream.queries, streaming.MmrStream.oracle),
-    (streaming.ClusterSampleStream.queries, streaming.ClusterSampleStream.oracle),
-    (streaming.KmvOverlapStream.queries, streaming.KmvOverlapStream.oracle),
-    (streaming.QuantizerStream.queries, streaming.QuantizerStream.oracle),
-    (streaming.ChunkDenseStream.queries, streaming.ChunkDenseStream.oracle))
+    (streaming.IngestStream.queries, streaming.IngestStream.oracle))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's core computation: sliding-window per-user interaction

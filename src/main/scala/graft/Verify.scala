@@ -65,7 +65,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // A named subset dumps only its own oracle entries, so
+    // tools/check_oracle.py checks it cleanly; two args dump them all.
+    val json = SparkEntry.oracleSql.filter(kv => only.forall(_.contains(kv._1)))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

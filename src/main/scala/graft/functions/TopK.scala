@@ -241,7 +241,7 @@ class BottomKByKeyAgg(k: Int)
   // batch users (their inputs are distinct-keyed by construction) and the
   // property that lets a streamed KMV maintain bottom-k over an
   // at-least-once event feed with NO separate dedup state
-  // ([[graft.streaming.KmvOverlapStream]]).
+  // ([[graft.streaming.IngestStream]]).
   private def best(buf: Seq[KeyedId]): Seq[KeyedId] =
     buf.distinct.sorted(asc).take(k)
 

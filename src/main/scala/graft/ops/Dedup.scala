@@ -725,7 +725,7 @@ object Dedup {
   /** Modulus selecting the stand-in "incoming batch" for [[incremental]]
     * (doc_id % [[newMod]] == [[newRem]], ~10% of the corpus) — a real
     * pipeline passes the actual new partition. Shared with the streaming
-    * twin ([[graft.streaming.DedupStream]]), whose file source replays the
+    * twin ([[graft.streaming.IngestStream]]), whose file source replays the
     * same partition as the arriving documents. */
   private[graft] val newMod = 10
   private[graft] val newRem = 7
@@ -761,7 +761,7 @@ object Dedup {
 
   /** The asymmetric ingest-vs-corpus probe — ONE definition shared by the
     * batch form ([[incremental]]) and the streaming form
-    * ([[graft.streaming.DedupStream.streamedIncrementalDedup]]), so the two
+    * ([[graft.streaming.IngestStream]]), so the two
     * cannot drift. `batch` carries the arriving (doc_id, text) rows;
     * candidates come from corpus bands × (conf-gated broadcast) ingest
     * bands — never corpus × corpus — and the verify step reads 16 longs

@@ -78,7 +78,7 @@ object Diversify {
   }
 
   /** [[mmrTopK]]'s core over any (query_id, qv) panel — shared with the
-    * streamed serving twin ([[graft.streaming.MmrStream]]), whose arriving
+    * streamed serving twin ([[graft.streaming.IngestStream]]), whose arriving
     * micro-batch plays `q` against the standing corpus `c`. */
   /** The pool stage alone (uncut) — the corpus-touching part of MMR, split
     * out so its plan shape (broadcast panel over the scan, bounded-heap

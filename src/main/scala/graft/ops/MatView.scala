@@ -339,7 +339,7 @@ object MatView {
 
   /** The multi-cut readout off any histogram grid — shared by the batch
     * form and the streamed maintained-grid twin
-    * ([[graft.streaming.BandsStream]]): one readout definition, so a
+    * ([[graft.streaming.IngestStream]]): one readout definition, so a
     * dashboard served from merged deltas cannot drift from the
     * full-recompute form. */
   private[graft] def bandsReadout(hist: DataFrame): DataFrame = {
@@ -373,7 +373,7 @@ object MatView {
 
   /** The materialized base histogram (non-delta slice), built once per
     * (session, dir) and spilled — shared by [[mvQuantile]] and the
-    * streamed bands twin ([[graft.streaming.BandsStream]]). */
+    * streamed bands twin ([[graft.streaming.IngestStream]]). */
   private[graft] def baseHist(s: SparkSession, d: String): DataFrame = {
     val key = (SpillMemo.sessionId(s), d)
     val path = histMemo.synchronized(histMemo.getOrElseUpdate(key, {

@@ -887,7 +887,7 @@ object MultimodalPipeline {
   }
 
   /** Ingest-time visual dedup decision, batch form (the streamed twin is
-    * [[graft.streaming.PhashStream]]): each ARRIVING image (the resized
+    * [[graft.streaming.IngestStream]]): each ARRIVING image (the resized
     * variants) probes the STANDING corpus fingerprint index through the
     * band buckets; emit per arrival the best match (lowest Hamming, ties
     * to the smallest corpus id) and the duplicate verdict. One row per
@@ -1198,7 +1198,7 @@ object MultimodalPipeline {
   }
 
   /** The streamed audio probe's oracle — referenced from
-    * [[graft.streaming.AudioDupStream]]: all-pairs window-prefix check
+    * [[graft.streaming.IngestStream]]: all-pairs window-prefix check
     * restricted to (arriving cut, standing original) pairs. */
   private[graft] def audioProbeOracle: String =
     s"""WITH ${audioFpSqlCtes(withVariants = true)},
@@ -1218,7 +1218,7 @@ object MultimodalPipeline {
 
   /** The streamed clip probe's oracle: the all-pairs prefix check
     * restricted to (arriving variant, standing original) pairs —
-    * referenced from [[graft.streaming.ClipStream]]. */
+    * referenced from [[graft.streaming.IngestStream]]. */
   private[graft] def clipProbeOracle: String =
     s"""WITH ${videoPhashSqlCtes(withVariants = true)},
        |nfr AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nf FROM vph GROUP BY 1),

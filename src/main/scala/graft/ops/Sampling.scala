@@ -71,7 +71,7 @@ object Sampling {
     * coordinate across executors or replays), uniform (the hash is
     * pseudorandom in the id), and MERGEABLE — the global bottom-k of any
     * partition/batch union equals the bottom-k of the per-part bottom-ks,
-    * which is what lets the streamed twin ([[graft.streaming.SampleStream]])
+    * which is what lets the streamed twin ([[graft.streaming.IngestStream]])
     * maintain it at ingest with k rows of state and lets a 1000-executor
     * cluster compute it as a TakeOrderedAndProject (per-partition heap of
     * k, then a driver merge of k×partitions candidates — no global sort,
@@ -360,7 +360,7 @@ object Sampling {
   }
 
   /** The per-arrival assignment core — ONE definition shared by the batch
-    * form and the streamed twin ([[graft.streaming.SplitGateStream]]), so
+    * form and the streamed twin ([[graft.streaming.IngestStream]]), so
     * the two cannot drift. Each arrival's row depends only on its own text
     * plus the static index + label relations, so the probe is
     * batching-invariant. */
@@ -764,7 +764,7 @@ object Sampling {
     * distributions they are judged against) and arriving documents
     * (`% 10 = 7`) are scored map-side against it; the admission set is
     * the top-[[dsirQuota]] arrivals. The streamed twin
-    * ([[graft.streaming.DsirStream]]) maintains exactly this set as
+    * ([[graft.streaming.IngestStream]]) maintains exactly this set as
     * batches arrive, riding [[dsirTrim]]'s merge law. */
   def dsirIngest(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)

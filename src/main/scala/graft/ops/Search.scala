@@ -317,7 +317,7 @@ object Search {
 
   /** Batch form of ingest-time serving: arriving docs (`% 10 = 7`) probe
     * the standing-corpus index. The streamed twin
-    * ([[graft.streaming.SearchStream]]) runs THIS probe per micro-batch. */
+    * ([[graft.streaming.IngestStream]]) runs THIS probe per micro-batch. */
   def bm25IngestTopK(s: SparkSession, d: String): DataFrame =
     bm25Probe(
       Tables.documents(s, d)
@@ -472,7 +472,7 @@ object Search {
 
   /** Batch form of chunk-level ingest serving: arriving docs probe the
     * standing chunk index. The streamed twin
-    * ([[graft.streaming.ChunkStream]]) runs THIS per micro-batch. */
+    * ([[graft.streaming.IngestStream]]) runs THIS per micro-batch. */
   def chunkIngestTopK(s: SparkSession, d: String): DataFrame =
     chunkProbe(
       Tables.documents(s, d)
@@ -708,7 +708,7 @@ object Search {
     * ([[chunkDenseProbe]]'s scaladoc promise; the ×10 sweep measured the
     * brute leg's per-arrival cost growing WITH the corpus, which no
     * serving path can carry — BASELINE.md round 17). The streamed twin
-    * ([[graft.streaming.ChunkDenseStream]]) runs THIS per micro-batch. */
+    * ([[graft.streaming.IngestStream]]) runs THIS per micro-batch. */
   def chunkFusedIngestRollup(s: SparkSession, d: String): DataFrame = {
     val arriving = Tables.documents(s, d)
       .filter(col("doc_id") % Similarity.knnBatchMod === 7)
@@ -862,7 +862,7 @@ object Search {
 
   /** Batch form of LM ingest serving: arriving docs (`% 10 = 7`) probe the
     * standing-corpus LM index. The streamed twin
-    * ([[graft.streaming.LmqlStream]]) runs THIS probe per micro-batch. */
+    * ([[graft.streaming.IngestStream]]) runs THIS probe per micro-batch. */
   def lmqlIngestTopK(s: SparkSession, d: String): DataFrame =
     lmqlProbe(
       Tables.documents(s, d)
@@ -946,7 +946,7 @@ object Search {
     * training/serving-skew guard (features logged at serving time are
     * byte-identical to features computed at training-set build time,
     * because they are one definition). The streamed twin
-    * ([[graft.streaming.LtrStream]]) runs THIS per micro-batch. */
+    * ([[graft.streaming.IngestStream]]) runs THIS per micro-batch. */
   def ltrIngestFeatures(s: SparkSession, d: String): DataFrame =
     ltrFeaturesOn(
       Tables.documents(s, d)
@@ -1795,7 +1795,7 @@ object Search {
     * forward relation — the same static pair RM3 serving reads
     * ([[rm3IngestIndex]]: lineage-cut once, or the persisted
     * [[IndexStore]] layout). The streamed twin
-    * ([[graft.streaming.MaxsimStream]]) runs THIS probe per micro-batch;
+    * ([[graft.streaming.IngestStream]]) runs THIS probe per micro-batch;
     * per-arrival cost is candidate-bounded, state is zero. */
   def maxsimIngest(s: SparkSession, d: String): DataFrame = {
     val (idx, fwd) = rm3IngestIndex(s, d)

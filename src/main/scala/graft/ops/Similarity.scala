@@ -945,7 +945,7 @@ object Similarity {
   /** The (vec_id, q, bucket, nq) sign-bucket relation of any frame with
     * (vec_id, embedding) — [[knnGraph]]/[[knnIncremental]]'s shared
     * quantize + bucket + degenerate-vector guard, factored so the
-    * streaming ingest path ([[graft.streaming.KnnStream]]) builds its
+    * streaming ingest path ([[graft.streaming.IngestStream]]) builds its
     * per-batch relation with the identical arithmetic. */
   private[graft] def knnRelation(df: DataFrame, bits: Int = knnBits): DataFrame = {
     val bucketExpr = (0 until bits)
@@ -1399,7 +1399,7 @@ object Similarity {
     * bucketed corpus probe index, and the corpus vectors — all static
     * (parquet-backed memo / lineage-cut), computed once per call (batch)
     * or once at query start (the streaming twin
-    * [[graft.streaming.GraphAnnStream]]). */
+    * [[graft.streaming.IngestStream]]). */
   private[graft] def ingestGraphIndex(
       s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     val edges = navGraph(s, d)
@@ -1532,7 +1532,7 @@ object Similarity {
     * edge subgraph and the FULL vector table (trim candidates include
     * already-inserted arriving ids, so the lookup side must cover both id
     * spaces). Shared by [[graphInsert]] and the streamed twin
-    * [[graft.streaming.GraphInsertStream]], which derives them once at
+    * [[graft.streaming.IngestStream.insertDelta]], which derives them once at
     * query start. */
   private[graft] def insertIndex(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(s)
@@ -1551,7 +1551,7 @@ object Similarity {
     *
     * The incremental form converges to the batch answer under ANY split
     * of the ingest by the bounded-heap merge law (the KMV argument of
-    * [[graft.streaming.SampleStream]]): an element outside
+    * [[graft.streaming.IngestStream]]): an element outside
     * top-k(A) has ≥ k better elements that survive into every later
     * candidate set, so top-k(top-k(A) ∪ B) = top-k(A ∪ B) — re-trimming
     * a prior trim with new reverse candidates equals one trim over the

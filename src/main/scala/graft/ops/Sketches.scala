@@ -253,7 +253,7 @@ object Sketches {
 
   /** [[kmvOverlap]]'s pairwise tail over any per-type sketch relation
     * `sk` (event_type, hs: sorted 12-hex bottom-k array) — shared with
-    * the maintained-sketch stream ([[graft.streaming.KmvOverlapStream]]),
+    * the maintained-sketch stream ([[graft.streaming.IngestStream]]),
     * which resolves `sk` from its keyed sink instead of a batch scan. */
   private[graft] def overlapOf(sk: DataFrame, du: DataFrame): DataFrame = {
     val pairs = sk.select(col("event_type").as("type_a"), col("hs").as("ha"))

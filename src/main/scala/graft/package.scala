@@ -28,7 +28,8 @@
   * [[graft.SparkEntry]] (driver contract: `queries` + `oracleSql`),
   * [[graft.Verify]] (correctness dump), [[graft.Bench]] (timing JSON),
   * `graft.tools.Pipeline` (runnable consumer-equivalent topology),
-  * `graft.tools.Profile` / `graft.tools.VerifySubset` (dev loops).
+  * `graft.tools.Profile` and `graft.Verify`'s optional query-name
+  * argument (dev loops).
   *
   * Design notes live in `SCALE.md` (per-family 100 TB analysis) and
   * `SURVEY.md` §2.5b (operator-by-operator implementation inventory).

@@ -37,10 +37,7 @@ object CompLabelStream {
     val scratch = graft.ops.SpillMemo.scratchDir("graft-scomp-")
     val (_, corpusBands) = Dedup.corpusSigIndex(ss, sfDir)
     val standingLabels = Dedup.standingComponentLabels(ss, sfDir)
-    val schema = EventPipeline.tableSchema(ss, s"$sfDir/documents.parquet")
-    val dir = EventPipeline.installSourceDir(
-      java.nio.file.Paths.get(s"$sfDir/documents.parquet"))
-    val ingest = ss.readStream.schema(schema).parquet(dir.toString)
+    val ingest = EventPipeline.tableStream(ss, sfDir, "documents")
       .filter(col("doc_id") % Dedup.newMod === Dedup.newRem)
       .select(col("doc_id"), col("text"))
     val labelSink = s"$scratch/labels"

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.Trigger
   * be discovered in a later sweep). The arriving documents maintain a
   * per-`lang` running count as an unwindowed update-mode aggregation
   * (state = one row per language — cardinality-bounded, nothing to evict,
-  * the [[GateStream]] shape), upserted by lang; the standing corpus
+  * the model-gate census shape), upserted by lang; the standing corpus
   * census is computed once at query start and the share/drift projection
   * ([[graft.ops.Sampling.driftOf]] — the SAME definition the batch form
   * runs) is applied to the resolved table, so batch and stream cannot
@@ -36,10 +36,7 @@ object DriftStream {
     val oldCensus = graft.ops.Lineage.cut(
       graft.Tables.documents(ss, sfDir).filter(!isNew)
         .groupBy(col("lang")).agg(count(lit(1)).as("n_old")))
-    val schema = EventPipeline.tableSchema(ss, s"$sfDir/documents.parquet")
-    val dir = EventPipeline.installSourceDir(
-      java.nio.file.Paths.get(s"$sfDir/documents.parquet"))
-    val ingest = ss.readStream.schema(schema).parquet(dir.toString)
+    val ingest = EventPipeline.tableStream(ss, sfDir, "documents")
       .filter(isNew)
       .groupBy(col("lang")).agg(count(lit(1)).as("n_new"))
     val q = ingest.writeStream
@@ -81,11 +78,8 @@ object DriftStream {
     val corpusCensus = graft.ops.Lineage.cut(graft.ops.Similarity.embedCensus(
       graft.Tables.embeddings(ss, sfDir).filter(col("vec_id") % mod =!= 7),
       "n_corp", "sum_corp"))
-    val schema = EventPipeline.tableSchema(ss, s"$sfDir/embeddings.parquet")
-    val dir = EventPipeline.installSourceDir(
-      java.nio.file.Paths.get(s"$sfDir/embeddings.parquet"))
     val ingest = graft.ops.Similarity.embedCensus(
-      ss.readStream.schema(schema).parquet(dir.toString)
+      EventPipeline.tableStream(ss, sfDir, "embeddings")
         .filter(col("vec_id") % mod === 7),
       "n_in", "sum_in")
     val q = ingest.writeStream

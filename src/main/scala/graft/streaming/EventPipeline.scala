@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -49,12 +51,6 @@ object EventPipeline {
         col("total_interactions"))
   }
 
-  /** S1's oracle-testable stand-in: a file streaming source over the events
-    * table (the Kafka path is [[KafkaBridge]]; the file source exercises the
-    * same micro-batch machinery — offsets, watermark, state store —
-    * hermetically). Schema comes from a batch peek; `ts` is restored to the
-    * UTC session TimestampType per the physical layout exactly as the batch
-    * reader does (see [[graft.Tables.events]]). */
   /** Memo: parquet schema per table file. A streamed bench run peeks the
     * SAME footer once per query (~21 times) otherwise; the schema is a
     * pure function of the file and the testdata is immutable for the
@@ -62,19 +58,30 @@ object EventPipeline {
   private val schemaMemo =
     scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
 
-  private[streaming] def tableSchema(
-      s: SparkSession, path: String): org.apache.spark.sql.types.StructType =
-    schemaMemo.getOrElseUpdate(path, s.read.parquet(path).schema)
+  /** A file stream over one single-file table of the scale-factor dir
+    * (`<sfDir>/<table>.parquet`), schema from the memoized footer peek,
+    * source dir from [[installSourceDir]] — the source every bounded
+    * replay reads. */
+  private[graft] def tableStream(s: SparkSession, sfDir: String, table: String): DataFrame = {
+    val path = s"$sfDir/$table.parquet"
+    val schema = schemaMemo.getOrElseUpdate(path, s.read.parquet(path).schema)
+    s.readStream.schema(schema)
+      .parquet(installSourceDir(java.nio.file.Paths.get(path)).toString)
+  }
 
+  /** S1's oracle-testable stand-in: a file streaming source over the events
+    * table (the Kafka path is [[KafkaBridge]]; the file source exercises the
+    * same micro-batch machinery — offsets, watermark, state store —
+    * hermetically). `ts` is restored to the UTC session TimestampType per
+    * the physical layout exactly as the batch reader does (see
+    * [[graft.Tables.events]]). */
   def fileStream(s: SparkSession, sfDir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = tableSchema(s, s"$sfDir/events.parquet")
-    val dir = installSourceDir(java.nio.file.Paths.get(s"$sfDir/events.parquet"))
-    val stream = s.readStream.schema(schema).parquet(dir.toString)
+    val stream = tableStream(s, sfDir, "events")
     // Same per-layout `ts` restoration as the batch reader (Tables.events):
     // legacy nanos-as-long files truncate to micros; timestamp[us] files
     // arrive as TIMESTAMP_NTZ and are relabeled to the UTC session type.
-    schema("ts").dataType match {
+    stream.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         stream.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case _ => graft.Tables.normalizeNtz(stream)
@@ -92,10 +99,11 @@ object EventPipeline {
     * half-written file and a crash can't leave a truncated one behind; a
     * stale truncated copy from an earlier crash is detected by size and
     * replaced the same way. Shared by every single-file streaming source
-    * ([[fileStream]], [[KnnStream]]). Exactly ONE file lands in the dir —
+    * through [[tableStream]] (the events stream and the
+    * [[IngestStream]] table alike). Exactly ONE file lands in the dir —
     * the single-batch delivery contract the zero-delay-watermark streams
     * document. */
-  private[streaming] def installSourceDir(target: java.nio.file.Path): java.nio.file.Path = {
+  private def installSourceDir(target: java.nio.file.Path): java.nio.file.Path = {
     val tag = java.security.MessageDigest.getInstance("MD5")
       .digest(target.toAbsolutePath.toString.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
@@ -278,36 +286,62 @@ object EventPipeline {
       }))
   }
 
+  /** A per-batch transform, run inside `foreachBatch`: (micro-batch,
+    * batch id, sink dir) → the delta the batch upserts. The id and the
+    * sink serve a fold that reads its own sink's pre-batch state. */
+  private[graft] type Batch = (DataFrame, Long, String) => DataFrame
+
+  /** The per-batch transform that upserts each micro-batch as it is. */
+  private val asIs: Batch = (b, _, _) => b
+
+  /** A per-batch transform of the micro-batch alone. */
+  private[graft] def each(f: DataFrame => DataFrame): Batch = (b, _, _) => f(b)
+
   /** Run a streaming frame to completion into a scratch upsert sink and
-    * return the resolved table — the shared tail of every driver-facing
-    * `streamed*` query (scratch dir + checkpoint + AvailableNow +
-    * foreachBatch upsert + resolve), extracted so join-semantics and
-    * state-tuning changes land in ONE place (r7 verdict #6). `build`
-    * receives the reduced-partition [[streamingSession]] and must derive
-    * its source(s) from it. */
-  private def runToSink(s: SparkSession, prefix: String, outputMode: String,
-      resolveKeys: Seq[String], noDataBatches: Boolean = true)(
+    * return the resolved table — the loop every single-sink bounded
+    * replay runs (scratch dir + checkpoint + AvailableNow + foreachBatch
+    * upsert + state release + resolve), so join-semantics and
+    * state-tuning changes land in ONE place. `build` receives the reduced-partition
+    * [[streamingSession]] and must derive its source(s) from it;
+    * `perBatch` receives the same session first, builds any standing
+    * relations once, and returns the transform each micro-batch passes
+    * through on its way to the sink. `releaseTriggers` drops each
+    * trigger's derived working set after its sink write
+    * ([[releaseTriggerState]]) — only for stateless streams. */
+  private[graft] def runToSink(s: SparkSession, prefix: String, outputMode: String,
+      resolveKeys: Seq[String], noDataBatches: Boolean = true,
+      perBatch: SparkSession => Batch = _ => asIs, releaseTriggers: Boolean = false)(
       build: SparkSession => DataFrame): DataFrame = {
+    val (ss, sink) =
+      drainToSink(s, prefix, outputMode, noDataBatches, perBatch, releaseTriggers)(build)
+    UpsertSink.resolve(ss, sink, resolveKeys)
+  }
+
+  /** The drain half of [[runToSink]]: run the stream to completion and
+    * return the child session and the sink dir, for callers that read the
+    * sink additively ([[UpsertSink.readAll]]) instead of resolving it. */
+  private[graft] def drainToSink(s: SparkSession, prefix: String, outputMode: String,
+      noDataBatches: Boolean = true, perBatch: SparkSession => Batch = _ => asIs,
+      releaseTriggers: Boolean = false)(
+      build: SparkSession => DataFrame): (SparkSession, String) = {
     val ss = streamingSession(s, noDataBatches = noDataBatches)
     val scratch = graft.ops.SpillMemo.scratchDir(prefix)
-    val q = build(ss).writeStream
+    val sink = s"$scratch/sink"
+    val transform = perBatch(ss)
+    val stream = build(ss)
+    val standing = if (releaseTriggers) persistentSnapshot(ss) else Set.empty[Int]
+    val q = stream.writeStream
       .outputMode(outputMode)
       .option("checkpointLocation", s"$scratch/ckpt")
       .trigger(Trigger.AvailableNow())
-      .foreachBatch((b: Dataset[Row], id: Long) => UpsertSink.writeBatch(b, id, s"$scratch/sink"))
+      .foreachBatch { (b: Dataset[Row], id: Long) =>
+        UpsertSink.writeBatch(transform(b, id, sink), id, sink)
+        if (releaseTriggers) releaseTriggerState(ss, standing)
+      }
       .start()
     q.awaitTermination()
-    // Phase instrumentation for the streaming fixed-cost budget: with
-    // SPARK_GRAFT_STREAM_DEBUG set, print each micro-batch's duration
-    // breakdown (planning/WAL/state/addBatch) so fixed scaffolding is
-    // attributable without guessing.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach { p =>
-        System.err.println(s"[stream-debug] $prefix batch=${p.batchId} " +
-          s"rows=${p.numInputRows} durations=${p.durationMs}")
-      }
     releaseStreamState(ss)
-    UpsertSink.resolve(ss, s"$scratch/sink", resolveKeys)
+    (ss, sink)
   }
 
   /** STREAMING CALIBRATION PROBE (`cal_s`, r14 verdict #2): a fixed,
@@ -351,18 +385,19 @@ object EventPipeline {
     * (an unloaded provider reloads from its checkpoint on next access;
     * that is the normal executor-loss recovery path). Terminated-query
     * bookkeeping in the child's `StreamingQueryManager` is reset too.
-    * Never throws: release is best-effort hygiene, not semantics. */
+    * Release is best-effort hygiene, not semantics: a non-fatal failure is
+    * swallowed, a fatal one surfaces. */
   private[graft] def releaseStreamState(ss: SparkSession): Unit = {
     try ss.streams.resetTerminated()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
   }
 
   /** Persistent-RDD ids alive right now — taken after a stream's standing
     * relations are cut and before `.start()`, this is the snapshot of the
     * state that must SURVIVE the whole run. */
-  private[graft] def persistentSnapshot(ss: SparkSession): Set[Int] =
+  private def persistentSnapshot(ss: SparkSession): Set[Int] =
     ss.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** Release ONE trigger's derived working set (r17's ×10 operational
@@ -374,14 +409,15 @@ object EventPipeline {
     * persistent RDD NOT in the standing snapshot (and nudging the GC so
     * dead broadcasts follow) bounds the run's footprint to standing
     * state + one trigger. ONLY correct for STATELESS streams — a stream
-    * whose cuts carry across triggers must not call this. Never throws. */
-  private[graft] def releaseTriggerState(ss: SparkSession, keep: Set[Int]): Unit = {
+    * whose cuts carry across triggers must not call this. Non-fatal
+    * failures are swallowed, like [[releaseStreamState]]'s. */
+  private def releaseTriggerState(ss: SparkSession, keep: Set[Int]): Unit = {
     try {
       ss.sparkContext.getPersistentRDDs
         .filter { case (id, _) => !keep(id) }
         .values.foreach(_.unpersist(blocking = false))
       System.gc()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 
   /** Session gap for the streaming session-window query (matches the batch

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.Trigger
   * (the reference recomputes its KPI tables per dashboard rerun; the
   * streamed posture folds each arriving increment the moment it lands).
   *
-  * Shape: the SINK IS THE STATE (the [[GraphInsertStream]] stance — zero
+  * Shape: the SINK IS THE STATE (the [[IngestStream.insertDelta]] stance — zero
   * state-store state). Each micro-batch aggregates ITS OWN rows to
   * partial-aggregate states ([[graft.ops.MatView.state]] — count / integer
   * sums / min / max / HLL registers, a ≤|groups|-row relation per trigger)

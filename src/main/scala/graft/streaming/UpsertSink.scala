@@ -43,7 +43,7 @@ object UpsertSink {
     *
     * `exceptBatch` excludes one delta from the merge — for a foreachBatch
     * body that reads the sink's pre-batch state while COMPUTING its own
-    * delta (the incremental-index shape, [[graft.streaming.GraphInsertStream]]):
+    * delta (the incremental-index shape, [[graft.streaming.IngestStream.insertDelta]]):
     * on checkpoint replay the failed attempt's delta `b<id>` may already
     * exist, and a prior that included it would (a) not be the pre-batch
     * state and (b) make the job read the very directory its write is

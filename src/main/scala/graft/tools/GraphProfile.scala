@@ -67,11 +67,11 @@ object GraphProfile {
     }
     // (d) the streams end-to-end, warm session — machinery = total - (a..c)
     time("s_graph_ann_stream_total") {
-      graft.streaming.GraphAnnStream.streamedGraphAnn(spark, sfDir)
+      graft.SparkEntry.queries("s_graph_ann_stream")(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
     }
     time("s_graph_insert_stream_total") {
-      graft.streaming.GraphInsertStream.streamedGraphInsert(spark, sfDir)
+      graft.SparkEntry.queries("s_graph_insert_stream")(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
     }
     spark.stop()

@@ -47,7 +47,7 @@ class AlignStreamSpec extends SparkSpec {
   }
 
   test("golden: file-source streamed gate equals the batch gate") {
-    val streamed = verdicts(streaming.AlignStream.streamedAlignment(spark, sf))
+    val streamed = verdicts(SparkEntry.queries("s_mm_alignment_stream")(spark, sf))
     val batch = verdicts(ops.MultimodalPipeline.alignment(spark, sf))
     assert(streamed == batch, "streamed alignment diverged from the batch form")
     assert(streamed.exists(_._3) && streamed.exists(!_._3),

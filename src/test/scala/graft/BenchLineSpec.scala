@@ -210,6 +210,30 @@ class BenchLineSpec extends AnyFunSuite {
     assert(q == o, s"queries without oracle: ${q -- o}; oracles without query: ${o -- q}")
   }
 
+  test("the query surface is pinned: 304 names, these 53 streams") {
+    val q = SparkEntry.queries.keySet
+    assert(q.size == 304, s"query count moved: ${q.size}")
+    val streams = Set(
+      "s_audio_dup_stream", "s_ce_rerank_stream", "s_chunk_fused_stream",
+      "s_chunk_search_stream", "s_clip_dup_stream", "s_cluster_sample_stream",
+      "s_components_stream", "s_dead_letter_stream", "s_decontam_stream",
+      "s_dedup_lsh_stream", "s_dedup_stream", "s_dedup_windows_stream", "s_drift_stream",
+      "s_dsir_stream", "s_embed_drift_stream", "s_enriched_stream", "s_full_join_stream",
+      "s_graph_ann_stream", "s_graph_insert_stream", "s_hybrid_stream",
+      "s_index_merge_stream", "s_interval_join_stream", "s_kmv_overlap_stream",
+      "s_knn_stream", "s_left_join_stream", "s_lmql_stream", "s_ltr_stream",
+      "s_maxsim_stream", "s_mm_alignment_stream", "s_mm_phash_stream", "s_mmr_stream",
+      "s_model_gate_stream", "s_mv_kpi_refresh_stream", "s_mv_kpi_type_refresh_stream",
+      "s_mv_refresh_stream", "s_pit_stream", "s_quantizer_stream", "s_right_join_stream",
+      "s_rm3_stream", "s_running_totals_compacted", "s_running_totals_stream",
+      "s_sample_stream", "s_scd2_stream", "s_search_stream", "s_semi_join_stream",
+      "s_session_windows_stream", "s_sketch_stream", "s_split_gate_stream",
+      "s_type_windows_stream", "s_user_windows_stream", "s_value_bands_stream",
+      "s_window_hitters_stream", "s_window_rollup_stream")
+    val s = q.filter(_.startsWith("s_"))
+    assert(s == streams, s"streams added: ${s -- streams}; streams lost: ${streams -- s}")
+  }
+
   test("bench line is valid JSON shape: balanced braces, quoted keys, no newline") {
     val results = Seq(("q_ok", 1.5, None), ("q_err", -1.0, Some("boom \"quoted\"\npath\t")))
     val line = Bench.renderLine(results, sfDir)

@@ -164,7 +164,7 @@ class ChunkSearchSpec extends SparkSpec {
     }
     val fusedBatch = ops.Search.chunkFusedIngestRollup(spark, sf)
       .collect().map(_.toSeq).toSet
-    val streamed = streaming.ChunkDenseStream.streamedFusedRollup(spark, sf)
+    val streamed = SparkEntry.queries("s_chunk_fused_stream")(spark, sf)
       .collect().map(_.toSeq).toSet
     assert(streamed == fusedBatch,
       "streamed fused RAG answers diverged from the batch ingest form")

@@ -15,7 +15,7 @@ class ClusterSampleStreamSpec extends SparkSpec {
 
   test("golden: file-source maintained sample equals the batch form") {
     val streamed = rows(
-      graft.streaming.ClusterSampleStream.streamedClusterSample(spark, sf))
+      SparkEntry.queries("s_cluster_sample_stream")(spark, sf))
     val batch = rows(graft.ops.Diversify.clusterBalanced(spark, sf))
     assert(streamed == batch, "maintained sample diverged from the batch form")
   }

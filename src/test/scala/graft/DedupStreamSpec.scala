@@ -56,7 +56,7 @@ class DedupStreamSpec extends SparkSpec {
 
   test("golden: file-source streamed dedup equals the batch incremental verdicts") {
     val streamed = verdicts(
-      graft.streaming.DedupStream.streamedIncrementalDedup(spark, sf))
+      SparkEntry.queries("s_dedup_lsh_stream")(spark, sf))
     val batch = verdicts(graft.ops.Dedup.incremental(spark, sf))
     assert(streamed == batch, "streamed ingest dedup diverged from the batch form")
     assert(streamed.nonEmpty)

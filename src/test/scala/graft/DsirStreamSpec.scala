@@ -96,7 +96,7 @@ class DsirStreamSpec extends SparkSpec {
   }
 
   test("golden: file-source streamed DSIR equals the batch admission set") {
-    val streamed = rows(graft.streaming.DsirStream.streamedDsir(spark, sf))
+    val streamed = rows(SparkEntry.queries("s_dsir_stream")(spark, sf))
     val batch = rows(graft.ops.Sampling.dsirIngest(spark, sf))
     assert(streamed == batch)
     assert(streamed.nonEmpty)

@@ -115,7 +115,7 @@ class FunnelRecallSpec extends SparkSpec {
     // Stateless stream-static probe: the result must equal the batch twin
     // under any micro-batching (each ingest vector's candidates all come
     // from the static index, so its top-k completes within its own batch).
-    val streamed = graft.streaming.KnnStream.streamedKnn(spark, sf)
+    val streamed = SparkEntry.queries("s_knn_stream")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val batch = Similarity.knnIncremental(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet

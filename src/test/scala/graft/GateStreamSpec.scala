@@ -54,7 +54,7 @@ class GateStreamSpec extends SparkSpec {
 
   test("golden: file-source streamed gate equals the batch census") {
     graft.functions.GraftFunctions.register(spark)
-    val streamed = census(graft.streaming.GateStream.streamedGate(spark, sf))
+    val streamed = census(SparkEntry.queries("s_model_gate_stream")(spark, sf))
     val batch = census(graft.ops.TextAnalysis.gateRollup(
       Tables.documents(spark, sf).select("doc_id", "lang", "text")))
     assert(streamed == batch, "streamed gate census diverged from the batch rollup")

@@ -48,7 +48,7 @@ class GraphAnnStreamSpec extends SparkSpec {
 
   test("golden: file-source streamed graph ANN equals the batch search") {
     val streamed = answers(
-      graft.streaming.GraphAnnStream.streamedGraphAnn(spark, sf))
+      SparkEntry.queries("s_graph_ann_stream")(spark, sf))
     val batch = answers(graft.ops.Similarity.graphBeamIngestTopK(spark, sf))
     assert(streamed == batch, "streamed graph ANN diverged from the batch form")
     assert(streamed.nonEmpty)

@@ -33,7 +33,7 @@ class GraphInsertStreamSpec extends SparkSpec {
       .option("checkpointLocation", s"$scratch/ckpt")
       .foreachBatch { (b: Dataset[Row], id: Long) =>
         streaming.UpsertSink.writeBatch(
-          streaming.GraphInsertStream.insertDelta(
+          streaming.IngestStream.insertDelta(
             spark, b.toDF(), id, sink, edges, corpusIdx, c, allVecs),
           id, sink)
         lastBatch = id
@@ -56,7 +56,7 @@ class GraphInsertStreamSpec extends SparkSpec {
     // sink that already contains its output (the exact replay situation)
     // and overwrite the same delta id — the resolved table must not move.
     streaming.UpsertSink.writeBatch(
-      streaming.GraphInsertStream.insertDelta(
+      streaming.IngestStream.insertDelta(
         spark, secondBatch, lastBatch, sink, edges, corpusIdx, c, allVecs),
       lastBatch, sink)
     val replayed = rows(streaming.UpsertSink.resolve(spark, sink, Seq("src", "rnk")))
@@ -64,7 +64,7 @@ class GraphInsertStreamSpec extends SparkSpec {
   }
 
   test("golden: file-source streamed insert equals the batch insert") {
-    val streamed = rows(streaming.GraphInsertStream.streamedGraphInsert(spark, sf))
+    val streamed = rows(SparkEntry.queries("s_graph_insert_stream")(spark, sf))
     val batch = rows(ops.Similarity.graphInsert(spark, sf))
     assert(streamed == batch, "streamed graph insert diverged from the batch form")
     // both id spaces present: new-vertex lists and re-trimmed corpus lists

@@ -49,7 +49,7 @@ class HybridStreamSpec extends SparkSpec {
   }
 
   test("golden: file-source streamed hybrid equals the batch search") {
-    val streamed = answers(graft.streaming.HybridStream.streamedHybrid(spark, sf))
+    val streamed = answers(SparkEntry.queries("s_hybrid_stream")(spark, sf))
     val batch = answers(graft.ops.Search.hybridIngest(spark, sf))
     assert(streamed == batch)
     assert(streamed.nonEmpty)

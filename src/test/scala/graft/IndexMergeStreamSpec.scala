@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{IndexMergeStream, UpsertSink}
+import graft.streaming.{IngestStream, UpsertSink}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
@@ -16,7 +16,7 @@ class IndexMergeStreamSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
 
   test("golden: file-source streamed index merge equals the full rebuild") {
-    val streamed = postings(IndexMergeStream.streamedIndexMerge(spark, sf))
+    val streamed = postings(SparkEntry.queries("s_index_merge_stream")(spark, sf))
     val full = postings(graft.ops.Search
       .bm25IndexDocs(Tables.documents(spark, sf)).postings)
     assert(streamed == full, "streamed index diverged from the full rebuild")
@@ -38,13 +38,13 @@ class IndexMergeStreamSpec extends SparkSpec {
         .option("checkpointLocation", s"$scratch/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (b: Dataset[Row], id: Long) =>
-          UpsertSink.writeBatch(IndexMergeStream.tfState(b), id, s"$scratch/sink")
+          UpsertSink.writeBatch(IngestStream.tfState(b), id, s"$scratch/sink")
         }
         .start()
       q.awaitTermination()
     }
     run()
-    val baseTf = IndexMergeStream.tfState(docs.filter($"doc_id" % mod =!= 7))
+    val baseTf = IngestStream.tfState(docs.filter($"doc_id" % mod =!= 7))
     def folded(nd: org.apache.spark.sql.DataFrame): Set[(String, Long, Long)] =
       postings(graft.ops.Search.indexFromState(
         baseTf.unionAll(UpsertSink.readAll(spark, s"$scratch/sink")), nd).postings)
@@ -74,7 +74,7 @@ class IndexMergeStreamSpec extends SparkSpec {
       .writeStream.outputMode("append")
       .option("checkpointLocation", s"$sink/ckpt")
       .foreachBatch { (b: Dataset[Row], id: Long) =>
-        UpsertSink.writeBatch(IndexMergeStream.tfState(b), id, s"$sink/sink")
+        UpsertSink.writeBatch(IngestStream.tfState(b), id, s"$sink/sink")
       }
       .start()
     try {
@@ -83,7 +83,7 @@ class IndexMergeStreamSpec extends SparkSpec {
       in.addData(c2: _*)
       q.processAllAvailable()
     } finally q.stop()
-    val baseTf = IndexMergeStream.tfState(docs.filter($"doc_id" % mod =!= 7))
+    val baseTf = IngestStream.tfState(docs.filter($"doc_id" % mod =!= 7))
     val nd = docs.agg(count(lit(1)).as("n_docs"))
     def folded: Set[(String, Long, Long)] = postings(graft.ops.Search
       .indexFromState(
@@ -93,7 +93,7 @@ class IndexMergeStreamSpec extends SparkSpec {
     assert(folded == full, "two-batch fold diverged from the full rebuild")
     // replay batch 0 (same deterministic content): resolved state unchanged
     UpsertSink.writeBatch(
-      IndexMergeStream.tfState(c1.toDF("doc_id", "text")), 0L, s"$sink/sink")
+      IngestStream.tfState(c1.toDF("doc_id", "text")), 0L, s"$sink/sink")
     assert(folded == full, "batch replay changed the merged index")
   }
 }

@@ -156,7 +156,7 @@ class IndexPersistSpec extends SparkSpec {
     val batch = rows(ops.Search.bm25IngestTopK(spark, sf)) // memo mode
     spark.conf.set(ops.IndexStore.indexDirConf, store)
     try {
-      val streamed = rows(streaming.SearchStream.streamedSearch(spark, sf))
+      val streamed = rows(SparkEntry.queries("s_search_stream")(spark, sf))
       assert(streamed == batch,
         "store-served streamed search diverged from the memo-mode batch search")
       assert(streamed.nonEmpty)

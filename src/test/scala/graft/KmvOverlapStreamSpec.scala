@@ -16,7 +16,7 @@ class KmvOverlapStreamSpec extends SparkSpec {
 
   test("golden: file-source maintained sketches equal the batch overlap") {
     val streamed = rows(
-      graft.streaming.KmvOverlapStream.streamedKmvOverlap(spark, sf))
+      SparkEntry.queries("s_kmv_overlap_stream")(spark, sf))
     val batch = rows(graft.ops.Sketches.kmvOverlap(spark, sf))
     assert(streamed == batch, "maintained overlap diverged from the batch form")
   }

@@ -51,7 +51,7 @@ class LmqlStreamSpec extends SparkSpec {
   }
 
   test("golden: file-source streamed LM search equals the batch form") {
-    val streamed = answers(graft.streaming.LmqlStream.streamedLmql(spark, sf))
+    val streamed = answers(SparkEntry.queries("s_lmql_stream")(spark, sf))
     val batch = answers(graft.ops.Search.lmqlIngestTopK(spark, sf))
     assert(streamed == batch)
     assert(streamed.nonEmpty)

@@ -53,7 +53,7 @@ class LtrStreamSpec extends SparkSpec {
   }
 
   test("golden: file-source streamed feature log equals the batch form") {
-    val streamed = feats(graft.streaming.LtrStream.streamedLtr(spark, sf))
+    val streamed = feats(SparkEntry.queries("s_ltr_stream")(spark, sf))
     val batch = feats(graft.ops.Search.ltrIngestFeatures(spark, sf))
     assert(streamed == batch)
     assert(streamed.nonEmpty)

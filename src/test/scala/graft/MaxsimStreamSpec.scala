@@ -87,7 +87,7 @@ class MaxsimStreamSpec extends SparkSpec {
   }
 
   test("golden: file-source streamed MaxSim equals the batch rerank") {
-    val streamed = answers(graft.streaming.MaxsimStream.streamedMaxsim(spark, sf))
+    val streamed = answers(SparkEntry.queries("s_maxsim_stream")(spark, sf))
     val batch = answers(graft.ops.Search.maxsimIngest(spark, sf))
     assert(streamed == batch)
     assert(streamed.nonEmpty)

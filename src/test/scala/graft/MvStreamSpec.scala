@@ -129,7 +129,7 @@ class MvStreamSpec extends SparkSpec {
     val bands = (df: DataFrame) =>
       df.select(col("event_type"), col("n"), col("q_bp"), col("est_c"))
         .as[(String, Long, Long, Long)].collect().toSet
-    val streamed = bands(graft.streaming.BandsStream.streamedBands(spark, sf))
+    val streamed = bands(SparkEntry.queries("s_value_bands_stream")(spark, sf))
     val batch = bands(MatView.valueBands(spark, sf))
     assert(streamed == batch,
       "grid maintained from per-batch deltas diverged from the full recompute")

@@ -77,7 +77,7 @@ class QuantizerSpec extends SparkSpec {
   test("streamed quantizer maintenance equals the batch update") {
     val batch = ops.Similarity.quantizerUpdate(spark, sf).collect()
       .map(_.toSeq).toSet
-    val streamed = streaming.QuantizerStream.streamedQuantizer(spark, sf)
+    val streamed = SparkEntry.queries("s_quantizer_stream")(spark, sf)
       .collect().map(_.toSeq).toSet
     assert(streamed == batch,
       "maintained state diverged from the batch fold — the monoid law broke")
@@ -97,8 +97,8 @@ class QuantizerSpec extends SparkSpec {
     val (b1, b2) = arriving.splitAt(arriving.size / 2)
     val sink = ops.SpillMemo.scratchDir("graft-squant-t-")
     val in = MemoryStream[(Long, Seq[Long])]
-    val q = streaming.QuantizerStream
-      .deltaAgg(in.toDF().toDF("vec_id", "q"), cents)
+    val q = ops.Similarity
+      .quantizerDeltasOf(in.toDF().toDF("vec_id", "q"), cents)
       .writeStream.outputMode("update")
       .option("checkpointLocation", s"$sink/ckpt")
       .foreachBatch { (b: Dataset[Row], id: Long) =>

@@ -89,7 +89,7 @@ class Rm3StreamSpec extends SparkSpec {
   }
 
   test("golden: file-source streamed RM3 equals the batch search") {
-    val streamed = answers(graft.streaming.Rm3Stream.streamedRm3(spark, sf))
+    val streamed = answers(SparkEntry.queries("s_rm3_stream")(spark, sf))
     val batch = answers(graft.ops.Search.rm3IngestSearch(spark, sf))
     assert(streamed == batch)
     assert(streamed.nonEmpty)

@@ -47,7 +47,7 @@ class SampleStreamSpec extends SparkSpec {
   }
 
   test("golden: file-source streamed sample equals the batch sample") {
-    val streamed = sample(graft.streaming.SampleStream.streamedSample(spark, sf))
+    val streamed = sample(SparkEntry.queries("s_sample_stream")(spark, sf))
     val batch = sample(ops.Sampling.bottomkSample(spark, sf))
     assert(streamed == batch, "streamed sample diverged from the batch form")
   }

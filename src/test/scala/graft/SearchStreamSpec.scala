@@ -47,7 +47,7 @@ class SearchStreamSpec extends SparkSpec {
   }
 
   test("golden: file-source streamed search equals the batch search") {
-    val streamed = answers(graft.streaming.SearchStream.streamedSearch(spark, sf))
+    val streamed = answers(SparkEntry.queries("s_search_stream")(spark, sf))
     val batch = answers(graft.ops.Search.bm25IngestTopK(spark, sf))
     assert(streamed == batch)
     assert(streamed.nonEmpty)

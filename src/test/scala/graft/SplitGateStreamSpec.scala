@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.{Dedup, Sampling}
-import graft.streaming.{SplitGateStream, UpsertSink}
+import graft.streaming.UpsertSink
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
@@ -17,7 +17,7 @@ class SplitGateStreamSpec extends SparkSpec {
         r.getString(3))).toSet
 
   test("golden: file-source split gate equals the batch ingest assignment") {
-    val streamed = table(SplitGateStream.streamedSplitGate(spark, sf))
+    val streamed = table(SparkEntry.queries("s_split_gate_stream")(spark, sf))
     val batch = table(Sampling.splitLeakproofIngest(spark, sf))
     assert(streamed == batch, "streamed split gate diverged from the batch form")
     assert(streamed.nonEmpty)
