@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line on stdout (build.sbt routes forked stdout through
   * unprefixed, so the driver can parse the tail line directly).
@@ -42,27 +40,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // 32 = the driver's grading configuration (local[32]). Round 7's claims
-    // were measured at a "4" default here and contradicted the driver's own
-    // numbers by ~1.75× — the default must BE the graded config, and the
-    // artifact records it (cpus/master fields) so a mismatch is visible.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", ops.SpillMemo.sparkLocalDir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The library's session-extensions entry point (native function
-      // registration + the FusePrefixCosines optimizer rule) is active in
-      // the GRADED sessions, not only in tests — a benched query written
-      // in the portable per-slice prefix-cosine form gets the fused
-      // kernel exactly as a user's production session would
-      // (ExtensionsSpec pins the rule's presence on this config).
-      .config("spark.sql.extensions", graft.functions.GraftFunctions.extensionsClass)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietBenignWarnings()
+    val spark = GraftSession.local()
 
     try // warm-up (untimed): exercises scan + shuffle + agg + noop machinery
       ops.WindowAgg.userWindows(spark, sfDir)
@@ -220,7 +198,7 @@ object Bench {
     // round; BASELINE.md points here.
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath),
-      renderFull(results, sfDir, samples.toMap, cpus.toInt, cal.toSeq, calS.toSeq,
+      renderFull(results, sfDir, samples.toMap, GraftSession.cpus, cal.toSeq, calS.toSeq,
         indexBuildSec, indexStoreMode, calErrs, calSErrs))
     catch { case e: Throwable => System.err.println(s"bench_full write failed: $e") }
     // 10ms precision, trailing zeros stripped, keeps the single JSON line.

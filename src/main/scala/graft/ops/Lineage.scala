@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 /** Lineage truncation for iterative and multiply-referenced relations.
   *
@@ -92,7 +93,7 @@ private[graft] object SpillMemo {
         val probe = java.nio.file.Files.createTempFile(p, ".graft-probe-", "")
         java.nio.file.Files.deleteIfExists(probe)
         Some(p)
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     sys.env.get("SPARK_GRAFT_SCRATCH").flatMap(d => writable(java.nio.file.Paths.get(d)))
       .orElse {
         val shm = java.nio.file.Paths.get("/dev/shm")
@@ -108,7 +109,7 @@ private[graft] object SpillMemo {
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
           .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () } // best effort — exit path
+      } catch { case NonFatal(_) => () } // best effort — exit path
     }
   }))
 

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The TWENTIETH streaming execution: the INGEST DRIFT MONITOR — the
   * batch [[graft.ops.Sampling.ingestDrift]] census maintained AS THE
@@ -12,7 +11,7 @@ import org.apache.spark.sql.streaming.Trigger
   * per-`lang` running count as an unwindowed update-mode aggregation
   * (state = one row per language — cardinality-bounded, nothing to evict,
   * the model-gate census shape), upserted by lang; the standing corpus
-  * census is computed once at query start and the share/drift projection
+  * census is computed once and the share/drift projection
   * ([[graft.ops.Sampling.driftOf]] — the SAME definition the batch form
   * runs) is applied to the resolved table, so batch and stream cannot
   * drift about drift.
@@ -30,26 +29,15 @@ object DriftStream {
     * (`doc_id % newMod == newRem` plays the arriving partition) and
     * return the per-lang share/drift table. */
   def streamedDrift(s: SparkSession, sfDir: String): DataFrame = {
-    val ss = EventPipeline.streamingSession(s)
-    val scratch = graft.ops.SpillMemo.scratchDir("graft-sdrift-")
     val isNew = col("doc_id") % graft.ops.Dedup.newMod === graft.ops.Dedup.newRem
+    val newCounts = EventPipeline.runToSink(s, "graft-sdrift-", "update", Seq("lang")) { ss =>
+      EventPipeline.tableStream(ss, sfDir, "documents")
+        .filter(isNew)
+        .groupBy(col("lang")).agg(count(lit(1)).as("n_new"))
+    }.select(col("lang"), col("n_new"))
     val oldCensus = graft.ops.Lineage.cut(
-      graft.Tables.documents(ss, sfDir).filter(!isNew)
+      graft.Tables.documents(newCounts.sparkSession, sfDir).filter(!isNew)
         .groupBy(col("lang")).agg(count(lit(1)).as("n_old")))
-    val ingest = EventPipeline.tableStream(ss, sfDir, "documents")
-      .filter(isNew)
-      .groupBy(col("lang")).agg(count(lit(1)).as("n_new"))
-    val q = ingest.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch((b: Dataset[Row], id: Long) =>
-        UpsertSink.writeBatch(b, id, s"$scratch/sink"))
-      .start()
-    q.awaitTermination()
-    EventPipeline.releaseStreamState(ss)
-    val newCounts = UpsertSink.resolve(ss, s"$scratch/sink", Seq("lang"))
-      .select(col("lang"), col("n_new"))
     graft.ops.Sampling.driftOf(
       oldCensus.join(newCounts, Seq("lang"), "full_outer")
         .select(col("lang"),
@@ -65,34 +53,23 @@ object DriftStream {
     * (count, sum) census as an unwindowed update-mode aggregation —
     * state = d rows (64 here), cardinality-bounded by the embedding
     * width however many vectors arrive, nothing to evict. The standing
-    * corpus census derives once at query start; the cross-multiplied
+    * corpus census derives once; the cross-multiplied
     * shift projection applies to the resolved table, so the result
     * equals the batch drift under ANY batching of the source
     * (`DriftStreamSpec` pins two-batch delivery). An encoder swap or
     * normalization bug trips THIS alarm at ingest — before the skewed
     * vectors reach the index the serving family searches. */
   def streamedEmbedDrift(s: SparkSession, sfDir: String): DataFrame = {
-    val ss = EventPipeline.streamingSession(s)
-    val scratch = graft.ops.SpillMemo.scratchDir("graft-sedrift-")
     val mod = graft.ops.Similarity.knnBatchMod
+    val inCounts = EventPipeline.runToSink(s, "graft-sedrift-", "update", Seq("dim")) { ss =>
+      graft.ops.Similarity.embedCensus(
+        EventPipeline.tableStream(ss, sfDir, "embeddings")
+          .filter(col("vec_id") % mod === 7),
+        "n_in", "sum_in")
+    }.select(col("dim"), col("n_in"), col("sum_in"))
     val corpusCensus = graft.ops.Lineage.cut(graft.ops.Similarity.embedCensus(
-      graft.Tables.embeddings(ss, sfDir).filter(col("vec_id") % mod =!= 7),
+      graft.Tables.embeddings(inCounts.sparkSession, sfDir).filter(col("vec_id") % mod =!= 7),
       "n_corp", "sum_corp"))
-    val ingest = graft.ops.Similarity.embedCensus(
-      EventPipeline.tableStream(ss, sfDir, "embeddings")
-        .filter(col("vec_id") % mod === 7),
-      "n_in", "sum_in")
-    val q = ingest.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch((b: Dataset[Row], id: Long) =>
-        UpsertSink.writeBatch(b, id, s"$scratch/sink"))
-      .start()
-    q.awaitTermination()
-    EventPipeline.releaseStreamState(ss)
-    val inCounts = UpsertSink.resolve(ss, s"$scratch/sink", Seq("dim"))
-      .select(col("dim"), col("n_in"), col("sum_in"))
     graft.ops.Similarity.embedDriftOf(
       corpusCensus.join(inCounts, Seq("dim"), "full_outer")
         .select(col("dim"),

@@ -208,8 +208,9 @@ object EventPipeline {
     * fix, 8 strictly wins again (warm `s_full_join_stream` 3.26 s at 8 vs
     * 5.18 at 16 vs 3.60 at 4; `s_dedup_windows_stream` 2.67 / 3.08 /
     * 3.15) — the r8 sweet spot stands, and 4 shows the parallelism floor.
-    * `spark.graft.streamShufflePartitions` (or Profile's
-    * SPARK_GRAFT_STREAM_PARTS) overrides without a code edit. */
+    * `spark.graft.streamShufflePartitions` (on a Profile run,
+    * `conf:spark.graft.streamShufflePartitions=n`) overrides without a
+    * code edit. */
   private[graft] val defaultStreamPartitions = 8
 
   /** Conf key: state-store backend for the bounded-replay streaming queries

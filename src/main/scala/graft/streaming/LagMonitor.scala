@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{
   QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import scala.util.control.NonFatal
 
 /** Progress/lag monitor (SURVEY §2.2 C11) — the reference's largest single
   * operator (`/root/reference/consumer/consumer.py:185-286`): a driver loop
@@ -43,7 +44,7 @@ object LagMonitor {
       case _           => Map.empty
     }
     try flatten(JsonMethods.parse(json), "")
-    catch { case _: Throwable => Map.empty }
+    catch { case NonFatal(_) => Map.empty }
   }
 
   /** Per-partition lag between two offset documents

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.ops.MatView
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The THIRTY-FOURTH streaming execution: MATERIALIZED-VIEW MAINTENANCE AS
   * A STREAM — the batch [[graft.ops.MatView.mvRefresh]] fold running at
@@ -36,23 +36,14 @@ object MvStream {
   /** Run the MV-maintenance stream to completion over the events table's
     * increment slice and return the refreshed differential view. */
   def streamedMvRefresh(s: SparkSession, sfDir: String): DataFrame = {
-    val ss = EventPipeline.streamingSession(s)
-    val scratch = graft.ops.SpillMemo.scratchDir("graft-smv-")
-    val q = EventPipeline.fileStream(ss, sfDir)
-      .filter(MatView.isDelta)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch((b: Dataset[Row], id: Long) =>
-        UpsertSink.writeBatch(MatView.state(b), id, s"$scratch/sink"))
-      .start()
-    q.awaitTermination()
-    EventPipeline.releaseStreamState(ss)
+    val (ss, sink) = EventPipeline.drainToSink(s, "graft-smv-", "append",
+        perBatch = _ => EventPipeline.each(MatView.state)) { ss =>
+      EventPipeline.fileStream(ss, sfDir).filter(MatView.isDelta)
+    }
     MatView.differential(ss, sfDir,
       MatView.mergeStates(
         MatView.baseView(ss, sfDir),
-        UpsertSink.readAll(ss, s"$scratch/sink")))
+        UpsertSink.readAll(ss, sink)))
   }
 
   /** The KPI-grain twin (r14 verdict #6): [[streamedMvRefresh]]'s
@@ -68,26 +59,12 @@ object MvStream {
     * the oracle is the full-recompute window SQL verbatim. */
   def streamedKpiRefresh(s: SparkSession, sfDir: String,
       key: String = "user_id"): DataFrame = {
-    val ss = EventPipeline.streamingSession(s)
-    val scratch = graft.ops.SpillMemo.scratchDir(s"graft-smvk-$key-")
-    val q = EventPipeline.fileStream(ss, sfDir)
-      .filter(MatView.isDelta)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch((b: Dataset[Row], id: Long) =>
-        UpsertSink.writeBatch(MatView.kpiState(b, key), id, s"$scratch/sink"))
-      .start()
-    q.awaitTermination()
-    EventPipeline.releaseStreamState(ss)
-    MatView.mergeKpi(
-      MatView.kpiBaseView(ss, sfDir, key),
-      UpsertSink.readAll(ss, s"$scratch/sink"), key)
-      .select(org.apache.spark.sql.functions.col("window_start"),
-        org.apache.spark.sql.functions.col("window_end"),
-        org.apache.spark.sql.functions.col(key),
-        org.apache.spark.sql.functions.col("total_interactions"))
+    val (ss, sink) = EventPipeline.drainToSink(s, s"graft-smvk-$key-", "append",
+        perBatch = _ => EventPipeline.each(MatView.kpiState(_, key))) { ss =>
+      EventPipeline.fileStream(ss, sfDir).filter(MatView.isDelta)
+    }
+    MatView.mergeKpi(MatView.kpiBaseView(ss, sfDir, key), UpsertSink.readAll(ss, sink), key)
+      .select(col("window_start"), col("window_end"), col(key), col("total_interactions"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

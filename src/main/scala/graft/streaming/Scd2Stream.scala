@@ -176,37 +176,26 @@ object Scd2Stream {
     * conf). Facts carry the non-null `event_id` upsert key, so checkpoint
     * replay is idempotent — the one filter its oracle adds over
     * `x_pit_state`'s. */
-  def streamedPit(s: SparkSession, sfDir: String): DataFrame = {
-    val ss = EventPipeline.streamingSession(s)
-    val scratch = graft.ops.SpillMemo.scratchDir("graft-spit-")
-    val dim = graft.ops.Lineage.cut(
-      graft.ops.Temporal.scd2Events(
-          graft.Tables.events(ss, sfDir).filter(col("event_type") =!= "purchase"))
-        .select(col("user_id").as("d_user"), col("run_id"),
-          col("event_type").as("state_type"), col("valid_from_us"), col("valid_to_us")))
-    val facts = EventPipeline.fileStream(ss, sfDir)
-      .filter(col("event_type") === "purchase" && col("user_id").isNotNull &&
-        col("ts").isNotNull && col("event_id").isNotNull)
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
-    val joined = facts.join(graft.ops.Hints.broadcastSmall(dim),
-        col("user_id") === col("d_user") &&
-          col("valid_from_us") <= col("ts_us") &&
-          (col("valid_to_us").isNull || col("ts_us") < col("valid_to_us")),
-        "left")
-      .select(col("event_id"), col("user_id"), col("ts_us"), col("state_type"),
-        col("run_id").as("state_run"), col("valid_from_us").as("state_since_us"))
-    val q = joined.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch((b: Dataset[Row], id: Long) => UpsertSink.writeBatch(b, id, s"$scratch/sink"))
-      .start()
-    q.awaitTermination()
-    EventPipeline.releaseStreamState(ss)
-    UpsertSink.resolve(ss, s"$scratch/sink", Seq("event_id"))
-      .select(col("event_id"), col("user_id"), col("ts_us"),
-        col("state_type"), col("state_run"), col("state_since_us"))
-  }
+  def streamedPit(s: SparkSession, sfDir: String): DataFrame =
+    EventPipeline.runToSink(s, "graft-spit-", "append", Seq("event_id")) { ss =>
+      val dim = graft.ops.Lineage.cut(
+        graft.ops.Temporal.scd2Events(
+            graft.Tables.events(ss, sfDir).filter(col("event_type") =!= "purchase"))
+          .select(col("user_id").as("d_user"), col("run_id"),
+            col("event_type").as("state_type"), col("valid_from_us"), col("valid_to_us")))
+      val facts = EventPipeline.fileStream(ss, sfDir)
+        .filter(col("event_type") === "purchase" && col("user_id").isNotNull &&
+          col("ts").isNotNull && col("event_id").isNotNull)
+        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
+      facts.join(graft.ops.Hints.broadcastSmall(dim),
+          col("user_id") === col("d_user") &&
+            col("valid_from_us") <= col("ts_us") &&
+            (col("valid_to_us").isNull || col("ts_us") < col("valid_to_us")),
+          "left")
+        .select(col("event_id"), col("user_id"), col("ts_us"), col("state_type"),
+          col("run_id").as("state_run"), col("valid_from_us").as("state_since_us"))
+    }.select(col("event_id"), col("user_id"), col("ts_us"),
+      col("state_type"), col("state_run"), col("state_since_us"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s_scd2_stream" -> ((s, d) => streamedScd2(s, d)),

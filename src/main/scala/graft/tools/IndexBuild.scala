@@ -321,28 +321,13 @@ object IndexBuild {
     // `conf:key=value` args: session confs for the build — e.g.
     // `conf:spark.graft.chunkRouterCells=1100` grows the router with the
     // corpus (the k ≈ √n rule) for this build without an engine edit.
-    val confs = args.collect { case a if a.startsWith("conf:") =>
-      val kv = a.stripPrefix("conf:")
-      val i = kv.indexOf('=')
-      require(i > 0, s"conf: arg must be conf:key=value, got conf:$kv")
-      kv.take(i) -> kv.drop(i + 1)
-    }
+    val confs = graft.GraftSession.confArgs(args.toSeq)
     val rest = args.filterNot(a => a == "only=router" || a.startsWith("conf:"))
     require(rest.length == 2,
       "usage: runMain graft.tools.IndexBuild <sfDir> <storeDir> " +
         "[only=router] [conf:key=value ...]")
     val sfDir = rest(0); val storeDir = rest(1)
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", graft.ops.SpillMemo.sparkLocalDir)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", graft.functions.GraftFunctions.extensionsClass)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietBenignWarnings()
+    val spark = graft.GraftSession.local()
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       if (routerOnly) {

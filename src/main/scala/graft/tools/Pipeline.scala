@@ -55,15 +55,7 @@ object Pipeline {
     val rate = args.lift(1).map(_.toInt).getOrElse(1000)
     val seconds = args.lift(2).map(_.toInt).getOrElse(15)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", graft.ops.SpillMemo.sparkLocalDir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     Shutdown.installHook(spark)                               // C12
     spark.streams.addListener(new LagMonitor.Listener())      // C11

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc plan/latency profiler: runs the named queries twice each (cold +
   * warm) against SPARK_GRAFT_SF_DIR and prints per-run seconds, to separate
@@ -10,21 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default = the driver's graded local[32] (see Bench.main's note).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", graft.ops.SpillMemo.sparkLocalDir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietBenignWarnings()
-    // Stream-width experiments without a code edit: SPARK_GRAFT_STREAM_PARTS=n
-    // sets the child-session state-partition conf the streamed queries honor.
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").foreach(n =>
-      spark.conf.set("spark.graft.streamShufflePartitions", n))
+    val spark = graft.GraftSession.local()
     // `store=<dir>` arg: point the session at a persisted IndexStore (the
     // bench's serving posture) so serving-family numbers attribute the
     // probe, not an in-session index rebuild. Build one with
@@ -35,12 +20,7 @@ object Profile {
     // profiling session drives the engine's conf tunables (router k/p,
     // recall panel stride, broadcast posture) without an sbt-level
     // javaOptions edit.
-    args.collect { case a if a.startsWith("conf:") => a.stripPrefix("conf:") }
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"conf: arg must be conf:key=value, got conf:$kv")
-        spark.conf.set(kv.take(i), kv.drop(i + 1))
-      }
+    graft.GraftSession.confArgs(args.toSeq).foreach { case (k, v) => spark.conf.set(k, v) }
     val explain = args.contains("-e")
     // `mean=<col>` arg: besides timing, print each query's row count and
     // the mean of <col> when the result carries it — the readout a recall

@@ -145,16 +145,7 @@ object QuantizerClose {
   def main(args: Array[String]): Unit = {
     require(args.length == 2,
       "usage: runMain graft.tools.QuantizerClose <sfDir> <storeDir>")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", graft.ops.SpillMemo.sparkLocalDir)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietBenignWarnings()
+    val spark = graft.GraftSession.local()
     try {
       val e = close(spark, args(0), args(1))
       println(s"[quantizer-close] quantizer_state at epoch $e in ${args(1)}")

@@ -150,17 +150,7 @@ object ScaleSweep {
         "[stores=<dir>] <query...>")
     val base = pos(0); val xDir = pos(1); val n = pos(2).toInt
     val names = pos.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", graft.ops.SpillMemo.sparkLocalDir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", graft.functions.GraftFunctions.extensionsClass)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietBenignWarnings()
+    val spark = graft.GraftSession.local()
     try {
       if (!java.nio.file.Files.exists(markerPath(xDir))) {
         val (_, tGen) = timed(generate(spark, base, xDir, n))

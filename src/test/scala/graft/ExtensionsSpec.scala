@@ -1,11 +1,11 @@
 package graft
 
-import graft.functions.{CosinePrefixSims, GraftExtensions, GraftFunctions}
+import graft.functions.{CosinePrefixSims, GraftExtensions}
 import graft.plans.FusePrefixCosines
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The graded sessions (Verify / Bench) build with
+/** Every main (Verify, Bench, the tools) builds through `GraftSession` with
   * `spark.sql.extensions=GraftFunctions.extensionsClass` — the same entry
   * point a production user sets — so the native function registry and the
   * `FusePrefixCosines` optimizer rule are load-bearing in graded runs, not
@@ -25,12 +25,27 @@ class ExtensionsSpec extends AnyFunSuite {
   test("the conf string names a loadable (SparkSessionExtensions => Unit) class") {
     // Mirror of SparkSession.Builder.getOrCreate's applyExtensions:
     // classForName(name).getConstructor().newInstance() then apply.
-    val inst = Class.forName(GraftFunctions.extensionsClass)
+    // The name comes from the mains' session factory, so a factory that
+    // drops or misspells the extension fails here.
+    val name = GraftSession.settings(4).toMap.getOrElse("spark.sql.extensions",
+      fail("GraftSession.settings must carry spark.sql.extensions"))
+    val inst = Class.forName(name)
       .getConstructor().newInstance()
     val fn = inst.asInstanceOf[SparkSessionExtensions => Unit]
     // Applying to a fresh extensions container must not throw — the same
     // call the builder makes at session construction.
     fn(new SparkSessionExtensions)
+  }
+
+  test("GraftSession.settings(n) is the graded local posture at n cores") {
+    val n = 7
+    val conf = GraftSession.settings(n).toMap
+    assert(
+      conf.get("spark.master").contains(s"local[$n]") &&
+        conf.get("spark.sql.shuffle.partitions").contains(n.toString) &&
+        conf.get("spark.sql.session.timeZone").contains("UTC") &&
+        conf.get("spark.ui.enabled").contains("false"),
+      s"settings($n) = $conf")
   }
 
   /** A fresh session on the shared context with GraftExtensions applied
