@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,13 +20,30 @@ object Parse {
   /** Schema of the `events.props` JSON payload. */
   val propsSchema: StructType = StructType(Seq(StructField("k", LongType, nullable = true)))
 
+  /** The fields of `json` parsed with `schema`, one output column per
+    * field, for a `select` that filters on them afterwards. Malformed JSON
+    * degrades to nulls (PERMISSIVE `from_json`).
+    *
+    * The parse sits behind a `Generate` (`inline(array(from_json(...)))`)
+    * so that it runs ONCE per row. A plain `from_json(...).as("data")`
+    * followed by `data.*` and a null filter on the fields does not:
+    * Catalyst pushes the filter below the flatten and substitutes the
+    * alias into it, so each `isnotnull(data.f)` gets its own (pruned)
+    * `from_json`, and the projection keeps one more — one Jackson parse
+    * per filtered field plus one. A filter cannot be pushed below a
+    * generator's output, so here it reads the generated columns. A NULL
+    * or malformed input yields one row of nulls, as `data.*` would. */
+  private[graft] def jsonFields(json: Column, schema: StructType): Column =
+    inline(array(from_json(json, schema)))
+
   /** C2: parse the `props` JSON column with a declared schema; malformed rows
     * degrade to nulls (PERMISSIVE), mirroring `from_json` at
-    * `consumer/consumer.py:109`. */
+    * `consumer/consumer.py:109`. The parse runs once per row
+    * ([[jsonFields]]). */
   def parseProps(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
-      .select(col("event_id"), from_json(col("props"), propsSchema).as("data"))
-      .select(col("event_id"), col("data.k").as("k_val"))
+      .select(col("event_id"), jsonFields(col("props"), propsSchema))
+      .select(col("event_id"), col("k").as("k_val"))
       .filter(col("k_val").isNotNull)
 
   /** C1+C2+C3+C4 round-trip: serialize a projection to JSON (the wire format,
@@ -41,7 +58,9 @@ object Parse {
     * alias into each of the 3 null checks — 4 Jackson parses per row instead
     * of 1, a hard 4× on the dominant stage at 100 TB. The flatten itself is
     * safe: CollapseProject refuses to inline the expensive parse
-    * (SPARK-36718), so `data.*` reads struct fields of a single parse. */
+    * (SPARK-36718), so `data.*` reads struct fields of a single parse.
+    * Where the filter must follow the parse (wire input, `props`),
+    * [[jsonFields]] keeps it to one parse instead. */
   def roundtripJson(s: SparkSession, d: String): DataFrame = {
     val wireSchema = StructType(Seq(
       StructField("event_id", LongType),

@@ -141,8 +141,25 @@ object EventPipeline {
     dir
   }
 
+  private val noDataBatchesConf = "spark.sql.streaming.noDataMicroBatches.enabled"
+
   /** One streaming query: windowed counts → upsert deltas (S3) with a
-    * per-query checkpoint (S6, `consumer/consumer.py:143-144`). */
+    * per-query checkpoint (S6, `consumer/consumer.py:143-144`).
+    *
+    * Update- and complete-mode queries run without no-data micro-batches.
+    * Those batches exist to emit or evict once the watermark moves with no
+    * new rows. Update-mode output never waits on the watermark, so for it
+    * a no-data batch only evicts closed windows, at the price of a whole
+    * trigger (planning, state load, an empty sink delta) — the closing
+    * trigger of every `AvailableNow` catch-up. Closed windows are evicted
+    * by the next data batch instead; the sink contents are the same.
+    * Append mode keeps no-data batches: it emits a window only once the
+    * watermark passes its end.
+    *
+    * Spark reads the setting from the session clone `start()` makes, so it
+    * is set on the caller's session for the duration of `start()` only and
+    * the caller's value (or its absence) is restored. Another thread
+    * starting a query on the same session in that instant would see it. */
   def start(
       events: DataFrame,
       key: String,
@@ -150,13 +167,21 @@ object EventPipeline {
       checkpointDir: String,
       outputMode: String = "update",
       watermark: String = "10 minutes",
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    windowCounts(events, key, Some(watermark)).writeStream
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val writer = windowCounts(events, key, Some(watermark)).writeStream
       .outputMode(outputMode)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch((b: Dataset[Row], id: Long) => UpsertSink.writeBatch(b, id, sinkDir))
-      .start()
+    if (outputMode.equalsIgnoreCase("append")) writer.start()
+    else {
+      val conf = events.sparkSession.conf
+      val callers = conf.getAll.get(noDataBatchesConf) // None when unset
+      conf.set(noDataBatchesConf, "false")
+      try writer.start()
+      finally callers.fold(conf.unset(noDataBatchesConf))(conf.set(noDataBatchesConf, _))
+    }
+  }
 
   /** C10: multi-query fan-out — user and type KPI queries from one source
     * lineage, each with its own sink + checkpoint, like the reference's two
@@ -280,7 +305,7 @@ object EventPipeline {
         // Keyed into the memo (set once at child creation, never
         // mutated) so concurrent stream starts can't race the conf.
         if (!noDataBatches)
-          ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+          ss.conf.set(noDataBatchesConf, "false")
         resolved.foreach(p =>
           ss.conf.set("spark.sql.streaming.stateStore.providerClass", p))
         ss

@@ -43,12 +43,16 @@ object KafkaBridge {
 
   /** C1–C4 on the wire format (`consumer/consumer.py:108-111`): binary
     * `value` → string → `from_json` (PERMISSIVE — malformed rows degrade to
-    * nulls) → `data.*` flatten → null-rejection filter. Batch- and
-    * stream-agnostic. */
+    * nulls) → flatten → null-rejection filter. Batch- and stream-agnostic.
+    *
+    * The parse and flatten are [[graft.ops.Parse.jsonFields]], so each wire
+    * row is parsed once. Written as `from_json(...).as("data")` +
+    * `data.*`, the three-field null filter would be pushed below the
+    * flatten and parse each row four times (once per `isnotnull`, once in
+    * the projection). */
   def parseWire(wire: DataFrame): DataFrame =
     wire.selectExpr("CAST(value AS STRING) AS json_str")
-      .select(from_json(col("json_str"), eventSchema).as("data"))
-      .select(col("data.*"))
+      .select(graft.ops.Parse.jsonFields(col("json_str"), eventSchema))
       .filter(col("user_id").isNotNull && col("item_id").isNotNull &&
         col("timestamp").isNotNull)
 

@@ -37,6 +37,35 @@ class OpsSpec extends SparkSpec {
       Set((1L, Some(42L)), (2L, None), (3L, None)))
   }
 
+  test("parseProps and parseWire parse each row once: one from_json in the optimized plan") {
+    def parses(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case node =>
+        node.expressions.map(_.collect {
+          case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
+        }.size).sum
+      }.sum
+    val props = Parse.parseProps(spark, sf)
+    assert(parses(props) == 1)
+    val twoParse = Tables.events(spark, sf)
+      .select($"event_id", from_json($"props", Parse.propsSchema).as("data"))
+      .select($"event_id", $"data.k".as("k_val"))
+      .filter($"k_val".isNotNull)
+    assert(props.collect().toSet == twoParse.collect().toSet)
+    // malformed, mistyped and NULL json each give one row of nulls
+    val odd = Seq[(Long, String)]((1L, """{"k": 42}"""), (2L, "not json"),
+      (3L, """{"k": "x"}"""), (4L, null)).toDF("event_id", "props")
+    assert(odd.select($"event_id", Parse.jsonFields($"props", Parse.propsSchema))
+      .as[(Long, Option[Long])].collect().toSet ==
+      Set((1L, Some(42L)), (2L, None), (3L, None), (4L, None)))
+    // a text file, like the consumer's backlog: a local Seq would be folded
+    val dir = java.nio.file.Files.createTempDirectory("graft-wire-").resolve("w").toString
+    Seq("""{"user_id":"u1","item_id":"i1","timestamp":"2026-01-01T00:00:00Z"}""")
+      .toDF("value").write.text(dir)
+    val parsed = graft.streaming.KafkaBridge.parseWire(spark.read.text(dir))
+    assert(parses(parsed) == 1)
+    assert(parsed.count() == 1)
+  }
+
   // ------------------------------------------------------------- Analytics
 
   test("kpiAvg equals the manually computed mean at 2dp") {

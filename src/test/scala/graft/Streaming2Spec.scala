@@ -50,9 +50,21 @@ class Streaming2Spec extends SparkSpec {
     val sink = s"$scratch/sink"
     val ckpt = s"$scratch/ckpt"
     val keys = Seq("window_start", "window_end", "user_id")
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    def callerConf = spark.conf.getAll.get(noData)
+    def committed(ckptDir: String): Set[Long] =
+      Option(new java.io.File(s"$ckptDir/commits").list()).getOrElse(Array.empty[String])
+        .filter(_.forall(_.isDigit)).map(_.toLong).toSet
+    def emptyBatches(q: org.apache.spark.sql.streaming.StreamingQuery, ckptDir: String) =
+      committed(ckptDir) -- q.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
 
+    val before = callerConf
     val q1 = EventPipeline.start(EventPipeline.fileStream(spark, sf), "user_id", sink, ckpt)
+    assert(callerConf == before, "start must restore the caller's no-data setting")
     q1.awaitTermination()
+    // update mode: no closing no-data trigger, every committed batch read rows
+    assert(committed(ckpt).nonEmpty)
+    assert(emptyBatches(q1, ckpt).isEmpty, s"no-data batches committed: ${emptyBatches(q1, ckpt)}")
     val first = UpsertSink.resolve(spark, sink, keys).collect().toSet
     assert(first.nonEmpty)
     val deltasAfterFirst = new java.io.File(sink).list().toSet
@@ -68,6 +80,14 @@ class Streaming2Spec extends SparkSpec {
     newDeltas.foreach { d =>
       assert(spark.read.parquet(s"$sink/$d").isEmpty, s"unexpected rows in replayed delta $d")
     }
+
+    // append mode emits on the watermark, so it keeps its closing no-data batch
+    val appendCkpt = s"$scratch/append-ckpt"
+    val q3 = EventPipeline.start(EventPipeline.fileStream(spark, sf), "user_id",
+      s"$scratch/append-sink", appendCkpt, outputMode = "append")
+    q3.awaitTermination()
+    assert(emptyBatches(q3, appendCkpt).nonEmpty, "append mode must run its no-data batch")
+    assert(callerConf == before)
   }
 
   test("watermark survives restart: late rows stay dropped under the RECOVERED watermark") {
