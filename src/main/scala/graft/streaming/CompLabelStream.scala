@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** STREAMED DEDUP-COMPONENT MAINTENANCE — the incremental twin of
   * `x_dedup_components` (r15 verdict #8: the labeling was the one
@@ -42,22 +41,15 @@ object CompLabelStream {
       .select(col("doc_id"), col("text"))
     val labelSink = s"$scratch/labels"
     val bandSink = s"$scratch/bands"
-    val q = ingest.writeStream
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        val (labels, bands) =
-          Dedup.labelDelta(b.toDF(), id, bandSink, labelSink,
-            corpusBands, standingLabels)
-        // labels FIRST: a crash between the two writes replays the batch,
-        // and the label delta is recomputed from band state excluding the
-        // batch's own contribution either way
-        UpsertSink.writeBatch(labels, id, labelSink)
-        UpsertSink.writeBatch(bands, id, bandSink)
-      }
-      .start()
-    q.awaitTermination()
-    EventPipeline.releaseStreamState(ss)
+    EventPipeline.drain(ingest, "append", s"$scratch/ckpt") { (b, id) =>
+      val (labels, bands) =
+        Dedup.labelDelta(b, id, bandSink, labelSink, corpusBands, standingLabels)
+      // labels FIRST: a crash between the two writes replays the batch,
+      // and the label delta is recomputed from band state excluding the
+      // batch's own contribution either way
+      UpsertSink.writeBatch(labels, id, labelSink)
+      UpsertSink.writeBatch(bands, id, bandSink)
+    }
     resolveLabels(ss, sfDir, labelSink, standingLabels)
   }
 

@@ -5,6 +5,8 @@ import java.nio.file.Files
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.{InnerLike, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, FlatMapGroupsWithState, Join, TransformWithState}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -142,24 +144,81 @@ object EventPipeline {
   }
 
   private val noDataBatchesConf = "spark.sql.streaming.noDataMicroBatches.enabled"
+  private val providerConf = "spark.sql.streaming.stateStore.providerClass"
+
+  /** How a streaming query runs, read off its analyzed plan: whether it
+    * runs no-data micro-batches, and the state-store provider it needs
+    * (`None`: the session's own). The rule is [[startQuery]]'s. */
+  private[graft] def runSettings(frame: DataFrame, outputMode: String): (Boolean, Option[String]) = {
+    val plan = frame.queryExecution.analyzed
+    val append = outputMode.equalsIgnoreCase("append")
+    val emitsWithoutData = plan.exists(p => p.isStreaming && (p match {
+      case _: Aggregate => append
+      case j: Join => j.left.isStreaming && j.right.isStreaming &&
+        !(j.joinType.isInstanceOf[InnerLike] || j.joinType == LeftSemi)
+      case _: FlatMapGroupsWithState | _: TransformWithState => true
+      case _ => false
+    }))
+    val provider =
+      if (plan.exists(_.isInstanceOf[TransformWithState])) Some(rocksProvider) else None
+    (emitsWithoutData, provider)
+  }
+
+  /** Serializes [[startQuery]]'s conf window: the memoized child session
+    * is shared, so two starts must not interleave their set/restore. */
+  private val startLock = new Object
+
+  /** THE streaming-query starter: every query in this package starts here
+    * (`KafkaBridge.sinkWriter` only builds a writer for a Kafka sink).
+    * `body` runs once per micro-batch with its batch id.
+    *
+    * Two engine settings follow from the declared query, so they are read
+    * off `frame`'s analyzed plan ([[runSettings]]), never passed in:
+    *
+    *  - **No-data micro-batches** exist so a watermark advance with no new
+    *    rows can emit or evict. They stay on only if some streaming node
+    *    can EMIT during one: an aggregation in append mode (a window is
+    *    emitted once the watermark passes its end), a stream-stream join
+    *    other than inner or semi (outer null rows, anti rows wait on the
+    *    watermark), and any `flatMapGroupsWithState`/`transformWithState`
+    *    (their timers fire in no-data batches). Everywhere else — update
+    *    and complete mode, inner/semi joins and streaming dedup (they emit
+    *    on arrival) — a no-data batch only evicts state, at the price of a
+    *    whole trigger (planning, state load, an empty sink delta): the
+    *    closing trigger of every `AvailableNow` catch-up. Closed state is
+    *    evicted by the next data batch instead; the output is the same.
+    *    A query without a watermark never runs one either way.
+    *  - **The RocksDB state store** is required by `transformWithState`,
+    *    so such a plan gets it; every other plan keeps the session's own
+    *    provider (the [[streamStateProviderConf]] posture).
+    *
+    * Spark reads both from the session clone `start()` makes, and records
+    * them in batch 0's offset log, which a restart restores. So they are
+    * set on `frame`'s session for the duration of `start()` only, and its
+    * earlier values (or their absence) are restored. The set/restore
+    * window is held under one lock: the memoized [[streamingSession]]
+    * child is shared, and a concurrent start must not see another query's
+    * settings. */
+  private def startQuery(frame: DataFrame, outputMode: String, checkpointDir: String,
+      trigger: Trigger)(body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val (noData, provider) = runSettings(frame, outputMode)
+    val settings = (noDataBatchesConf -> noData.toString) +: provider.map(providerConf -> _).toSeq
+    val writer = frame.writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch((b: Dataset[Row], id: Long) => body(b, id))
+    val conf = frame.sparkSession.conf
+    startLock.synchronized {
+      val earlier = settings.map { case (k, _) => k -> conf.getAll.get(k) } // None when unset
+      settings.foreach { case (k, v) => conf.set(k, v) }
+      try writer.start()
+      finally earlier.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
+  }
 
   /** One streaming query: windowed counts → upsert deltas (S3) with a
-    * per-query checkpoint (S6, `consumer/consumer.py:143-144`).
-    *
-    * Update- and complete-mode queries run without no-data micro-batches.
-    * Those batches exist to emit or evict once the watermark moves with no
-    * new rows. Update-mode output never waits on the watermark, so for it
-    * a no-data batch only evicts closed windows, at the price of a whole
-    * trigger (planning, state load, an empty sink delta) — the closing
-    * trigger of every `AvailableNow` catch-up. Closed windows are evicted
-    * by the next data batch instead; the sink contents are the same.
-    * Append mode keeps no-data batches: it emits a window only once the
-    * watermark passes its end.
-    *
-    * Spark reads the setting from the session clone `start()` makes, so it
-    * is set on the caller's session for the duration of `start()` only and
-    * the caller's value (or its absence) is restored. Another thread
-    * starting a query on the same session in that instant would see it. */
+    * per-query checkpoint (S6, `consumer/consumer.py:143-144`). */
   def start(
       events: DataFrame,
       key: String,
@@ -167,25 +226,13 @@ object EventPipeline {
       checkpointDir: String,
       outputMode: String = "update",
       watermark: String = "10 minutes",
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val writer = windowCounts(events, key, Some(watermark)).writeStream
-      .outputMode(outputMode)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch((b: Dataset[Row], id: Long) => UpsertSink.writeBatch(b, id, sinkDir))
-    if (outputMode.equalsIgnoreCase("append")) writer.start()
-    else {
-      val conf = events.sparkSession.conf
-      val callers = conf.getAll.get(noDataBatchesConf) // None when unset
-      conf.set(noDataBatchesConf, "false")
-      try writer.start()
-      finally callers.fold(conf.unset(noDataBatchesConf))(conf.set(noDataBatchesConf, _))
-    }
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startQuery(windowCounts(events, key, Some(watermark)), outputMode, checkpointDir, trigger)(
+      UpsertSink.writeBatch(_, _, sinkDir))
 
   /** C10: multi-query fan-out — user and type KPI queries from one source
     * lineage, each with its own sink + checkpoint, like the reference's two
-    * `writeStream.start()` calls (`consumer/consumer.py:147-174`). */
+    * stream starts (`consumer/consumer.py:147-174`). */
   def startBoth(s: SparkSession, sfDir: String, baseDir: String): Seq[StreamingQuery] =
     Seq("user_id", "event_type").map { key =>
       start(fileStream(s, sfDir), key, s"$baseDir/$key/sink", s"$baseDir/$key/ckpt")
@@ -203,11 +250,7 @@ object EventPipeline {
     * keeps state finite for the finite input; the operational 10-minute
     * configuration is exercised by [[startBoth]] and the streaming suites. */
   def streamedWindows(s: SparkSession, sfDir: String, key: String): DataFrame =
-    // noDataBatches=false: update mode emits per DATA batch; the trailing
-    // watermark-advance trigger wrote an empty delta (state eviction only,
-    // which a bounded replay never reads) — measured 0.6–0.9 s of the row.
-    runToSink(s, "graft-stream-", "update",
-      Seq("window_start", "window_end", key), noDataBatches = false) { ss =>
+    runToSink(s, "graft-stream-", "update", Seq("window_start", "window_end", key)) { ss =>
       windowCounts(fileStream(ss, sfDir), key, Some("3650 days"))
     }.select(col("window_start"), col("window_end"), col(key), col("total_interactions"))
 
@@ -253,36 +296,26 @@ object EventPipeline {
 
   /** Child session for a streamed query: shared SparkContext, isolated SQL
     * conf with the reduced [[defaultStreamPartitions]] shuffle-partition
-    * count and the requested state backend. The BATCH suite's plans (and
-    * its 32 shuffle partitions) are untouched — only the streaming
-    * micro-batches and the scratch-sink resolve run at the stream width.
+    * count and the [[streamStateProviderConf]] state backend. The BATCH
+    * suite's plans (and its 32 shuffle partitions) are untouched — only
+    * the streaming micro-batches and the scratch-sink resolve run at the
+    * stream width.
     *
-    * MEMOIZED per (outer session, graft confs, backend): a bench run
-    * executes 21 streamed queries, and a fresh `newSession()` per query
-    * pays SessionState construction and loses every analyzer/plan-level
+    * MEMOIZED per (outer session, graft confs): a bench run executes 21
+    * streamed queries, and a fresh `newSession()` per query pays
+    * SessionState construction and loses every analyzer/plan-level
     * cache — one shared child per configuration amortizes that fixed cost
-    * across the family (r10 verdict #2). Callers that need RocksDB
-    * (`transformWithState`) request it via `provider`; they previously
-    * set it by MUTATING the child's conf, which under sharing would leak
-    * the backend into every later query — the parameter keys them to
-    * their own child instead. */
+    * across the family (r10 verdict #2). The graft confs fix everything
+    * the child carries. Per-query settings (no-data batches, the RocksDB
+    * store `transformWithState` needs) are never baked in here: the
+    * child is shared, so [[startQuery]] sets them for one start only. */
   private val sessionMemo =
     scala.collection.concurrent.TrieMap.empty[(Long, String), SparkSession]
 
-  private[graft] def streamingSession(
-      s: SparkSession, provider: Option[String] = None,
-      noDataBatches: Boolean = true): SparkSession = {
-    val n = s.conf.getOption(streamPartitionsConf)
-      .getOrElse(defaultStreamPartitions.toString)
+  private[graft] def streamingSession(s: SparkSession): SparkSession = {
     val graftConfs = s.conf.getAll.toSeq
       .filter(_._1.startsWith("spark.graft.")).sortBy(_._1)
-    val resolved = provider.orElse(
-      if (s.conf.getOption(streamStateProviderConf).contains("rocksdb"))
-        Some(rocksProvider)
-      else None)
-    val cfg = (graftConfs.map { case (k, v) => s"$k=$v" } :+
-      s"n=$n" :+ s"p=${resolved.getOrElse("hdfs")}" :+
-      s"nd=$noDataBatches").mkString(";")
+    val cfg = graftConfs.map { case (k, v) => s"$k=$v" }.mkString(";")
     sessionMemo.synchronized(
       sessionMemo.getOrElseUpdate((graft.ops.SpillMemo.sessionId(s), cfg), {
         val ss = s.newSession()
@@ -293,21 +326,10 @@ object EventPipeline {
         // memo key carries the same confs, so a caller that CHANGES a
         // graft conf gets a fresh child rather than a stale one.
         graftConfs.foreach { case (k, v) => ss.conf.set(k, v) }
-        ss.conf.set("spark.sql.shuffle.partitions", n)
-        // No-data micro-batches exist so watermark advancement can emit
-        // (append-mode aggregations, outer-join null rows) or evict after
-        // the last data batch. A query whose OUTPUT is watermark-
-        // independent — update mode, inner/semi joins, streaming dedup
-        // (append emits on first arrival) — pays a full extra trigger
-        // (measured 0.5–1.7 s: planning + state scan + an empty sink
-        // write) for state eviction the bounded replay never reads.
-        // Callers with watermark-gated EMISSION must keep the default.
-        // Keyed into the memo (set once at child creation, never
-        // mutated) so concurrent stream starts can't race the conf.
-        if (!noDataBatches)
-          ss.conf.set(noDataBatchesConf, "false")
-        resolved.foreach(p =>
-          ss.conf.set("spark.sql.streaming.stateStore.providerClass", p))
+        ss.conf.set("spark.sql.shuffle.partitions", s.conf.getOption(streamPartitionsConf)
+          .getOrElse(defaultStreamPartitions.toString))
+        if (s.conf.getOption(streamStateProviderConf).contains("rocksdb"))
+          ss.conf.set(providerConf, rocksProvider)
         ss
       }))
   }
@@ -335,39 +357,41 @@ object EventPipeline {
     * trigger's derived working set after its sink write
     * ([[releaseTriggerState]]) — only for stateless streams. */
   private[graft] def runToSink(s: SparkSession, prefix: String, outputMode: String,
-      resolveKeys: Seq[String], noDataBatches: Boolean = true,
-      perBatch: SparkSession => Batch = _ => asIs, releaseTriggers: Boolean = false)(
-      build: SparkSession => DataFrame): DataFrame = {
-    val (ss, sink) =
-      drainToSink(s, prefix, outputMode, noDataBatches, perBatch, releaseTriggers)(build)
+      resolveKeys: Seq[String], perBatch: SparkSession => Batch = _ => asIs,
+      releaseTriggers: Boolean = false)(build: SparkSession => DataFrame): DataFrame = {
+    val (ss, sink) = drainToSink(s, prefix, outputMode, perBatch, releaseTriggers)(build)
     UpsertSink.resolve(ss, sink, resolveKeys)
   }
 
   /** The drain half of [[runToSink]]: run the stream to completion and
-    * return the child session and the sink dir, for callers that read the
-    * sink additively ([[UpsertSink.readAll]]) instead of resolving it. */
+    * return the child session and the sink dir (its checkpoint is the
+    * sibling `ckpt`), for callers that read the sink additively
+    * ([[UpsertSink.readAll]]) instead of resolving it. */
   private[graft] def drainToSink(s: SparkSession, prefix: String, outputMode: String,
-      noDataBatches: Boolean = true, perBatch: SparkSession => Batch = _ => asIs,
-      releaseTriggers: Boolean = false)(
+      perBatch: SparkSession => Batch = _ => asIs, releaseTriggers: Boolean = false)(
       build: SparkSession => DataFrame): (SparkSession, String) = {
-    val ss = streamingSession(s, noDataBatches = noDataBatches)
+    val ss = streamingSession(s)
     val scratch = graft.ops.SpillMemo.scratchDir(prefix)
     val sink = s"$scratch/sink"
     val transform = perBatch(ss)
     val stream = build(ss)
     val standing = if (releaseTriggers) persistentSnapshot(ss) else Set.empty[Int]
-    val q = stream.writeStream
-      .outputMode(outputMode)
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        UpsertSink.writeBatch(transform(b, id, sink), id, sink)
-        if (releaseTriggers) releaseTriggerState(ss, standing)
-      }
-      .start()
-    q.awaitTermination()
-    releaseStreamState(ss)
+    drain(stream, outputMode, s"$scratch/ckpt") { (b, id) =>
+      UpsertSink.writeBatch(transform(b, id, sink), id, sink)
+      if (releaseTriggers) releaseTriggerState(ss, standing)
+    }
     (ss, sink)
+  }
+
+  /** Run `stream` to completion under `AvailableNow` through [[startQuery]],
+    * then release its session's state stores ([[releaseStreamState]]) —
+    * the bounded-replay lifecycle, for a caller with its own
+    * per-batch `body` (one that writes more than one sink). */
+  private[graft] def drain(stream: DataFrame, outputMode: String, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): Unit = {
+    startQuery(stream, outputMode, checkpointDir, Trigger.AvailableNow())(body)
+      .awaitTermination()
+    releaseStreamState(stream.sparkSession)
   }
 
   /** STREAMING CALIBRATION PROBE (`cal_s`, r14 verdict #2): a fixed,
@@ -535,12 +559,7 @@ object EventPipeline {
   /** Run the interval join as a real streaming query over the events table
     * and return the resolved match table. */
   def streamedIntervalJoin(s: SparkSession, sfDir: String): DataFrame =
-    // noDataBatches=false: inner-join matches emit as both sides arrive —
-    // nothing in the output waits on the watermark (the far delay also
-    // never evicts), so the trailing no-data trigger only re-scanned four
-    // state stores to emit nothing.
-    runToSink(s, "graft-ssjoin-", "append", Seq("click_id", "purchase_id"),
-      noDataBatches = false) { ss =>
+    runToSink(s, "graft-ssjoin-", "append", Seq("click_id", "purchase_id")) { ss =>
       val src = fileStream(ss, sfDir)
       intervalJoin(src, src, "3650 days")
     }.select(col("click_id"), col("purchase_id"), col("user_id"), col("gap_us"))
@@ -659,10 +678,7 @@ object EventPipeline {
   /** Run the semi join as a real streaming query (shared single source
     * scan, far watermark — bounded replay finds every match). */
   def streamedSemiJoin(s: SparkSession, sfDir: String): DataFrame =
-    // noDataBatches=false: the [[streamedIntervalJoin]] argument — semi
-    // matches emit on first match, never on watermark.
-    runToSink(s, "graft-sssemi-", "append", Seq("click_id"),
-      noDataBatches = false) { ss =>
+    runToSink(s, "graft-sssemi-", "append", Seq("click_id")) { ss =>
       val src = fileStream(ss, sfDir)
       semiJoin(src, src, "3650 days")
     }.select(col("click_id"), col("user_id"), col("click_ts_us"))
@@ -681,12 +697,7 @@ object EventPipeline {
     * first arrival — and duplicates carry identical attributes, so the
     * emitted SET is deterministic regardless of which copy wins. */
   def streamedDedup(s: SparkSession, sfDir: String): DataFrame =
-    // noDataBatches=false: append-mode dedup emits each id on FIRST
-    // arrival (WithinWatermark gates only state EVICTION, which the
-    // bounded replay's far watermark never reaches) — the trailing
-    // trigger emitted nothing.
-    runToSink(s, "graft-sdedup-", "append", Seq("event_id"),
-      noDataBatches = false) { ss =>
+    runToSink(s, "graft-sdedup-", "append", Seq("event_id")) { ss =>
       def src = fileStream(ss, sfDir)
         .filter(col("event_id").isNotNull && col("ts").isNotNull)
         .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))

@@ -1,9 +1,9 @@
 package graft.streaming
 
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Input row for the lifetime-totals processor: user key + exact cents. */
 case class TotalEvent(user_id: Long, value_c: Long)
@@ -51,35 +51,23 @@ class RunningTotalsProcessor extends StatefulProcessor[Long, TotalEvent, UserTot
   * completion over the events table and resolve the upsert sink. */
 object RunningTotals {
 
-  private def rocksProvider = EventPipeline.rocksProvider
-
-  /** `transformWithState` requires the RocksDB state store; the conf is
-    * read at query START, so it is set on the throwaway reduced-partition
-    * [[EventPipeline.streamingSession]] child (which also carries the
-    * stream-width shuffle-partition count) — the caller's session conf is
-    * never touched, and concurrent queries are unaffected. */
-  def streamedRunningTotals(s: SparkSession, sfDir: String): DataFrame = {
-    val ss = EventPipeline.streamingSession(s, Some(rocksProvider))
-    import ss.implicits._
-    val scratch = graft.ops.SpillMemo.scratchDir("graft-tws-")
-    val typed = EventPipeline.fileStream(ss, sfDir)
-      .filter(col("user_id").isNotNull && col("value").isNotNull)
+  /** The lifetime-totals query over `events` (user_id, value). It runs on
+    * the RocksDB state store `transformWithState` requires: the starter
+    * reads that off the plan ([[EventPipeline.runSettings]]). */
+  private def totalsOf(events: DataFrame): DataFrame =
+    events.filter(col("user_id").isNotNull && col("value").isNotNull)
       .select(col("user_id"),
         expr("CAST(round(value * 100) AS BIGINT)").as("value_c"))
-      .as[TotalEvent]
-    val out = typed.groupByKey(_.user_id)
-      .transformWithState(new RunningTotalsProcessor, TimeMode.None(), OutputMode.Update())
-    val q = out.toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch((b: Dataset[Row], id: Long) => UpsertSink.writeBatch(b, id, s"$scratch/sink"))
-      .start()
-    q.awaitTermination()
-    EventPipeline.releaseStreamState(ss)
-    UpsertSink.resolve(ss, s"$scratch/sink", Seq("user_id"))
-      .select(col("user_id"), col("n_events"), col("value_c_sum"))
-  }
+      .as(Encoders.product[TotalEvent])
+      .groupByKey(_.user_id)(Encoders.scalaLong)
+      .transformWithState(new RunningTotalsProcessor, TimeMode.None(), OutputMode.Update())(
+        Encoders.product[UserTotals])
+      .toDF()
+
+  def streamedRunningTotals(s: SparkSession, sfDir: String): DataFrame =
+    EventPipeline.runToSink(s, "graft-tws-", "update", Seq("user_id")) { ss =>
+      totalsOf(EventPipeline.fileStream(ss, sfDir))
+    }.select(col("user_id"), col("n_events"), col("value_c_sum"))
 
   /** Scratch multi-file copy of the events table's (event_id, user_id,
     * value) projection, split into [[splitParts]] deterministic slices
@@ -121,36 +109,18 @@ object RunningTotals {
     * maintenance posture a long-running deployment needs — without it,
     * [[UpsertSink.resolve]]'s merge-on-read cost grows with every trigger
     * forever; with it the sink holds ≤2 delta dirs at any moment. */
-  def streamedRunningTotalsCompacted(s: SparkSession, sfDir: String): DataFrame = {
-    val ss = EventPipeline.streamingSession(s, Some(rocksProvider))
-    import ss.implicits._
-    val scratch = graft.ops.SpillMemo.scratchDir("graft-twsc-")
-    val src = splitSourceDir(ss, sfDir)
-    val sink = s"$scratch/sink"
-    val typed = ss.readStream
-      .schema(ss.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .filter(col("user_id").isNotNull && col("value").isNotNull)
-      .select(col("user_id"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("value_c"))
-      .as[TotalEvent]
-    val out = typed.groupByKey(_.user_id)
-      .transformWithState(new RunningTotalsProcessor, TimeMode.None(), OutputMode.Update())
-    val q = out.toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        UpsertSink.compactInPlace(ss, sink, Seq("user_id"), exceptBatch = Some(id))
-        UpsertSink.writeBatch(b, id, sink)
-      }
-      .start()
-    q.awaitTermination()
-    EventPipeline.releaseStreamState(ss)
-    UpsertSink.resolve(ss, sink, Seq("user_id"))
-      .select(col("user_id"), col("n_events"), col("value_c_sum"))
-  }
+  def streamedRunningTotalsCompacted(s: SparkSession, sfDir: String): DataFrame =
+    EventPipeline.runToSink(s, "graft-twsc-", "update", Seq("user_id"),
+        perBatch = ss => (b, id, sink) => {
+          UpsertSink.compactInPlace(ss, sink, Seq("user_id"), exceptBatch = Some(id))
+          b
+        }) { ss =>
+      val src = splitSourceDir(ss, sfDir)
+      totalsOf(ss.readStream
+        .schema(ss.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src))
+    }.select(col("user_id"), col("n_events"), col("value_c_sum"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s_running_totals_stream" -> ((s, d) => streamedRunningTotals(s, d)),

@@ -1,9 +1,9 @@
 package graft.streaming
 
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Input row for the streaming SCD2 processor (µs event time). */
 case class Scd2Event(user_id: Long, ts_us: Long, event_id: Long, event_type: String)
@@ -137,29 +137,18 @@ object Scd2Stream {
     * give the watermark a delay covering the source's max disorder (the
     * processor itself is order-correct for any delay — it folds strictly
     * behind the watermark). */
-  def streamedScd2(s: SparkSession, sfDir: String): DataFrame = {
-    val ss = EventPipeline.streamingSession(s, Some(EventPipeline.rocksProvider))
-    import ss.implicits._
-    val scratch = graft.ops.SpillMemo.scratchDir("graft-scd2s-")
-    val typed = EventPipeline.fileStream(ss, sfDir)
-      .filter(col("user_id").isNotNull && col("ts").isNotNull &&
-        col("event_type").isNotNull && col("event_id").isNotNull)
-      .withWatermark("ts", "0 seconds")
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-      .as[Scd2Event]
-    val q = runsOf(typed).toDF().writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch((b: Dataset[Row], id: Long) => UpsertSink.writeBatch(b, id, s"$scratch/sink"))
-      .start()
-    q.awaitTermination()
-    EventPipeline.releaseStreamState(ss)
-    UpsertSink.resolve(ss, s"$scratch/sink", Seq("user_id", "run_id"))
-      .select(col("user_id"), col("run_id"), col("event_type"),
-        col("valid_from_us"), col("n_events"), col("valid_to_us"))
-  }
+  def streamedScd2(s: SparkSession, sfDir: String): DataFrame =
+    EventPipeline.runToSink(s, "graft-scd2s-", "append", Seq("user_id", "run_id")) { ss =>
+      import ss.implicits._
+      runsOf(EventPipeline.fileStream(ss, sfDir)
+        .filter(col("user_id").isNotNull && col("ts").isNotNull &&
+          col("event_type").isNotNull && col("event_id").isNotNull)
+        .withWatermark("ts", "0 seconds")
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"), col("event_type"))
+        .as[Scd2Event]).toDF()
+    }.select(col("user_id"), col("run_id"), col("event_type"),
+      col("valid_from_us"), col("n_events"), col("valid_to_us"))
 
   /** The SIXTEENTH streaming execution and a join semantic the suite did
     * not yet exercise: a stream-static NON-EQUI (interval-containment)

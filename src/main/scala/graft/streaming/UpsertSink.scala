@@ -51,12 +51,7 @@ object UpsertSink {
     * state the original attempt saw, so replay is a bit-identical no-op. */
   def resolve(s: SparkSession, dir: String, keys: Seq[String],
       exceptBatch: Option[Long] = None): DataFrame = {
-    val base = new java.io.File(dir)
-    val skip = exceptBatch.map(id => s"b$id").toSet
-    val deltas = Option(base.listFiles())
-      .map(_.filter(f => f.isDirectory && f.getName.startsWith("b") && !skip(f.getName))
-        .map(_.getAbsolutePath).sorted)
-      .getOrElse(Array.empty[String])
+    val deltas = deltaDirs(dir, exceptBatch).map(_.getAbsolutePath).sorted
     require(deltas.nonEmpty,
       s"UpsertSink.resolve: no delta directories under $dir — the streaming query produced no batches")
     val all = s.read.parquet(deltas.toIndexedSeq: _*)
@@ -85,15 +80,18 @@ object UpsertSink {
     * the same `mode("overwrite")` per-batch write keeps replay idempotent. */
   def readAll(s: SparkSession, dir: String,
       exceptBatch: Option[Long] = None): DataFrame = {
-    val base = new java.io.File(dir)
-    val skip = exceptBatch.map(id => s"b$id").toSet
-    val deltas = Option(base.listFiles())
-      .map(_.filter(f => f.isDirectory && f.getName.startsWith("b") && !skip(f.getName))
-        .map(_.getAbsolutePath).sorted)
-      .getOrElse(Array.empty[String])
+    val deltas = deltaDirs(dir, exceptBatch).map(_.getAbsolutePath).sorted
     require(deltas.nonEmpty,
       s"UpsertSink.readAll: no delta directories under $dir — the streaming query produced no batches")
     s.read.parquet(deltas.toIndexedSeq: _*).drop("_batch_id")
+  }
+
+  /** The sink's batch delta directories (`b<id>`), minus `exceptBatch`'s;
+    * empty when `dir` does not exist. */
+  private def deltaDirs(dir: String, exceptBatch: Option[Long]): Array[java.io.File] = {
+    val skip = exceptBatch.map(id => s"b$id").toSet
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isDirectory && f.getName.startsWith("b") && !skip(f.getName))
   }
 
   /** Compaction: materialize the resolved view at `outDir` (what a periodic
@@ -144,10 +142,7 @@ object UpsertSink {
       exceptBatch: Option[Long] = None): Unit = {
     val base = new java.io.File(dir)
     recoverStage(base)
-    val skip = exceptBatch.map(id => s"b$id").toSet
-    val deltas = Option(base.listFiles())
-      .map(_.filter(f => f.isDirectory && f.getName.startsWith("b") && !skip(f.getName)))
-      .getOrElse(Array.empty[java.io.File])
+    val deltas = deltaDirs(dir, exceptBatch)
     if (deltas.length < 2) return // nothing to fold (also the replay no-op)
     val maxId = deltas.map(_.getName.drop(1).toLong).max
     // non-`b` prefix keeps the stage invisible to resolve/readAll; no dot

@@ -3,9 +3,11 @@ package graft
 import java.nio.file.Files
 
 import graft.ops.Sessionize
-import graft.streaming.{EventPipeline, KeyedEvent, StatefulDedup, UpsertSink}
+import graft.streaming.{EventPipeline, KeyedEvent, RunningTotalsProcessor, StatefulDedup, TotalEvent, UpsertSink, UserTotals}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** Second streaming batch: custom state (`flatMapGroupsWithState` dedup),
   * checkpoint recovery (S6 — restart reprocesses nothing), and the
@@ -88,6 +90,58 @@ class Streaming2Spec extends SparkSpec {
     q3.awaitTermination()
     assert(emptyBatches(q3, appendCkpt).nonEmpty, "append mode must run its no-data batch")
     assert(callerConf == before)
+
+    // The drainToSink path starts through the same rule; its checkpoint is
+    // the sink's sibling `ckpt`. A no-data batch re-commits its
+    // predecessor's source offsets (lines after the version and metadata).
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val child = EventPipeline.streamingSession(spark)
+    def childConfs = Seq(noData, providerKey).map(child.conf.getAll.get)
+    def ckptOf(sinkDir: String) = new java.io.File(sinkDir).getParent + "/ckpt"
+    def offsetLog(ckptDir: String, id: Long) = {
+      val src = scala.io.Source.fromFile(s"$ckptDir/offsets/$id")
+      try src.getLines().toList finally src.close()
+    }
+    def noDataCommits(ckptDir: String) = committed(ckptDir).filter(id =>
+      id > 0 && offsetLog(ckptDir, id).drop(2) == offsetLog(ckptDir, id - 1).drop(2))
+    def drained(prefix: String, mode: String)(build: org.apache.spark.sql.SparkSession => DataFrame) = {
+      val confs = childConfs
+      val (ss, sinkDir) = EventPipeline.drainToSink(spark, prefix, mode)(build)
+      assert(ss eq child)
+      assert(childConfs == confs, s"$prefix: start must restore the child session's confs")
+      ckptOf(sinkDir)
+    }
+
+    // append dedup emits on arrival: no closing no-data batch
+    val dedupCkpt = drained("graft-s6-dedup-", "append") { ss =>
+      EventPipeline.fileStream(ss, sf)
+        .filter(col("event_id").isNotNull && col("ts").isNotNull)
+        .select(col("event_id"), col("ts"))
+        .withWatermark("ts", "0 seconds")
+        .dropDuplicatesWithinWatermark("event_id")
+    }
+    assert(committed(dedupCkpt).nonEmpty)
+    assert(noDataCommits(dedupCkpt).isEmpty, s"dedup no-data batches: ${noDataCommits(dedupCkpt)}")
+
+    // append session windows emit on the watermark: the closing batch stays
+    val sessCkpt = drained("graft-s6-sess-", "append") { ss =>
+      EventPipeline.sessionCounts(EventPipeline.fileStream(ss, sf), "0 seconds")
+    }
+    assert(noDataCommits(sessCkpt).nonEmpty, "append session windows must run their no-data batch")
+
+    // transformWithState gets RocksDB without naming a provider
+    val twsCkpt = drained("graft-s6-tws-", "update") { ss =>
+      EventPipeline.fileStream(ss, sf)
+        .filter(col("user_id").isNotNull && col("value").isNotNull)
+        .select(col("user_id"), expr("CAST(round(value * 100) AS BIGINT)").as("value_c"))
+        .as(Encoders.product[TotalEvent])
+        .groupByKey(_.user_id)(Encoders.scalaLong)
+        .transformWithState(new RunningTotalsProcessor, TimeMode.None(), OutputMode.Update())(
+          Encoders.product[UserTotals])
+        .toDF()
+    }
+    assert(offsetLog(twsCkpt, 0).exists(_.contains("RocksDBStateStoreProvider")),
+      s"offsets/0: ${offsetLog(twsCkpt, 0)}")
   }
 
   test("watermark survives restart: late rows stay dropped under the RECOVERED watermark") {
