@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line on stdout (build.sbt routes forked stdout through
   * unprefixed, so the driver can parse the tail line directly).
@@ -45,7 +47,7 @@ object Bench {
     try // warm-up (untimed): exercises scan + shuffle + agg + noop machinery
       ops.WindowAgg.userWindows(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     // Deployment posture for the serving family (round-14 verdict #4): build
     // the persisted IndexStore ONCE and point the session at it, so every
@@ -74,7 +76,7 @@ object Bench {
           spark.conf.set(ops.IndexStore.indexDirConf, store)
           ((System.nanoTime() - t0) / 1e9, "served")
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"index store build failed, memo mode: $e")
             (-1.0, "build_failed")
         }
@@ -94,7 +96,7 @@ object Bench {
       val t0 = System.nanoTime()
       try ops.Relational.queries("h_pricing_summary")(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      catch { case NonFatal(_) => return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
     // A failed probe must never land in the triple as a -1.0 "sample"
@@ -121,7 +123,7 @@ object Bench {
       val t0 = System.nanoTime()
       try graft.streaming.EventPipeline.calProbe(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      catch { case NonFatal(_) => return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
     calSOnce() // untimed streaming warm-up
@@ -142,7 +144,7 @@ object Bench {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             None
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               Some(e.toString.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(160))
           }
         ((System.nanoTime() - t0) / 1e9, err)
@@ -200,7 +202,7 @@ object Bench {
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath),
       renderFull(results, sfDir, samples.toMap, GraftSession.cpus, cal.toSeq, calS.toSeq,
         indexBuildSec, indexStoreMode, calErrs, calSErrs))
-    catch { case e: Throwable => System.err.println(s"bench_full write failed: $e") }
+    catch { case NonFatal(e) => System.err.println(s"bench_full write failed: $e") }
     // 10ms precision, trailing zeros stripped, keeps the single JSON line.
     // Emitted LAST — after every stream is quiesced and the session is
     // stopped — so nothing the teardown logs can land after it in the
@@ -224,7 +226,7 @@ object Bench {
     * after the line"). */
   def emitLineLast(line: String, teardown: () => Unit): Unit = {
     try teardown()
-    catch { case e: Throwable => Console.err.println(s"bench teardown failed: $e") }
+    catch { case NonFatal(e) => Console.err.println(s"bench teardown failed: $e") }
     println(line)
     Console.out.flush()
   }
@@ -244,7 +246,7 @@ object Bench {
     val load =
       try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split(" ").take(3).map(x => f"${x.toDouble}%.2f").mkString("[", ",", "]")
-      catch { case _: Throwable => "[]" }
+      catch { case NonFatal(_) => "[]" }
     val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
     val rows = results.sortBy(_._1).map { case (k, v, err) =>
       val ss = samples.getOrElse(k, Seq(v)).map(d).mkString("[", ",", "]")
@@ -374,7 +376,7 @@ object Bench {
         val p = java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg")).split(" ")
         val l = Seq(p(0), p(2)).map(x => f"${x.toDouble}%.1f").mkString(",")
         s""","load":[$l]"""
-      } catch { case _: Throwable => "" }
+      } catch { case NonFatal(_) => "" }
     // "sf0.1", not the full path: the dir prefix is driver-known, the chars
     // belong to per-query values
     val sfJson = s""","sf":"${sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)}""""

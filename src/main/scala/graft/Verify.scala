@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -35,8 +36,9 @@ object Verify {
           System.err.println(
             s"[verify] $name TYPE VIOLATION (driver hash will diverge): ${bad.mkString(", ")}")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        e.printStackTrace()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * per-vector norms. Null inputs and length-mismatched pairs yield null;
   * a zero vector yields NaN (0/0) exactly as the SQL formulation does —
   * ranking such scores follows Spark's NaN-greatest semantics (see
-  * [[TopKAgg]]).
+  * [[TopKOrder]]).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
   extends BinaryExpression with ImplicitCastInputTypes with Serializable {

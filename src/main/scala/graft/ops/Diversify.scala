@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * iteration-over-collect; the same fixed-unroll idiom as [[Bpe]]).
   * Cluster-balanced sampling is one bounded-heap top-n per cell over the
   * assignment relation — map-side partial reduction cuts each partition to
-  * n rows per cell before the exchange ([[graft.functions.TopKAgg]]), so
+  * n rows per cell before the exchange ([[graft.functions.TopK.Cut]]), so
   * the shuffle moves O(cells·n), never the corpus.
   *
   * Oracle strategy: every arithmetic step is either integer (hash ranks)

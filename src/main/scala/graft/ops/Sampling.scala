@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.{TopK, TopKOrder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,7 +38,7 @@ object Sampling {
     * (lang, source) puts each STRATUM's entire candidate set in one
     * window partition — strata number in the dozens, so at 100 TB that is
     * a handful of multi-TB single-task sorts. The heap aggregation
-    * ([[graft.functions.BottomKByKeyAgg]], bottom-`quota` by
+    * ([[graft.functions.TopK.Cut]], bottom-`quota` by
     * (md5 ASC, doc_id ASC) — exact 128-bit hash order) instead reduces
     * every map-side partition's candidates to ≤ quota per stratum BEFORE
     * the exchange, at the source partitioning's full parallelism; the
@@ -47,18 +48,13 @@ object Sampling {
     * equality against a driver-side selection, and the plan pin rejects a
     * window regression). */
   def quotaSampleDocs(docs: DataFrame, quota: Int): DataFrame = {
-    val agg = org.apache.spark.sql.functions.udaf(
-      new graft.functions.BottomKByKeyAgg(quota),
-      org.apache.spark.sql.Encoders.product[graft.functions.KeyedId])
-    docs
+    val bot = docs
       .select(col("doc_id"), col("lang"), col("source"),
         md5(col("doc_id").cast("string")).as("h"))
       .groupBy(col("lang"), col("source"))
-      .agg(agg(col("h"), col("doc_id")).as("bot"))
-      .select(col("lang"), col("source"),
-        posexplode(col("bot")).as(Seq("p", "t")))
-      .select(col("t.id").as("doc_id"), col("lang"), col("source"),
-        (col("p") + 1).cast("long").as("rnk"))
+      .agg(TopK.cut(quota, TopKOrder.keyedId, TopKOrder.wholeRecord).apply(
+        col("h"), col("doc_id")).as("bot"))
+    TopK.ranked(bot, "bot", col("t.id").as("doc_id"), col("lang"), col("source"), col("rnk"))
   }
 
   /** Fixed sample size for [[bottomkSample]] / `s_sample_stream`. */

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import graft.functions.TopK
+import graft.functions.{TopK, TopKOrder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -51,7 +51,7 @@ import org.apache.spark.sql.functions._
   * probe is a broadcast join over matched pruned lists plus an INTEGER
   * SUM (zero per-probe float work); the per-(query, doc) aggregation
   * partial-reduces map-side, and the final cut is the bounded-heap
-  * [[graft.functions.TopKAgg]] (shuffle moves O(k·partitions·queries)
+  * [[graft.functions.TopK.Cut]] (shuffle moves O(k·partitions·queries)
   * rows). The candidate relation is lineage-cut once so the score
   * join-back reads materialized blocks instead of re-running the search.
   * The RRF stage fuses two already-top-k relations — dashboard-sized at
@@ -113,7 +113,7 @@ object Search {
     * corpus text is scanned once per relation Spark materializes, never
     * re-joined to itself. The per-posting impact is computed HERE (index
     * build time) and each list pruned to its [[prunePerTerm]] top impacts
-    * through the bounded-heap [[graft.functions.TopKScoredAgg]]: each
+    * through the bounded-heap [[graft.functions.TopK.Cut]]: each
     * map-side partition reduces a token's candidates to ≤ cap BEFORE the
     * exchange, so a skewed token (this fixture's 31-token vocabulary with
     * df ≈ 0.87·N is the worst case by construction) costs per-partition
@@ -745,7 +745,7 @@ object Search {
     * The index analog of BM25's impact prune: each token's posting list
     * keeps its [[prunePerTerm]] highest-tf postings (the matched
     * contribution is monotone in tf, so tf-ordering IS impact-ordering
-    * here), cut by the bounded-heap [[graft.functions.TopKScoredAgg]] —
+    * here), cut by the bounded-heap [[graft.functions.TopK.Cut]] —
     * map-side ≤cap heaps, never a df-sized window sort. cf rides on the
     * PRUNED lists (an index-sized token join at build), the collection
     * total is a 1-row broadcast, and the candidate relation — bounded by
@@ -1445,7 +1445,7 @@ object Search {
     * tf relation FIRST (occurrences never fan out — the ×[[acMaxPrefix]]
     * prefix explode runs over distinct tokens, not the corpus); the
     * per-prefix head is the bounded-heap
-    * [[graft.functions.TopKByCountAgg]] (count desc, token asc — map-side
+    * [[graft.functions.TopK.Cut]] (count desc, token asc — map-side
     * heaps of [[acTopN]], never a per-prefix window sort: a popular
     * 1-char prefix's completion list is vocabulary-sized, the same
     * skewed-key trap the vocab/ngram heads retired in round 14). Serving
@@ -1458,19 +1458,15 @@ object Search {
   private[graft] def autocompleteDocs(docs: DataFrame): DataFrame = {
     val tf = tokens(docs)
       .groupBy(col("token")).agg(count(lit(1)).as("n"))
-    val agg = org.apache.spark.sql.functions.udaf(
-      new graft.functions.TopKByCountAgg(acTopN),
-      org.apache.spark.sql.Encoders.product[graft.functions.CountKeyed])
-    tf
+    val top = tf
       .select(explode(expr(
         s"transform(sequence(1, least(length(token), $acMaxPrefix)), " +
           "p -> substring(token, 1, p))")).as("prefix"),
         col("token"), col("n"))
       .groupBy(col("prefix"))
-      .agg(agg(col("n"), col("token")).as("top"))
-      .select(col("prefix"), posexplode(col("top")).as(Seq("p", "t")))
-      .select(col("prefix"), col("t.key").as("token"), col("t.c").as("n"),
-        (col("p") + 1).cast("long").as("rnk"))
+      .agg(TopK.cut(acTopN, TopKOrder.countKeyed).apply(col("n"), col("token")).as("top"))
+    TopK.ranked(top, "top",
+      col("prefix"), col("t.key").as("token"), col("t.c").as("n"), col("rnk"))
   }
 
   /** Snippet window width (tokens). */

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import graft.functions.TopK
+import graft.functions.{TopK, TopKOrder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   *  - brute-force cosine top-k: the exactness baseline. Query set is
   *    broadcast; the corpus streams past it, and the per-query top-k runs
-  *    through [[graft.functions.TopKAgg]] — a bounded-heap Aggregator whose
+  *    through [[graft.functions.TopK.Cut]] — a bounded-heap Aggregator whose
   *    map-side partial reduction cuts each partition to k rows before the
   *    exchange, so the shuffle moves O(k·partitions·queries) rows, never the
   *    full N×Q scored set.
@@ -126,7 +126,7 @@ object Similarity {
     * Plan shape: bucketing is map-side arithmetic on the scan; the probe
     * set (|queries|·(mpBits+1) rows) is broadcast; the scan joins on
     * bucket = probe — no corpus shuffle — and per-query top-k runs through
-    * the bounded-heap [[graft.functions.TopKAgg]] partial reduction. The
+    * the bounded-heap [[graft.functions.TopK.Cut]] partial reduction. The
     * probe-set size is caller-controlled (queries × probes), not corpus-
     * bounded, so the hint is the conf-gated [[Hints.broadcastSmall]] kind:
     * a deployment probing with a corpus-scale query set flips
@@ -746,7 +746,7 @@ object Similarity {
     * prefix cosine from one fused accumulator pass (each output bit-equal
     * to `cosine_sim` over the slice, see the kernel contract), so the
     * eval costs the same join the plain brute-force search pays, not
-    * |dims|× it. Per-(query, m) top-k via the bounded-heap [[TopKAgg]]
+    * |dims|× it. Per-(query, m) top-k via the bounded-heap [[TopK.Cut]]
     * (map-side k-truncation — the shuffle moves O(k) rows per group, not
     * the N×Q×|dims| scored set). The tiny ranked relation (|q|·|dims|·k
     * rows) is lineage-cut before being self-joined against its m=64 slice
@@ -762,8 +762,9 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("score"),
         element_at(typedLit(mrlDims.map(_.toLong)), col("j") + 1).as("m"))
     val top = Lineage.cut(scored.groupBy(col("query_id"), col("m"))
-      .agg(graft.functions.TopK.topKColumn(topK, col("score"), col("neighbor_id")).as("top"))
-      .select(col("query_id"), col("m"), explode(col("top.neighbor_id")).as("neighbor_id")))
+      .agg(TopK.cut(topK, TopKOrder.scored).apply(col("score"), col("neighbor_id"))
+        .as("top"))
+      .select(col("query_id"), col("m"), explode(col("top.id")).as("neighbor_id")))
     val truth = top.filter(col("m") === mrlDims.last)
       .select(col("query_id"), col("neighbor_id"))
     val totals = truth.agg(count(lit(1)).as("n_truth"))
@@ -829,7 +830,7 @@ object Similarity {
     * squaring monotone on |cos|), so the neighbor ORDER cannot drift
     * between engines or partitionings the way IEEE cosine near-ties
     * could. Per-vector top-k runs through the bounded-heap
-    * [[graft.functions.TopKAgg]] (map-side cut to k before the exchange);
+    * [[graft.functions.TopK.Cut]] (map-side cut to k before the exchange);
     * its (score DESC, id ASC) order is exactly the oracle's
     * `row_number`. */
   def knnGraph(s: SparkSession, d: String, bits: Int = knnBits): DataFrame = {
@@ -1691,7 +1692,7 @@ object Similarity {
     *    a 32-slot array per query, broadcast again;
     *  - scan: corpus codes ⋈ broadcast LUT on the IVF route — map-side,
     *    no shuffle of the corpus;
-    *  - top-k: [[graft.functions.TopKAgg]] bounded-heap partial reduction.
+    *  - top-k: [[graft.functions.TopK.Cut]] bounded-heap partial reduction.
     *
     * Everything is integer (µ² units, < 2⁵³), so ranks are deterministic
     * and DuckDB-checkable; ties break on neighbor_id like every top-k here. */

@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.{TopK, TopKOrder}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Mergeable-sketch aggregates — the third member of the approximate-
@@ -167,12 +168,12 @@ object Sketches {
     * [[graft.ops.Sampling.bottomkSample]] property).
     *
     * Plan: one distinct-pair aggregation (the exact side needs it anyway —
-    * differential form), then the bounded-heap
-    * [[graft.functions.BottomKByKeyAgg]] reduces each partition to ≤ k
-    * candidates before the exchange (md5 hex substrings are fixed-length
-    * lowercase, so the agg's UTF-8 string order IS the numeric hash
-    * order); n_exact rides the same grouped relation. Production form
-    * drops n_exact and keeps per-group state of k longs. */
+    * differential form), then the bounded-heap [[kmvSketch]] cut
+    * reduces each partition to ≤ k candidates before the exchange (md5
+    * hex substrings are fixed-length lowercase, so the agg's UTF-8 string
+    * order IS the numeric hash order); n_exact rides the same grouped
+    * relation. Production form drops n_exact and keeps per-group state
+    * of k longs. */
   def kmvDistinct(s: SparkSession, d: String): DataFrame =
     kmvOf(Tables.events(s, d)
       .filter(col("user_id").isNotNull)
@@ -180,23 +181,29 @@ object Sketches {
 
   /** [[kmvDistinct]]'s core over any distinct (event_type, user_id) pair
     * relation (exposed for the accuracy spec). */
-  private[graft] def kmvOf(du: DataFrame): DataFrame = {
-    val agg = org.apache.spark.sql.functions.udaf(
-      new graft.functions.BottomKByKeyAgg(kmvK),
-      org.apache.spark.sql.Encoders.product[graft.functions.KeyedId])
-    du
-      .select(col("event_type"),
-        substring(md5(col("user_id").cast("string")), 1, 12).as("h"),
-        col("user_id").as("id"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_exact"), agg(col("h"), col("id")).as("bot"))
+  private[graft] def kmvOf(du: DataFrame): DataFrame =
+    kmvSketch(du, count(lit(1)).as("n_exact"))
       .select(col("event_type"), col("n_exact"),
         when(col("n_exact") < kmvK, col("n_exact"))
           .otherwise(expr(
             s"CAST(${kmvK - 1}L * $kmvSpace AS BIGINT) div " +
               s"CAST(conv(element_at(bot, $kmvK).h, 16, 10) AS BIGINT)"))
           .as("n_kmv"))
-  }
+
+  /** The KMV sketch every KMV query shares, over any (event_type, user_id)
+    * frame, batch or streaming: per event type, the [[kmvK]] smallest
+    * 12-hex `md5(user_id)` prefixes as the sorted
+    * [[graft.functions.KeyedId]] array `bot`, with `extra` aggregates
+    * alongside. The cut keeps set semantics, so a re-delivered user never
+    * displaces a slot. */
+  private[graft] def kmvSketch(users: DataFrame, extra: Column*): DataFrame =
+    users
+      .select(col("event_type"),
+        substring(md5(col("user_id").cast("string")), 1, 12).as("h"),
+        col("user_id").as("id"))
+      .groupBy(col("event_type"))
+      .agg(TopK.cut(kmvK, TopKOrder.keyedId, TopKOrder.wholeRecord).apply(
+        col("h"), col("id")).as("bot"), extra: _*)
 
   /** KMV set algebra — the estimator family's UNION/INTERSECTION story
     * (Beyer et al., SIGMOD'07): for every event-type pair, estimate
@@ -231,18 +238,8 @@ object Sketches {
     * with an empty exact intersection survive via the left join + zero
     * fill (both engines). */
   def kmvOverlap(s: SparkSession, d: String): DataFrame = {
-    val agg = org.apache.spark.sql.functions.udaf(
-      new graft.functions.BottomKByKeyAgg(kmvK),
-      org.apache.spark.sql.Encoders.product[graft.functions.KeyedId])
     val du = distinctTypeUsers(s, d)
-    val sk = du
-      .select(col("event_type"),
-        substring(md5(col("user_id").cast("string")), 1, 12).as("h"),
-        col("user_id").as("id"))
-      .groupBy(col("event_type"))
-      .agg(agg(col("h"), col("id")).as("bot"))
-      .select(col("event_type"), expr("transform(bot, x -> x.h)").as("hs"))
-    overlapOf(sk, du)
+    overlapOf(kmvSketch(du), du)
   }
 
   /** The distinct (event_type, user_id) relation both overlap forms rest
@@ -252,10 +249,11 @@ object Sketches {
       .select(col("event_type"), col("user_id")).distinct()
 
   /** [[kmvOverlap]]'s pairwise tail over any per-type sketch relation
-    * `sk` (event_type, hs: sorted 12-hex bottom-k array) — shared with
-    * the maintained-sketch stream ([[graft.streaming.IngestStream]]),
-    * which resolves `sk` from its keyed sink instead of a batch scan. */
-  private[graft] def overlapOf(sk: DataFrame, du: DataFrame): DataFrame = {
+    * `bots` (event_type, bot: a [[kmvSketch]] array) — shared with the
+    * maintained-sketch stream ([[graft.streaming.IngestStream]]), which
+    * resolves `bots` from its keyed sink instead of a batch scan. */
+  private[graft] def overlapOf(bots: DataFrame, du: DataFrame): DataFrame = {
+    val sk = bots.select(col("event_type"), expr("transform(bot, x -> x.h)").as("hs"))
     val pairs = sk.select(col("event_type").as("type_a"), col("hs").as("ha"))
       .join(broadcast(sk.select(col("event_type").as("type_b"), col("hs").as("hb"))),
         col("type_a") < col("type_b"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.{TopK, TopKOrder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -108,7 +109,7 @@ object TextAnalysis {
     * counting pass behind tokenizer/vocab construction. Plan: explode →
     * partial count map-side (the heavy reduction happens before the shuffle;
     * only distinct (lang, token) partials move) → final count → per-lang
-    * bounded-heap head cut ([[graft.functions.TopKByCountAgg]], round 14):
+    * bounded-heap head cut ([[graft.functions.TopK.Cut]], round 14):
     * the earlier per-lang `row_number` window capped parallelism at
     * |langs| and sorted each language's ENTIRE aggregated vocab in one
     * task — at web scale a language's distinct-token table is 10⁸+ rows.
@@ -121,13 +122,10 @@ object TextAnalysis {
       .filter(length(col("token")) > 0)
       .groupBy(col("lang"), col("token"))
       .agg(count(lit(1)).as("tf"))
-    val agg = org.apache.spark.sql.functions.udaf(
-      new graft.functions.TopKByCountAgg(20),
-      org.apache.spark.sql.Encoders.product[graft.functions.CountKeyed])
-    tf.groupBy(col("lang")).agg(agg(col("tf"), col("token")).as("top"))
-      .select(col("lang"), posexplode(col("top")).as(Seq("p", "t")))
-      .select(col("lang"), col("t.key").as("token"), col("t.c").as("tf"),
-        (col("p") + 1).cast("long").as("rnk"))
+    TopK.ranked(
+      tf.groupBy(col("lang"))
+        .agg(TopK.cut(20, TopKOrder.countKeyed).apply(col("tf"), col("token")).as("top")),
+      "top", col("lang"), col("t.key").as("token"), col("t.c").as("tf"), col("rnk"))
   }
 
   /** Token-rarity scoring: mean corpus frequency of a doc's tokens — low
@@ -494,7 +492,7 @@ object TextAnalysis {
     *
     * Plan: map-side kernel + explode, one shuffle for the (lang, shingle)
     * count with map-side partial aggregation, then the per-lang
-    * bounded-heap head cut ([[graft.functions.TopKByCountAgg]], round 14
+    * bounded-heap head cut ([[graft.functions.TopK.Cut]], round 14
     * — the [[vocab]] rewrite applied here too, where it matters MORE: the
     * distinct-shingle table dwarfs the vocab at any scale, and a per-lang
     * window sorted all of it in |langs| tasks). Deterministic cut:
@@ -511,13 +509,11 @@ object TextAnalysis {
     val sh = docs
       .select(col("lang"), explode(expr("shingles3(split(text, ' '))")).as("sh"))
     val df = sh.groupBy(col("lang"), col("sh")).agg(count(lit(1)).as("df"))
-    val agg = org.apache.spark.sql.functions.udaf(
-      new graft.functions.TopKByCountAgg(ngramTopN),
-      org.apache.spark.sql.Encoders.product[graft.functions.CountKeyed])
-    df.groupBy(col("lang")).agg(agg(col("df"), col("sh")).as("top"))
-      .select(col("lang"), posexplode(col("top")).as(Seq("p", "t")))
-      .select(col("lang"), col("t.key").as("sh"), col("t.c").as("df"),
-        (col("p") + 1).cast("long").as("rnk"))
+    TopK.ranked(
+      df.groupBy(col("lang"))
+        .agg(TopK.cut(ngramTopN, TopKOrder.countKeyed).apply(col("df"), col("sh"))
+          .as("top")),
+      "top", col("lang"), col("t.key").as("sh"), col("t.c").as("df"), col("rnk"))
   }
 
   /** PMI workload tunables — shared with the oracle. */

@@ -21,7 +21,8 @@
   *    aggregate pair `bloom_agg`/`bloom_might_contain`; register via
   *    `GraftFunctions.register(spark)` or
   *    `spark.sql.extensions=graft.functions.GraftExtensions`), the
-  *    bounded-heap `TopKAgg`, and the `Skew` salted-aggregation rewrites.
+  *    bounded top-k kernel `TopK.Cut`, and the `Skew` salted-aggregation
+  *    rewrites.
   *  - [[graft.sources]] — schema-explicit JSON/CSV round-trip formats.
   *
   * ==Entry points==

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.{TopK, TopKOrder}
 import graft.ops.{Dedup, Diversify, Lineage, MatView, Sampling, Search, Similarity}
 import graft.ops.{MultimodalPipeline => Mm}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
@@ -295,18 +296,10 @@ object IngestStream {
     * then the pairwise overlap estimates off the standing sketches. */
   private def kmvOverlap(s: SparkSession, sfDir: String): DataFrame = {
     val sk = EventPipeline.runToSink(s, "graft-skmv-", "update", Seq("event_type")) { ss =>
-      val agg = udaf(new graft.functions.BottomKByKeyAgg(graft.ops.Sketches.kmvK),
-        Encoders.product[graft.functions.KeyedId])
-      EventPipeline.fileStream(ss, sfDir)
-        .filter(col("user_id").isNotNull)
-        .select(col("event_type"),
-          substring(md5(col("user_id").cast("string")), 1, 12).as("h"),
-          col("user_id").as("id"))
-        .groupBy(col("event_type"))
-        .agg(agg(col("h"), col("id")).as("bot"))
+      graft.ops.Sketches.kmvSketch(
+        EventPipeline.fileStream(ss, sfDir).filter(col("user_id").isNotNull))
     }
-    graft.ops.Sketches.overlapOf(
-      sk.select(col("event_type"), expr("transform(bot, x -> x.h)").as("hs")),
+    graft.ops.Sketches.overlapOf(sk,
       graft.ops.Sketches.distinctTypeUsers(sk.sparkSession, sfDir))
   }
 
@@ -323,25 +316,26 @@ object IngestStream {
 
   /** Cluster-balanced sample maintenance: arrivals assigned in-row to the
     * static seed centroids, per-cluster count + bottom-n by hash. */
-  private def clusterSample(s: SparkSession, sfDir: String): DataFrame =
-    EventPipeline.runToSink(s, "graft-scbs-", "update", Seq("cluster")) { ss =>
+  private def clusterSample(s: SparkSession, sfDir: String): DataFrame = {
+    val standing = EventPipeline.runToSink(s, "graft-scbs-", "update", Seq("cluster")) { ss =>
       graft.functions.GraftFunctions.register(ss)
       // k centroid vectors as ONE broadcastable row, sorted by cluster so
       // the assignment fold's strict `<` tie-breaks to the lowest id
       val cents = Lineage.cut(Similarity.seedCentroids(ss, sfDir)
         .groupBy()
         .agg(expr("array_sort(collect_list(struct(cluster, cv)))").as("cents")))
-      val agg = udaf(new graft.functions.BottomKByKeyAgg(Diversify.cbPerCluster),
-        Encoders.product[graft.functions.KeyedId])
       quantized(EventPipeline.tableStream(ss, sfDir, "embeddings"))
         .crossJoin(broadcast(cents))
         .withColumn("cluster", expr(Similarity.assignSql))
         .withColumn("h", substring(md5(col("vec_id").cast("string")), 1, 12))
         .groupBy(col("cluster"))
-        .agg(count(lit(1)).as("n_cluster"), agg(col("h"), col("vec_id")).as("bot"))
-    }.select(col("cluster"), col("n_cluster"), posexplode(col("bot")).as(Seq("pos", "kid")))
-      .select(col("cluster"), col("n_cluster"),
-        (col("pos") + 1).cast("long").as("rk"), col("kid.id").as("vec_id"))
+        .agg(count(lit(1)).as("n_cluster"),
+          TopK.cut(Diversify.cbPerCluster, TopKOrder.keyedId, TopKOrder.wholeRecord)
+            .apply(col("h"), col("vec_id")).as("bot"))
+    }
+    TopK.ranked(standing, "bot",
+      col("cluster"), col("n_cluster"), col("rnk").as("rk"), col("t.id").as("vec_id"))
+  }
 
   /** Quantizer maintenance: per-(cluster, dim) deltas against the frozen
     * panel, merged into the standing state. */

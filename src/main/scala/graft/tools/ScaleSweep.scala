@@ -3,6 +3,7 @@ package graft.tools
 import graft.SparkEntry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Measured scale-up evidence (r16 verdict #4): generate a synthetic ×N
   * corpus — an ID-SHIFTED UNION of a base sf dir — and sweep named queries
@@ -206,7 +207,7 @@ object ScaleSweep {
             f"x$n%d ${x.min}%.2f s (r1 ${x.head}%.2f) " +
             f"ratio ${x.min / b.min}%.2f r1_ratio ${x.head / b.head}%.2f")
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             releaseRunState(spark)
             println(s"SCALE $name FAILED ${e.getClass.getSimpleName}: " +
               s"${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString}")

@@ -34,8 +34,8 @@ class ClusterSampleStreamSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
     val (c1, c2) = emb.splitAt(emb.size / 3)
     val sink = graft.ops.SpillMemo.scratchDir("graft-scbs-t-")
-    val agg = udaf(new graft.functions.BottomKByKeyAgg(n),
-      org.apache.spark.sql.Encoders.product[graft.functions.KeyedId])
+    val agg = graft.functions.TopK.cut(n,
+      graft.functions.TopKOrder.keyedId, graft.functions.TopKOrder.wholeRecord)
     val in = MemoryStream[(Long, Seq[Long])]
     val q = in.toDF().toDF("vec_id", "q")
       .crossJoin(broadcast(centsDf))

@@ -25,8 +25,8 @@ class KmvOverlapStreamSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val k = 8
-    val agg = udaf(new graft.functions.BottomKByKeyAgg(k),
-      org.apache.spark.sql.Encoders.product[graft.functions.KeyedId])
+    val agg = graft.functions.TopK.cut(k,
+      graft.functions.TopKOrder.keyedId, graft.functions.TopKOrder.wholeRecord)
     val sink = ops.SpillMemo.scratchDir("graft-skmv-t-")
     val in = MemoryStream[(String, Long)]
     val q = in.toDF().toDF("event_type", "uid")

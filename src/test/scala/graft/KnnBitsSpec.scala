@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * This spec runs [[graft.ops.Similarity.knnGraph]] at two widths and
   * checks each against an INDEPENDENT formulation (exploded-sum bucketing,
   * SQL-aggregate dot products, `row_number` window ranking — none of the
-  * operator's own bucket expression, TopKAgg heap, or zip_with kernels),
+  * operator's own bucket expression, TopK.Cut heap, or zip_with kernels),
   * plus the structural effects the width exists to control. */
 class KnnBitsSpec extends SparkSpec {
 

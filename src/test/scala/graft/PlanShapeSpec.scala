@@ -111,7 +111,7 @@ class PlanShapeSpec extends SparkSpec {
     val p = plan("x_sim_topk_rerank")
     assert(p.contains("BroadcastHashJoin"), s"the probe set must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"candidates come from probed clusters only:\n$p")
-    // per-query top-k runs through TopKAgg's partial reduction, never a
+    // per-query top-k runs through TopK.Cut's partial reduction, never a
     // window over the full scored candidate set
     assert(p.contains("ObjectHashAggregate"), s"top-k must heap-reduce map-side:\n$p")
   }
@@ -363,7 +363,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"),
       s"the posting lists must never sort-merge against the probe:\n$p")
     assert(p.contains("ObjectHashAggregate"),
-      s"the final cut must be the TopKAgg bounded heap:\n$p")
+      s"the final cut must be the TopK.Cut bounded heap:\n$p")
   }
 
   test("dsir: weight lookup broadcasts (64 rows) and the cut is TakeOrderedAndProject") {
@@ -435,7 +435,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(pp.contains("BroadcastHashJoin") || pp.contains("BroadcastNestedLoopJoin"),
       s"the query panel must broadcast over the corpus scan:\n$pp")
     assert(pp.contains("ObjectHashAggregate"),
-      s"the candidate pool must heap-reduce map-side (TopKScoredAgg):\n$pp")
+      s"the candidate pool must heap-reduce map-side (TopK.Cut):\n$pp")
     assert(!pp.contains("Window"), s"pool ranking must not window-sort:\n$pp")
     // Full greedy query: bounded relations only, never all-pairs or windows.
     val p = plan("x_sim_mmr")
