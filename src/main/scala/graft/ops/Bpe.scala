@@ -126,7 +126,8 @@ object Bpe {
     scala.collection.concurrent.TrieMap.empty[(Long, String), (String, String)]
 
   private def trainedPaths(s: SparkSession, d: String): (String, String) =
-    // synchronized + exit-cleaned scratch: see [[SpillMemo]].
+    // one training run yields BOTH relations, so this pair keeps its own
+    // locked memo: [[SpillMemo.spill]] serves one relation per derivation
     trainMemo.synchronized(trainMemo.getOrElseUpdate((SpillMemo.sessionId(s), d), {
       val dir = SpillMemo.scratchDir("graft-bpe-")
       val (summaries, toks) = train(Tables.documents(s, d))

@@ -251,29 +251,16 @@ object ChunkRouter {
   }
 
   /** The STANDING router state — resolution order is the serving-index
-    * standard ([[IndexStore]] latest epoch → session [[SpillMemo]] →
-    * derivation). A store whose maintenance closed epochs ≥ 1 serves the
+    * standard ([[IndexStore.latest]] epoch → session [[SpillMemo]] spill
+    * → derivation). A store whose maintenance closed epochs ≥ 1 serves the
     * promoted panel with NO plan change (the epoch-swap contract,
     * spec-pinned by `RouterEpochSpec`); the DuckDB oracles always derive
     * the epoch-0 state, so oracle checks assume an un-closed store —
     * the same caveat as the embedding quantizer's
     * ([[graft.tools.QuantizerClose]]). */
   private[graft] def standingState(s: SparkSession, d: String): DataFrame =
-    IndexStore.read(s, IndexStore.chunkRouterState, d).map { st =>
-      st.join(broadcast(st.agg(max(col("epoch")).as("epoch"))), "epoch")
-        .drop("epoch")
-    }.getOrElse {
-      val key = (SpillMemo.sessionId(s), d)
-      val path = memo.synchronized(memo.getOrElseUpdate(key, {
-        val out = SpillMemo.scratchDir("graft-chunkrouter-")
-        stateDerive(s, d).drop("epoch").write.mode("overwrite").parquet(out)
-        out
-      }))
-      s.read.parquet(path)
-    }
-
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
+    IndexStore.latest(s, IndexStore.chunkRouterState, d).getOrElse(
+      SpillMemo.spill(s, "chunkrouter", d)(stateDerive(s, d).drop("epoch")))
 
   // ------------------------------------------------------------------
   // the routed relation — the IVF inverted-lists artifact
@@ -295,19 +282,9 @@ object ChunkRouter {
     IndexStore.read(s, IndexStore.chunkRouted, d).getOrElse {
       val epoch = IndexStore.read(s, IndexStore.chunkRouterState, d)
         .map(_.agg(max(col("epoch"))).head.getLong(0)).getOrElse(-1L)
-      val key = (SpillMemo.sessionId(s), d, epoch)
-      val path = routedMemo.synchronized(routedMemo.getOrElseUpdate(key, {
-        val out = SpillMemo.scratchDir("graft-chunkrouted-")
-        routedOf(Search.chunkVectors(s, d),
-          Lineage.cut(panelOf(standingState(s, d))))
-          .write.mode("overwrite").parquet(out)
-        out
-      }))
-      s.read.parquet(path)
+      SpillMemo.spill(s, "chunkrouted", d, epoch)(
+        routedOf(Search.chunkVectors(s, d), Lineage.cut(panelOf(standingState(s, d)))))
     }
-
-  private val routedMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String, Long), String]
 
   /** Route a chunk-vector relation under a panel — one map-side kernel
     * pass ([[withCell]]), (chunk_key, cvec, bucket). */

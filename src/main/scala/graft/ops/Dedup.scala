@@ -175,33 +175,19 @@ object Dedup {
       .select(col("doc_id"), expr(s"minhash_sig(shs, $nSeeds)").as("sig"))
   }
 
-  /** Memo of the computed signature relation: (session identity, table dir)
-    * → spilled parquet path. The signature table is the MinHash INDEX a
-    * production near-dup pipeline persists beside its corpus — [[minhashLsh]]
-    * bands it, [[jaccardEstimate]] and [[lshVerified]] read per-pair
-    * estimates off it, [[incremental]] probes it per ingest batch. Deriving
-    * it once per session and spilling to parquet (eviction-immune, like
-    * [[pairsMemo]]) gives every consumer the persisted-index read path
-    * instead of re-running shingle→md5→min per query; the derivation cost is
-    * the first consumer's first sample (SpillMemo read-back semantics,
-    * recorded in `bench_full.json`). */
-  private val sigMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
-
-  /** The per-session materialized signature index ([[sigMemo]]) — or the
-    * cross-session [[IndexStore]] copy when one is configured (the
-    * "persists beside its corpus" deployment this scaladoc describes,
-    * made real; `IndexPersistSpec` pins mode equality). */
+  /** The signature relation, served from the cross-session [[IndexStore]]
+    * when one is configured, else spilled once per session
+    * ([[IndexStore.served]]; `IndexPersistSpec` pins mode equality). The
+    * signature table is the MinHash INDEX a production near-dup pipeline
+    * persists beside its corpus — [[minhashLsh]] bands it,
+    * [[jaccardEstimate]] and [[lshVerified]] read per-pair estimates off
+    * it, [[incremental]] probes it per ingest batch. Spilling to parquet
+    * (eviction-immune, like [[minhashLsh]]'s pairs) gives every consumer
+    * the persisted-index read path instead of re-running shingle→md5→min
+    * per query; the derivation cost is the first consumer's first sample
+    * ([[SpillMemo]] read-back semantics, recorded in `bench_full.json`). */
   private[graft] def signatures(s: SparkSession, d: String): DataFrame =
-    IndexStore.read(s, IndexStore.minhashSignatures, d).getOrElse {
-      val key = (SpillMemo.sessionId(s), d)
-      val path = sigMemo.synchronized(sigMemo.getOrElseUpdate(key, {
-        val out = SpillMemo.scratchDir("graft-minhashsig-")
-        minhashSignatures(s, d).write.mode("overwrite").parquet(out)
-        out
-      }))
-      s.read.parquet(path)
-    }
+    IndexStore.served(s, IndexStore.minhashSignatures, d)(minhashSignatures(s, d))
 
   /** MinHash + LSH banding: docs sharing any of the 8 band keys become a
     * candidate pair. This is the scale path for near-dedup — signature is
@@ -214,30 +200,17 @@ object Dedup {
     * candidate self-join, so the whole shingle→md5→min-agg subtree would be
     * planned and executed twice (and, in the earlier 8-way unionAll
     * formulation, up to 16×). Banding itself is a single map-side explode
-    * over the materialized signatures. */
-  def minhashLsh(s: SparkSession, d: String): DataFrame = {
-    val key = (SpillMemo.sessionId(s), d)
-    // synchronized: TrieMap's update is atomic but the spill thunk is not —
-    // see [[SpillMemo]] (which also registers the dir for JVM-exit cleanup).
-    val path = pairsMemo.synchronized(pairsMemo.getOrElseUpdate(key, {
-      val out = SpillMemo.scratchDir("graft-lshpairs-")
-      lshPairs(signatures(s, d))
-        .write.mode("overwrite").parquet(out)
-      out
-    }))
-    s.read.parquet(path)
-  }
-
-  /** Memo of the [[minhashLsh]] candidate-pair relation: (session identity,
-    * table dir) → spilled parquet path. The pair graph is consumed by four
-    * operators ([[minhashLsh]]'s own query, [[components]]'s fixpoint,
-    * [[pagerank]], [[triangles]]) — the [[componentLabels]] "persisted
-    * index" shape applied one level down: derive shingles → signatures →
-    * band join once per session, then every graph consumer reads back a
-    * tiny (doc_a, doc_b) long-pair table. Parquet, not cache, for the same
-    * eviction-immunity reasons. */
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
+    * over the materialized signatures.
+    *
+    * The candidate-pair relation is spilled once per session: the pair
+    * graph is consumed by four operators ([[minhashLsh]]'s own query,
+    * [[components]]'s fixpoint, [[pagerank]], [[triangles]]) — the
+    * [[componentLabels]] "persisted index" shape applied one level down:
+    * derive shingles → signatures → band join once per session, then every
+    * graph consumer reads back a tiny (doc_a, doc_b) long-pair table.
+    * Parquet, not cache, for the same eviction-immunity reasons. */
+  def minhashLsh(s: SparkSession, d: String): DataFrame =
+    SpillMemo.spill(s, "lshpairs", d)(lshPairs(signatures(s, d)))
 
   /** The (doc_id, band, bkey) LSH band relation of a signature frame — one
     * map-side explode, 8 rows per doc. Shared by the self-join candidate
@@ -572,57 +545,31 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("edge_comp"), col("doc_id")).as("comp"))
   }
 
-  /** Memo of [[componentLabels]] results: (session identity, table dir,
-    * reliable-checkpoint mode) → spilled parquet path. Keyed on the
-    * checkpoint mode so LineageSpec's reliable-mode run really re-executes
-    * the iteration under reliable cuts instead of reading the local-mode
-    * spill. */
-  private val labelsMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String, Boolean), String]
-
   /** The iterative min-label fixpoint over the LSH candidate graph (see
-    * [[components]]), spilled + memoized per session. */
-  private def componentLabels(s: SparkSession, d: String): DataFrame = {
-    val key = (SpillMemo.sessionId(s), d,
-      s.conf.getOption(Lineage.reliableConf).exists(_.toBoolean))
-    val path = labelsMemo.getOrElseUpdate(key, {
-      val out = SpillMemo.scratchDir("graft-complabels-")
-      computeComponentLabels(s, d).write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+    * [[components]]), spilled per (session, table dir, reliable-checkpoint
+    * mode). Keyed on the checkpoint mode so LineageSpec's reliable-mode run
+    * really re-executes the iteration under reliable cuts instead of
+    * reading the local-mode spill. */
+  private def componentLabels(s: SparkSession, d: String): DataFrame =
+    SpillMemo.spill(s, "complabels", d, reliableMode(s))(
+      labelsFromEdges(minhashLsh(s, d)))
 
-  private def computeComponentLabels(s: SparkSession, d: String): DataFrame =
-    labelsFromEdges(minhashLsh(s, d))
-
-  /** Memo for [[standingComponentLabels]] — same keying discipline as
-    * [[labelsMemo]]. */
-  private val standingLabelsMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String, Boolean), String]
+  private def reliableMode(s: SparkSession): Boolean =
+    s.conf.getOption(Lineage.reliableConf).exists(_.toBoolean)
 
   /** Component labels of the STANDING corpus only (`doc_id % newMod !=
     * newRem` on both edge endpoints): the persisted label table an ingest
     * probe inherits split/cluster identity from
     * ([[Sampling.splitLeakproofIngest]]). Covers edge-incident standing
     * docs; a standing doc with no near-dup edge is its own singleton
-    * component (callers coalesce to the doc id — the [[components]]
-    * convention). */
-  private[graft] def standingComponentLabels(s: SparkSession, d: String): DataFrame = {
-    val key = (SpillMemo.sessionId(s), d,
-      s.conf.getOption(Lineage.reliableConf).exists(_.toBoolean))
-    val path = standingLabelsMemo.synchronized(standingLabelsMemo.getOrElseUpdate(key, {
-      val out = SpillMemo.scratchDir("graft-scomplabels-")
-      val standing = minhashLsh(s, d)
-        .filter(col("doc_a") % newMod =!= newRem && col("doc_b") % newMod =!= newRem)
-      labelsFromEdges(standing).write.mode("overwrite").parquet(out)
-      out
-    }))
-    s.read.parquet(path)
-  }
+    * convention). Spilled under [[componentLabels]]' keying. */
+  private[graft] def standingComponentLabels(s: SparkSession, d: String): DataFrame =
+    SpillMemo.spill(s, "scomplabels", d, reliableMode(s))(
+      labelsFromEdges(minhashLsh(s, d)
+        .filter(col("doc_a") % newMod =!= newRem && col("doc_b") % newMod =!= newRem)))
 
   /** The min-label fixpoint over an arbitrary (doc_a, doc_b) edge set —
-    * [[computeComponentLabels]]'s loop, shared with the standing-only
+    * [[componentLabels]]' loop, shared with the standing-only
     * variant. */
   private[graft] def labelsFromEdges(edges: DataFrame): DataFrame = {
     val adj = Lineage.cut(
@@ -1140,24 +1087,13 @@ object Dedup {
     * bytes moved per window instead of ~L words; collisions 2⁻⁶⁴); the
     * string key here keeps the relation byte-comparable to the DuckDB
     * oracle. */
-  /** Memo of the span cut lists: (session id, table dir) → spilled parquet.
-    * Two consumers ([[dupSpans]] itself and the [[dupSpanStrip]] savings
-    * report) read one derivation per corpus snapshot — the
-    * compute-once-read-many pattern of the recall-truth memo
-    * ([[graft.ops.Similarity]]); first consumer carries the cost, visible
-    * in `bench_full.json`'s cold sample. */
-  private val spansMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
-
-  def dupSpans(s: SparkSession, d: String): DataFrame = {
-    val key = (SpillMemo.sessionId(s), d)
-    val path = spansMemo.synchronized(spansMemo.getOrElseUpdate(key, {
-      val out = SpillMemo.scratchDir("graft-dupspans-")
-      dupSpansOf(Tables.documents(s, d)).write.mode("overwrite").parquet(out)
-      out
-    }))
-    s.read.parquet(path)
-  }
+  /** The span cut lists, spilled per session. Two consumers
+    * ([[dupSpans]] itself and the [[dupSpanStrip]] savings report) read one
+    * derivation per corpus snapshot — the compute-once-read-many pattern of
+    * the recall-truth memo ([[graft.ops.Similarity]]); first consumer
+    * carries the cost, visible in `bench_full.json`'s cold sample. */
+  def dupSpans(s: SparkSession, d: String): DataFrame =
+    SpillMemo.spill(s, "dupspans", d)(dupSpansOf(Tables.documents(s, d)))
 
   /** CUT-LIST APPLICATION (`x_dedup_span_strip`): what [[dupSpans]]'
     * repeated-span removal actually saves — per document, total tokens,

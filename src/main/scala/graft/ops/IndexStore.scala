@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, max}
 
 /** Cross-session persistence for the SERVING INDEXES (round-13 verdict #6).
   *
@@ -110,6 +111,21 @@ object IndexStore {
         }
         Some(s.read.parquet(p.toString))
       }
+    }
+
+  /** The serving-index resolution order in one place: the store's `name`
+    * relation when a store is configured and carries it, else the session
+    * spill of `derive` ([[SpillMemo.spill]], tagged `name`, keyed on `d`). */
+  def served(s: SparkSession, name: String, d: String)(derive: => DataFrame): DataFrame =
+    read(s, name, d).getOrElse(SpillMemo.spill(s, name, d)(derive))
+
+  /** A VERSIONED relation's latest epoch (`epoch` column dropped), or None
+    * like [[read]] — a maintenance close appends epoch e+1 and serving
+    * flips to it with no plan change. */
+  def latest(s: SparkSession, name: String, d: String): Option[DataFrame] =
+    read(s, name, d).map { st =>
+      st.join(broadcast(st.agg(max(col("epoch")).as("epoch"))), "epoch")
+        .drop("epoch")
     }
 
   /** Scheme-qualified absolute form of a dir spec, for corpus identity

@@ -53,18 +53,21 @@ object Lineage {
     if (reliable(df)) df.checkpoint(eager = true) else df.localCheckpoint(eager = false)
 }
 
-/** Scratch allocation for the session memos that spill derived relations to
-  * parquet ([[Dedup]]'s LSH pair graph, [[Similarity]]'s converged k-means
-  * assignment, [[Bpe]]'s trained merges). Two contracts the bare
-  * `Files.createTempDirectory` calls lacked:
+/** The session memo for derived relations, and the scratch it spills to.
   *
-  *  - every allocated dir is registered for recursive deletion at JVM exit,
-  *    so a long-lived driver that churns sessions does not leak spilled
-  *    relations into the tmpdir;
-  *  - callers synchronize their memo's getOrElseUpdate on the memo itself
-  *    (TrieMap's update is atomic but the compute thunk is not — two racing
-  *    threads could each spill, leaking a dir and double-running the
-  *    derivation).
+  * [[spill]] is the one place that decides when a derived relation is
+  * reused within a session: it runs the derivation at most once per
+  * (session id, tag, key parts), writes the result to parquet under an
+  * exit-cleaned [[scratchDir]] and returns the read-back. The once-only
+  * guarantee is per key, enforced by `spill` itself: two different
+  * relations derive concurrently, and a derivation that spills another
+  * relation nests without deadlock. A derivation that throws leaves no
+  * entry, so the next caller derives again. Serving indexes resolve
+  * through [[IndexStore.served]], which reads a configured store first.
+  *
+  * Every allocated scratch dir is registered for recursive deletion at JVM
+  * exit, so a long-lived driver that churns sessions does not leak spilled
+  * relations into the tmpdir.
   *
   * READ-BACK SEMANTICS, for anyone comparing bench numbers: a memoized
   * query's warm samples measure a parquet read of the spilled relation, not
@@ -119,6 +122,33 @@ private[graft] object SpillMemo {
     val p = java.nio.file.Files.createTempDirectory(scratchRoot, prefix)
     created.add(p)
     p.toString
+  }
+
+  /** One memo entry: the derivation runs inside the lazy val's
+    * initializer, which holds this entry's monitor only — never a lock
+    * shared with other keys. The thunk is dropped once spilled so an entry
+    * never pins its session. */
+  private final class Spilled(tag: String, private var derive: () => DataFrame) {
+    lazy val dir: String = {
+      val out = scratchDir(s"graft-$tag-")
+      derive().write.mode("overwrite").parquet(out)
+      derive = null
+      out
+    }
+  }
+
+  private val spills =
+    scala.collection.concurrent.TrieMap.empty[(Long, String, List[Any]), Spilled]
+
+  /** `derive` spilled once per (session, `tag`, `key`) and read back. */
+  def spill(s: org.apache.spark.sql.SparkSession, tag: String, key: Any*)(
+      derive: => DataFrame): DataFrame = {
+    val k = (sessionId(s), tag, key.toList)
+    val entry = spills.getOrElseUpdate(k, new Spilled(tag, () => derive))
+    val dir =
+      try entry.dir
+      catch { case NonFatal(e) => spills.remove(k, entry); throw e }
+    s.read.parquet(dir)
   }
 
   /** `spark.local.dir` value for the runtime mains: shuffle/block scratch

@@ -97,24 +97,12 @@ object MatView {
         max(col("vc")).as("max_vc"),
         expr(s"hll_sketch_agg(user_id, $hllLgK)").as("users_hll"))
 
-  /** Session memo for the spilled base view ([[SpillMemo]] contract). */
-  private val mvMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
-
   /** The materialized base view: built once per (session, dir), spilled to
     * parquet (HLL registers ride as a BINARY column), read back columnar on
     * every refresh — the deployment shape where the view lives on the lake
     * and refresh jobs never see base rows. */
-  private[graft] def baseView(s: SparkSession, d: String): DataFrame = {
-    val key = (SpillMemo.sessionId(s), d)
-    val path = mvMemo.synchronized(mvMemo.getOrElseUpdate(key, {
-      val out = SpillMemo.scratchDir("graft-matview-")
-      state(Tables.events(s, d).filter(!isDelta))
-        .write.mode("overwrite").parquet(out)
-      out
-    }))
-    s.read.parquet(path)
-  }
+  private[graft] def baseView(s: SparkSession, d: String): DataFrame =
+    SpillMemo.spill(s, "matview", d)(state(Tables.events(s, d).filter(!isDelta)))
 
   /** [[mvRefresh]]'s generic fold: view state ∪ increment state → merged
     * view (exposed for the algebra spec, which pins merge ≡ recompute on
@@ -215,23 +203,12 @@ object MatView {
     graft.streaming.EventPipeline.windowCounts(slice, key, watermark = None)
       .withColumnRenamed("total_interactions", "n")
 
-  /** Session memo for the spilled KPI base views (one per grain key —
-    * [[SpillMemo]] contract; the derivation cost is the first bench
-    * sample, like [[baseView]]). */
-  private val kpiMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String, String), String]
-
+  /** The spilled KPI base view, one per grain key (the derivation cost is
+    * the first bench sample, like [[baseView]]). */
   private[graft] def kpiBaseView(s: SparkSession, d: String,
-      key: String = "user_id"): DataFrame = {
-    val mk = (SpillMemo.sessionId(s), d, key)
-    val path = kpiMemo.synchronized(kpiMemo.getOrElseUpdate(mk, {
-      val out = SpillMemo.scratchDir(s"graft-matview-kpi-$key-")
-      kpiState(Tables.events(s, d).filter(!isDelta), key)
-        .write.mode("overwrite").parquet(out)
-      out
-    }))
-    s.read.parquet(path)
-  }
+      key: String = "user_id"): DataFrame =
+    SpillMemo.spill(s, "matview-kpi", d, key)(
+      kpiState(Tables.events(s, d).filter(!isDelta), key))
 
   /** Window-count merge = keyed addition (exposed for the algebra spec). */
   private[graft] def mergeKpi(view: DataFrame, delta: DataFrame,
@@ -357,10 +334,6 @@ object MatView {
         (col("b") * (histW * 100L) + histW * 50L).as("est_c"))
   }
 
-  /** Session memo for the spilled base histogram. */
-  private val histMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
-
   /** Incremental QUANTILE maintenance: fold the increment's histogram into
     * the materialized base histogram (plain bucket addition — the merge a
     * stored average can never have), then read the median estimate off the
@@ -374,16 +347,8 @@ object MatView {
   /** The materialized base histogram (non-delta slice), built once per
     * (session, dir) and spilled — shared by [[mvQuantile]] and the
     * streamed bands twin ([[graft.streaming.IngestStream]]). */
-  private[graft] def baseHist(s: SparkSession, d: String): DataFrame = {
-    val key = (SpillMemo.sessionId(s), d)
-    val path = histMemo.synchronized(histMemo.getOrElseUpdate(key, {
-      val out = SpillMemo.scratchDir("graft-matviewq-")
-      histState(Tables.events(s, d).filter(!isDelta))
-        .write.mode("overwrite").parquet(out)
-      out
-    }))
-    s.read.parquet(path)
-  }
+  private[graft] def baseHist(s: SparkSession, d: String): DataFrame =
+    SpillMemo.spill(s, "matviewq", d)(histState(Tables.events(s, d).filter(!isDelta)))
 
   /** Exact integer FLOOR division (b > 0): `(a - pmod(a, b)) div b`. Spark
     * `div` truncates toward zero while DuckDB `//` floors — they disagree

@@ -369,26 +369,17 @@ object Search {
         col("score_m"), col("n_terms"), col("rnk"))
   }
 
-  /** Session memo for the member chunk-hit relation — it feeds BOTH the
+  /** The member chunk-hit relation, spilled per session — it feeds BOTH the
     * chunk emission and the document rollup (the [[ltrFeatures]] lesson:
     * shared upstream relations are spilled, never re-derived per query). */
-  private val chunkMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
-
-  private[graft] def chunkHits(s: SparkSession, d: String): DataFrame = {
-    val key = (SpillMemo.sessionId(s), d)
-    val path = chunkMemo.synchronized(chunkMemo.getOrElseUpdate(key, {
-      val out = SpillMemo.scratchDir("graft-chunkhits-")
+  private[graft] def chunkHits(s: SparkSession, d: String): DataFrame =
+    SpillMemo.spill(s, "chunkhits", d) {
       val docs = Tables.documents(s, d)
       chunkProbe(
         docs.filter(col("doc_id") % searchStride === 0)
           .select(col("doc_id"), col("text")),
         bm25IndexDocs(chunkCorpus(docs)))
-        .write.mode("overwrite").parquet(out)
-      out
-    }))
-    s.read.parquet(path)
-  }
+    }
 
   /** CHUNK-LEVEL member search: BM25 over the chunk corpus, emitted with
     * the chunk key decomposed back to (parent doc, chunk offset) — the
@@ -508,24 +499,12 @@ object Search {
 
   /** The CHUNK-VECTOR relation (chunk_key, cvec) over the full chunk
     * corpus — the dense half of the RAG serving index, resolving like
-    * every serving relation: [[IndexStore]] → session [[SpillMemo]] →
-    * derivation. At 100 TB this is the chunk-id-keyed embedding store the
+    * every serving relation through [[IndexStore.served]] (store →
+    * session spill → derivation). At 100 TB this is the chunk-id-keyed embedding store the
     * ANN ladder's bucketed rungs index; the brute probe below is the
     * ladder's baseline rung over that same relation. */
   private[graft] def chunkVectors(s: SparkSession, d: String): DataFrame =
-    IndexStore.read(s, IndexStore.chunkVectors, d).getOrElse {
-      val key = (SpillMemo.sessionId(s), d)
-      val path = chunkVecMemo.synchronized(chunkVecMemo.getOrElseUpdate(key, {
-        val out = SpillMemo.scratchDir("graft-chunkvec-")
-        chunkVectorsDerive(s, d).write.mode("overwrite").parquet(out)
-        out
-      }))
-      s.read.parquet(path)
-    }
-
-  /** Session memo for the spilled chunk-vector relation. */
-  private val chunkVecMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
+    IndexStore.served(s, IndexStore.chunkVectors, d)(chunkVectorsDerive(s, d))
 
   /** The from-scratch chunk-vector derivation `tools.IndexBuild`
     * persists: one in-row pass over the chunk corpus. */
@@ -901,23 +880,11 @@ object Search {
     * trainer and the reranker read the logged table, they don't re-run
     * retrieval — so the store/memo posture here is the honest production
     * shape, not just a bench trick. Resolution order matches every other
-    * serving index: [[IndexStore]] (cross-session, built by
-    * `graft.tools.IndexBuild`) → session [[SpillMemo]] spill →
-    * derivation; `IndexPersistSpec` pins store ≡ memo. */
+    * serving index ([[IndexStore.served]]: the cross-session store built
+    * by `graft.tools.IndexBuild` → session spill → derivation);
+    * `IndexPersistSpec` pins store ≡ memo. */
   def ltrFeatures(s: SparkSession, d: String): DataFrame =
-    IndexStore.read(s, IndexStore.ltrFeatureLog, d).getOrElse {
-      val key = (SpillMemo.sessionId(s), d)
-      val path = ltrMemo.synchronized(ltrMemo.getOrElseUpdate(key, {
-        val out = SpillMemo.scratchDir("graft-ltrfeat-")
-        ltrFeaturesDerive(s, d).write.mode("overwrite").parquet(out)
-        out
-      }))
-      s.read.parquet(path)
-    }
-
-  /** Session memo for the spilled member feature log. */
-  private val ltrMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
+    IndexStore.served(s, IndexStore.ltrFeatureLog, d)(ltrFeaturesDerive(s, d))
 
   /** The from-scratch derivation of [[ltrFeatures]] — what
     * `graft.tools.IndexBuild` persists and the session memo spills. */
@@ -1170,10 +1137,6 @@ object Search {
         when(col("bm_top1") === col("lm_top1"), 1L).otherwise(0L).as("top1_agree"))
   }
 
-  /** Session memo for [[indexMerge]]'s spilled base TF state. */
-  private val tfMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
-
   /** INCREMENTAL INDEX MERGE — fold an arriving slice into a stored index
     * WITHOUT re-tokenizing the standing corpus, the maintenance job that
     * keeps a 100 TB index current: a full rebuild re-reads and re-tokenizes
@@ -1201,17 +1164,12 @@ object Search {
     * metadata read, not a scan. */
   def indexMerge(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val key = (SpillMemo.sessionId(s), d)
-    val basePath = tfMemo.synchronized(tfMemo.getOrElseUpdate(key, {
-      val out = SpillMemo.scratchDir("graft-basetf-")
+    val tfBase = SpillMemo.spill(s, "basetf", d)(
       tokens(docs.filter(col("doc_id") % Similarity.knnBatchMod =!= 7))
-        .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
-        .write.mode("overwrite").parquet(out)
-      out
-    }))
+        .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf")))
     val tfDelta = tokens(docs.filter(col("doc_id") % Similarity.knnBatchMod === 7))
       .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
-    val tf = s.read.parquet(basePath).unionAll(tfDelta)
+    val tf = tfBase.unionAll(tfDelta)
     indexFromState(tf, docs.agg(count(lit(1)).as("n_docs"))).postings
       .select(col("token"), col("doc_id"), col("imp_m"))
   }
@@ -1921,24 +1879,12 @@ object Search {
     * ([[phraseIndexSearch]], [[phraseIndexSearchN]], [[proximityRerank]]).
     * Corpus-snapshot-static by construction, so it resolves like every
     * other serving index (r16 verdict #1 — this was the ONE serving-family
-    * derivation that re-tokenized the corpus per run): [[IndexStore]]
-    * (cross-session, built by `graft.tools.IndexBuild`) → session
-    * [[SpillMemo]] spill → derivation. */
+    * derivation that re-tokenized the corpus per run):
+    * [[IndexStore.served]] (the cross-session store built by
+    * `graft.tools.IndexBuild` → session spill → derivation). */
   private[graft] def positionalIndex(s: SparkSession, d: String): DataFrame =
-    IndexStore.read(s, IndexStore.phrasePostings, d).getOrElse {
-      val key = (SpillMemo.sessionId(s), d)
-      val path = posMemo.synchronized(posMemo.getOrElseUpdate(key, {
-        val out = SpillMemo.scratchDir("graft-posidx-")
-        positionalIndexOf(Tables.documents(s, d))
-          .write.mode("overwrite").parquet(out)
-        out
-      }))
-      s.read.parquet(path)
-    }
-
-  /** Session memo for the spilled positional index. */
-  private val posMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
+    IndexStore.served(s, IndexStore.phrasePostings, d)(
+      positionalIndexOf(Tables.documents(s, d)))
 
   /** The from-scratch positional build over an arbitrary (doc_id, text)
     * corpus: one in-row posexplode then one (token, doc) grouping — what
@@ -1983,19 +1929,7 @@ object Search {
     * `x_search_phrase_n` (r16 verdict #1); like the postings it is
     * snapshot-static, so: [[IndexStore]] → session spill → derivation. */
   private[graft] def phraseWorkloadTable(s: SparkSession, d: String): DataFrame =
-    IndexStore.read(s, IndexStore.phraseWorkload, d).getOrElse {
-      val key = (SpillMemo.sessionId(s), d)
-      val path = workloadMemo.synchronized(workloadMemo.getOrElseUpdate(key, {
-        val out = SpillMemo.scratchDir("graft-phrasewl-")
-        phraseWorkloadDerive(s, d).write.mode("overwrite").parquet(out)
-        out
-      }))
-      s.read.parquet(path)
-    }
-
-  /** Session memo for the spilled phrase workload. */
-  private val workloadMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
+    IndexStore.served(s, IndexStore.phraseWorkload, d)(phraseWorkloadDerive(s, d))
 
   /** Mine the workload table from the corpus: one n-gram group-by per
     * length. Each length's cut is a `TakeOrderedAndProject` (bounded heap,

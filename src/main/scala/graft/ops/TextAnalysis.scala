@@ -240,29 +240,22 @@ object TextAnalysis {
         expr(s"CAST(${Sampling.log2fpSpark("n")} - (sc div n) AS BIGINT)")
           .as("entropy_fp"))
 
-  /** Memo of the per-doc feature BASE relation: (session identity, table
-    * dir) → spilled parquet path — the [[graft.ops.Dedup]] `signatures`
-    * pattern applied to the feature family. The base is the compact
-    * per-doc integer row (counts, content hash, surprisal sums) that
+  /** The per-session materialized feature base: one row per doc with
+    * `(doc_id, lang, n_words, n_chars_m, n_stop, n_punct, h, n_tokens,
+    * bits_sum)` — the [[graft.ops.Dedup]] `signatures` pattern applied to
+    * the feature family. The base is the compact per-doc integer row that
     * [[docFeatures]], [[modelGate]] and [[modelTrain]] all consume;
     * deriving it once per session means the corpus TEXT is read once per
     * snapshot and every consumer reads back a few-ints-per-doc parquet —
     * at 100 TB that read is orders of magnitude under a text re-scan.
     * Derivation cost lands in the first consumer's first bench sample
-    * (SpillMemo read-back semantics). */
-  private val baseMemo =
-    scala.collection.concurrent.TrieMap.empty[(Long, String), String]
-
-  /** The per-session materialized feature base ([[baseMemo]]): one row per
-    * doc with `(doc_id, lang, n_words, n_chars_m, n_stop, n_punct, h,
-    * n_tokens, bits_sum)`. The map-side family (counts + md5) fuses into
-    * one scan; the [[surprisal]] sums need the token-frequency join and
-    * contribute their own passes — once per session, not per query. */
+    * ([[SpillMemo]] read-back semantics). The map-side family (counts +
+    * md5) fuses into one scan; the [[surprisal]] sums need the
+    * token-frequency join and contribute their own passes — once per
+    * session, not per query. */
   private[ops] def docBase(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val key = (SpillMemo.sessionId(s), d)
-    val path = baseMemo.synchronized(baseMemo.getOrElseUpdate(key, {
-      val out = SpillMemo.scratchDir("graft-docbase-")
+    SpillMemo.spill(s, "docbase", d) {
       val en = stoplists.toMap.apply("en")
       val docs = Tables.documents(s, d)
       val mapSide = docs
@@ -284,10 +277,7 @@ object TextAnalysis {
       mapSide.join(sp, Seq("doc_id"), "left")
         .withColumn("n_tokens", coalesce(col("n_tokens"), lit(0L)))
         .withColumn("bits_sum", coalesce(col("bits_sum"), lit(0L)))
-        .write.mode("overwrite").parquet(out)
-      out
-    }))
-    s.read.parquet(path)
+    }
   }
 
   /** Per-document FEATURE TABLE — the labeled matrix a quality-classifier

@@ -56,16 +56,7 @@ object IndexBuild {
     * from the corpus; reading a store while building one would silently
     * copy instead of build. */
   def buildTo(s: SparkSession, sfDir: String, storeDir: String): Unit = {
-    val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def stage[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      stages += name -> (System.nanoTime() - t0) / 1e9
-      a
-    }
-    require(s.conf.getOption(IndexStore.indexDirConf).forall(_.isEmpty),
-      s"unset ${IndexStore.indexDirConf} while building — the build must " +
-        "derive from the corpus, not read an existing store")
+    val stage = new Stages(s)
     // corpus-id keyspace guard (ADVICE r15): the multimodal fingerprint
     // tables classify corpus vs synthetic-variant rows by fixed id bands
     // starting at 10M — a corpus whose ids reach that band would be
@@ -76,7 +67,7 @@ object IndexBuild {
         org.apache.spark.sql.functions.col("doc_id"))).head.getLong(0)
     graft.ops.MultimodalPipeline.requireOriginalId(maxDoc)
     stage("lexical_bm25") {
-  val idx = Search.ingestIndex(s, sfDir)
+      val idx = Search.ingestIndex(s, sfDir)
       idx.postings.write.mode("overwrite")
         .parquet(s"$storeDir/${IndexStore.bm25Postings}")
       idx.tokenDf.write.mode("overwrite")
@@ -88,14 +79,14 @@ object IndexBuild {
     // re-derive (and re-materialize) the whole lexical index a second time
     // only to discard it
     stage("bm25_forward") {
-  Search.standingForward(s, sfDir).write.mode("overwrite")
+      Search.standingForward(s, sfDir).write.mode("overwrite")
         .parquet(s"$storeDir/${IndexStore.bm25Forward}")
     }
     // the Dirichlet-LM serving quartet (x_search_lmql_in / s_lmql_stream):
     // pruned tf postings with collection frequencies, doc lengths, term df,
     // and the two 1-row broadcasts folded into one stats relation
     stage("lexical_lm") {
-  val lm = Search.lmIngestIndex(s, sfDir)
+      val lm = Search.lmIngestIndex(s, sfDir)
       lm.postings.write.mode("overwrite")
         .parquet(s"$storeDir/${IndexStore.lmPostings}")
       lm.dlr.write.mode("overwrite")
@@ -137,7 +128,7 @@ object IndexBuild {
         .parquet(s"$storeDir/${IndexStore.lmMemberStats}")
     }
     stage("nav_graph") {
-  Similarity.navGraph(s, sfDir).write.mode("overwrite")
+      Similarity.navGraph(s, sfDir).write.mode("overwrite")
         .parquet(s"$storeDir/${IndexStore.navGraph}")
     }
     // the standing bucketed probe index (per-vector IVF-style bucket
@@ -145,18 +136,18 @@ object IndexBuild {
     // seeds from it, and the per-session lineage cut re-derived AND
     // re-wrote it per stream run (GraphProfile r16 attribution)
     stage("knn_probe_index") {
-  Similarity.standingProbeIndex(s, sfDir).write.mode("overwrite")
+      Similarity.standingProbeIndex(s, sfDir).write.mode("overwrite")
         .parquet(s"$storeDir/${IndexStore.knnProbeIndex}")
     }
     stage("minhash_signatures") {
-  Dedup.signatures(s, sfDir).write.mode("overwrite")
+      Dedup.signatures(s, sfDir).write.mode("overwrite")
         .parquet(s"$storeDir/${IndexStore.minhashSignatures}")
     }
     // the visual near-dup family's standing fingerprint relation: built
     // once per snapshot (the decode is THE cost at scale), served to the
     // batch probe and the streamed ingest verdict alike
     stage("multimodal_codec") {
-  graft.ops.MultimodalPipeline.imagePhash(s, sfDir).write.mode("overwrite")
+      graft.ops.MultimodalPipeline.imagePhash(s, sfDir).write.mode("overwrite")
         .parquet(s"$storeDir/${IndexStore.imagePhash}")
       graft.ops.MultimodalPipeline.videoPhash(s, sfDir).write.mode("overwrite")
         .parquet(s"$storeDir/${IndexStore.videoPhash}")
@@ -191,7 +182,7 @@ object IndexBuild {
     // the standing CHUNK index (passage-unit BM25 trio — the RAG serving
     // index; arriving docs' chunks excluded, same stance as bm25_*)
     stage("chunk_postings") {
-  val chunkIdx = Search.chunkIngestIndexDerive(s, sfDir)
+      val chunkIdx = Search.chunkIngestIndexDerive(s, sfDir)
       chunkIdx.postings.write.mode("overwrite")
         .parquet(s"$storeDir/${IndexStore.chunkPostings}")
       chunkIdx.tokenDf.write.mode("overwrite")
@@ -204,7 +195,7 @@ object IndexBuild {
     // top-n-gram phrase workload — the one serving family that
     // re-tokenized + re-mined the corpus per run
     stage("positional_phrases") {
-  Search.positionalIndexOf(graft.Tables.documents(s, sfDir))
+      Search.positionalIndexOf(graft.Tables.documents(s, sfDir))
         .write.mode("overwrite").parquet(s"$storeDir/${IndexStore.phrasePostings}")
       Search.phraseWorkloadDerive(s, sfDir)
         .write.mode("overwrite").parquet(s"$storeDir/${IndexStore.phraseWorkload}")
@@ -213,7 +204,7 @@ object IndexBuild {
     // vectors (the deterministic hash-projection device — a deployment
     // swaps in its encoder's vectors under the same relation contract)
     stage("chunk_vectors") {
-  Search.chunkVectorsDerive(s, sfDir)
+      Search.chunkVectorsDerive(s, sfDir)
         .write.mode("overwrite").parquet(s"$storeDir/${IndexStore.chunkVectors}")
     }
     // the VERSIONED quantizer state (epoch 0 = the snapshot's frozen
@@ -221,7 +212,7 @@ object IndexBuild {
     // deployment appends epoch e+1 after folding an arrival window in;
     // serving reads the latest epoch (Similarity.standingQuantizerState)
     stage("quantizer_state") {
-  Similarity.standingQuantizerStateDerive(s, sfDir)
+      Similarity.standingQuantizerStateDerive(s, sfDir)
         .write.mode("overwrite").parquet(s"$storeDir/${IndexStore.quantizerState}")
     }
     // the DENSE CHUNK ROUTER (epoch 0 = the snapshot's trained spherical
@@ -235,7 +226,23 @@ object IndexBuild {
       writeRouted(s, sfDir, storeDir)
     }
     writeMeta(s, sfDir, storeDir)
-    lastStageSeconds = stages.toSeq
+    lastStageSeconds = stage.seconds
+  }
+
+  /** One build's per-stage wall-time recorder. Creating it checks that the
+    * session has NO IndexStore configured — the build must derive from the
+    * corpus; reading a store while building one would silently copy. */
+  private final class Stages(s: SparkSession) {
+    require(s.conf.getOption(IndexStore.indexDirConf).forall(_.isEmpty),
+      s"unset ${IndexStore.indexDirConf} while building — the build must " +
+        "derive from the corpus, not read an existing store")
+    private val done = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    def apply(name: String)(f: => Unit): Unit = {
+      val t0 = System.nanoTime()
+      f
+      done += name -> (System.nanoTime() - t0) / 1e9
+    }
+    def seconds: Seq[(String, Double)] = done.toSeq
   }
 
   /** The router pair as a REBUILD unit (`only=router`): retrain the
@@ -247,16 +254,7 @@ object IndexBuild {
     * store's INDEX_META is rewritten so the recorded
     * `chunk_router_cells`/`chunk_router_probes` stay auditable. */
   def buildRouterTo(s: SparkSession, sfDir: String, storeDir: String): Unit = {
-    val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def stage[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      stages += name -> (System.nanoTime() - t0) / 1e9
-      a
-    }
-    require(s.conf.getOption(IndexStore.indexDirConf).forall(_.isEmpty),
-      s"unset ${IndexStore.indexDirConf} while building — the build must " +
-        "derive from the corpus, not read an existing store")
+    val stage = new Stages(s)
     val metaP = new org.apache.hadoop.fs.Path(s"$storeDir/INDEX_META.json")
     require(metaP.getFileSystem(s.sparkContext.hadoopConfiguration).exists(metaP),
       s"only=router rebuilds INTO an existing store; $storeDir has no " +
@@ -268,7 +266,7 @@ object IndexBuild {
       writeRouted(s, sfDir, storeDir)
     }
     writeMeta(s, sfDir, storeDir)
-    lastStageSeconds = stages.toSeq
+    lastStageSeconds = stage.seconds
   }
 
   private def writeRouterState(s: SparkSession, sfDir: String,
@@ -330,40 +328,19 @@ object IndexBuild {
     val spark = graft.GraftSession.local()
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      if (routerOnly) {
-        buildRouterTo(spark, sfDir, storeDir)
-        lastStageSeconds.foreach { case (name, sec) =>
-          println(f"[index-build] stage $name%s $sec%.1f s")
-        }
-        Seq(IndexStore.chunkRouterState, IndexStore.chunkRouted).foreach { name =>
-          val n = spark.read.parquet(s"$storeDir/$name").count()
-          println(s"[index-build] $name: $n rows")
-        }
-      } else {
-      buildTo(spark, sfDir, storeDir)
+      if (routerOnly) buildRouterTo(spark, sfDir, storeDir)
+      else buildTo(spark, sfDir, storeDir)
       lastStageSeconds.foreach { case (name, sec) =>
         println(f"[index-build] stage $name%s $sec%.1f s")
       }
-      // a quick inventory line so the operator sees what landed
-      Seq(IndexStore.bm25Postings, IndexStore.bm25TokenDf, IndexStore.bm25Stats,
-        IndexStore.bm25Forward, IndexStore.lmPostings, IndexStore.lmDocLen,
-        IndexStore.lmTokenDf, IndexStore.lmStats,
-        IndexStore.bm25MemberPostings, IndexStore.bm25MemberTokenDf,
-        IndexStore.bm25MemberStats, IndexStore.bm25MemberForward,
-        IndexStore.lmMemberPostings, IndexStore.lmMemberDocLen,
-        IndexStore.lmMemberTokenDf, IndexStore.lmMemberStats,
-        IndexStore.imagePhash,
-        IndexStore.videoPhash, IndexStore.audioFp, IndexStore.ltrFeatureLog,
-        IndexStore.navGraph, IndexStore.knnProbeIndex,
-        IndexStore.minhashSignatures, IndexStore.phrasePostings,
-        IndexStore.phraseWorkload, IndexStore.chunkVectors,
-        IndexStore.quantizerState, IndexStore.chunkRouterState,
-        IndexStore.chunkRouted)
-        .foreach { name =>
+      // an inventory of every relation directory in the store, so the
+      // operator sees what landed
+      val root = new org.apache.hadoop.fs.Path(storeDir)
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(root)
+        .filter(_.isDirectory).map(_.getPath.getName).sorted.foreach { name =>
           val n = spark.read.parquet(s"$storeDir/$name").count()
           println(s"[index-build] $name: $n rows")
         }
-      }
     } finally spark.stop()
   }
 }

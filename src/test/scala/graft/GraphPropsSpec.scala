@@ -20,7 +20,7 @@ class GraphPropsSpec extends SparkSpec {
 
   test("khopOf ≡ brute-force BFS-2 on random graphs") {
     val graphGen = Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, edgeGen)).map(_.distinct)
-    val prop = Prop.forAll(graphGen) { pairs =>
+    val prop = Prop.forAllNoShrink(graphGen) { pairs =>
       val got = Dedup.khopOf(pairs.toDF("doc_a", "doc_b"))
         .as[(Long, Long, Long)].collect()
         .map(r => r._1 -> ((r._2, r._3))).toMap
@@ -38,7 +38,7 @@ class GraphPropsSpec extends SparkSpec {
 
   test("trianglesOf ≡ brute-force enumeration on random graphs; partition-insensitive") {
     val graphGen = Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, edgeGen)).map(_.distinct)
-    val prop = Prop.forAll(graphGen, Gen.choose(1, 6)) { (pairs, parts) =>
+    val prop = Prop.forAllNoShrink(graphGen, Gen.choose(1, 6)) { (pairs, parts) =>
       val got = Dedup.trianglesOf(pairs.toDF("doc_a", "doc_b").repartition(parts))
         .as[(Long, Long, Long, Long)].collect()
         .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -64,7 +64,7 @@ class GraphPropsSpec extends SparkSpec {
 
   test("pagerankOf ≡ sequential integer fixed-point reference on random graphs") {
     val graphGen = Gen.choose(1, 30).flatMap(n => Gen.listOfN(n, edgeGen)).map(_.distinct)
-    val prop = Prop.forAll(graphGen, Gen.choose(1, 6)) { (pairs, parts) =>
+    val prop = Prop.forAllNoShrink(graphGen, Gen.choose(1, 6)) { (pairs, parts) =>
       val sym = (pairs ++ pairs.map(p => (p._2, p._1))).distinct
       val got = Dedup.pagerankOf(sym.toDF("src", "dst").repartition(parts))
         .as[(Long, Long)].collect().toMap
@@ -92,7 +92,7 @@ class GraphPropsSpec extends SparkSpec {
       op <- Gen.oneOf("U", "D", "I")
       t <- Gen.alphaLowerStr.map(_.take(4))
     } yield (id, op, t)))
-    val prop = Prop.forAll(baseGen, chGen) { (base, chs) =>
+    val prop = Prop.forAllNoShrink(baseGen, chGen) { (base, chs) =>
       // distinct seqs per key, in list order — last change wins
       val seqd = chs.zipWithIndex.map { case ((id, op, t), i) => (id, i.toLong, op, t) }
       val baseDf = base.map { case (id, t) => (id, "en", "web", t) }
@@ -123,7 +123,7 @@ class GraphPropsSpec extends SparkSpec {
   test("count-min never undercounts ANY key (structural guarantee, random multisets)") {
     val usersGen = Gen.choose(1, 120).flatMap(n =>
       Gen.listOfN(n, Gen.choose(1L, 30L)))
-    val prop = Prop.forAll(usersGen) { users =>
+    val prop = Prop.forAllNoShrink(usersGen) { users =>
       val ev = users.toDF("user_id")
       val counters = ev
         .select(explode(array(Sketches.cmCellStructs: _*)).as("c"))

@@ -123,7 +123,7 @@ class HashKernelsSpec extends SparkSpec {
     }
     val wordGen = Gen.oneOf("a", "bb", "ccc", "", "ü多", "z")
     val corpusGen = Gen.choose(3, 24).flatMap(n => Gen.listOfN(n, wordGen))
-    val prop = Prop.forAll(Gen.choose(1, 6).flatMap(k => Gen.listOfN(k, corpusGen))) { docs =>
+    val prop = Prop.forAllNoShrink(Gen.choose(1, 6).flatMap(k => Gen.listOfN(k, corpusGen))) { docs =>
       val df = docs.zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("doc_id", "words")
       val got = df.select($"doc_id",
           expr("shingles3(words)").as("shs"), expr("winnow_fp(words)").as("fps"))
@@ -163,7 +163,7 @@ class HashKernelsSpec extends SparkSpec {
     val stops = Seq("the", "a", "of", "and", "is")
     val wordGen = Gen.oneOf("the", "a", "of", "and", "is", "cat", "", "ü多", "zz")
     val corpusGen = Gen.choose(0, 30).flatMap(n => Gen.listOfN(n, wordGen))
-    val prop = Prop.forAll(Gen.choose(1, 6).flatMap(k => Gen.listOfN(k, corpusGen))) { docs =>
+    val prop = Prop.forAllNoShrink(Gen.choose(1, 6).flatMap(k => Gen.listOfN(k, corpusGen))) { docs =>
       val df = docs.zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("doc_id", "words")
       val got = df
         .select($"doc_id",

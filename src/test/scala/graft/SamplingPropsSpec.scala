@@ -25,7 +25,7 @@ class SamplingPropsSpec extends SparkSpec {
   test("quota sample ≡ driver-side smallest-md5 selection; caps exact; order-insensitive") {
     val quota = 3
     val corpusGen = Gen.choose(1, 60).flatMap(n => Gen.listOfN(n, rowGen)).map(_.distinct)
-    val prop = Prop.forAll(corpusGen, Gen.choose(1, 8)) { (rows, parts) =>
+    val prop = Prop.forAllNoShrink(corpusGen, Gen.choose(1, 8)) { (rows, parts) =>
       val df = rows.toDF("doc_id", "lang", "source").repartition(parts)
       val got = Sampling.quotaSampleDocs(df, quota)
         .as[(Long, String, String, Long)].collect().toSet
@@ -101,7 +101,7 @@ class SamplingPropsSpec extends SparkSpec {
   test("globalIndex is a dense 1..n permutation consistent with (shard, pos) order") {
     val corpusGen = Gen.choose(1, 80).flatMap(n =>
       Gen.listOfN(n, Gen.zip(Gen.choose(0L, 500L), Gen.oneOf("en", "de")))).map(_.distinctBy(_._1))
-    val prop = Prop.forAll(corpusGen, Gen.choose(1, 6)) { (rows, parts) =>
+    val prop = Prop.forAllNoShrink(corpusGen, Gen.choose(1, 6)) { (rows, parts) =>
       val got = Sampling.globalIndexDocs(
           rows.toDF("doc_id", "lang").repartition(parts))
         .as[(Long, String, Long, Long, Long)].collect()

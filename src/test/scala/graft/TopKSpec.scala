@@ -28,7 +28,7 @@ class TopKSpec extends SparkSpec {
   } yield (g.toLong, id, score)
 
   test("TopK aggregator ≡ row_number window on randomized inputs") {
-    val prop = Prop.forAll(Gen.choose(1, 120).flatMap(n => Gen.listOfN(n, rowGen))) { rows =>
+    val prop = Prop.forAllNoShrink(Gen.choose(1, 120).flatMap(n => Gen.listOfN(n, rowGen))) { rows =>
       // one candidate per (group, id): dedup ids so ranking is well-defined
       val data = rows.distinctBy(r => (r._1, r._2))
         .toDF("query_id", "neighbor_id", "score")
@@ -42,7 +42,7 @@ class TopKSpec extends SparkSpec {
   }
 
   test("score-preserving TopK ≡ window keeping the score, on randomized inputs") {
-    val prop = Prop.forAll(Gen.choose(1, 120).flatMap(n => Gen.listOfN(n, rowGen))) { rows =>
+    val prop = Prop.forAllNoShrink(Gen.choose(1, 120).flatMap(n => Gen.listOfN(n, rowGen))) { rows =>
       val data = rows.distinctBy(r => (r._1, r._2))
         .toDF("query_id", "neighbor_id", "score")
       val got = TopK.topKScored(data, "query_id", "score", "neighbor_id", 10)
@@ -85,7 +85,7 @@ class TopKSpec extends SparkSpec {
     } yield rows.distinctBy(r => (r._1, r._2)).zip(reps).flatMap {
       case (r, c) => List.fill(c)(r)
     }
-    val prop = Prop.forAll(dupGen) { rows =>
+    val prop = Prop.forAllNoShrink(dupGen) { rows =>
       val data = rows.toDF("query_id", "neighbor_id", "score")
       val got = TopK.topKDistinct(data, "query_id", "score", "neighbor_id", 10)
         .as[(Long, Long, Long)].collect().toSet

@@ -27,7 +27,7 @@ class WindowPropsSpec extends SparkSpec {
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
 
   test("windowed counts equal the brute-force two-window expansion") {
-    val prop = Prop.forAll(Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, eventGen))) { events =>
+    val prop = Prop.forAllNoShrink(Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, eventGen))) { events =>
       val df = events
         .map { case (u, off) => (u, new java.sql.Timestamp((base + off) * 1000L)) }
         .toDF("user_id", "ts")
