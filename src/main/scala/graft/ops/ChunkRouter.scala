@@ -216,15 +216,16 @@ object ChunkRouter {
   }
 
   /** The trained epoch-0 state: spherical Lloyd to convergence (or the
-    * [[maxRounds]] cap) over the STANDING chunk vectors, then the final
-    * assignment's mergeable M-step. Convergence = assignment unchanged —
+    * [[maxRounds]] cap) over the STANDING slice of the chunk-vector
+    * relation `cv` ([[Search.chunkVectors]], or the store's copy while a
+    * store is being built), then the final assignment's mergeable M-step. Convergence = assignment unchanged —
     * a fixpoint (same assignment ⇒ same centroids ⇒ same assignment), so
     * the oracle's fixed [[maxRounds]] unroll agrees whenever the engine
     * stops early ([[Similarity.kmeansConverged]]'s contract). Each round
     * is one fused job: the new assignment's cut materializes inside the
     * convergence count ([[Lineage.cutFused]]). */
-  private[graft] def stateDerive(s: SparkSession, d: String): DataFrame = {
-    val st = Lineage.cut(quantizedOf(Search.standingChunkVectors(s, d)))
+  private[graft] def stateDerive(s: SparkSession, cv: DataFrame): DataFrame = {
+    val st = Lineage.cut(quantizedOf(Search.standingOf(cv)))
     val n = st.count()
     // bounded-sample training (see [[trainCap]]): stride 1 — every
     // oracle fixture — is byte-identical to the unsampled derivation
@@ -260,7 +261,8 @@ object ChunkRouter {
     * ([[graft.tools.QuantizerClose]]). */
   private[graft] def standingState(s: SparkSession, d: String): DataFrame =
     IndexStore.latest(s, IndexStore.chunkRouterState, d).getOrElse(
-      SpillMemo.spill(s, "chunkrouter", d)(stateDerive(s, d).drop("epoch")))
+      SpillMemo.spill(s, "chunkrouter", d)(
+        stateDerive(s, Search.chunkVectors(s, d)).drop("epoch")))
 
   // ------------------------------------------------------------------
   // the routed relation — the IVF inverted-lists artifact

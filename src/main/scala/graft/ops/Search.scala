@@ -519,8 +519,11 @@ object Search {
     * literally a filter of the one stored relation — no second store
     * entry needed. */
   private[graft] def standingChunkVectors(s: SparkSession, d: String): DataFrame =
-    chunkVectors(s, d)
-      .filter(expr(s"chunk_key div $chunkKeyMod") % Similarity.knnBatchMod =!= 7)
+    standingOf(chunkVectors(s, d))
+
+  /** The standing slice of a chunk-vector relation. */
+  private[graft] def standingOf(cv: DataFrame): DataFrame =
+    cv.filter(expr(s"chunk_key div $chunkKeyMod") % Similarity.knnBatchMod =!= 7)
 
   /** Dense chunk probe at the chunk-key grain — a (doc_id, text) query
     * frame's text vectors against a chunk-vector relation,

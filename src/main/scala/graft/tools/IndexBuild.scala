@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.ops.{Dedup, IndexStore, Search, Similarity}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build every serving index for a corpus snapshot and persist it under one
   * [[graft.ops.IndexStore]] directory — the build half of the
@@ -220,10 +220,10 @@ object IndexBuild {
     // mergeable shape as quantizer_state; a maintenance close appends
     // epoch e+1 and serving flips with no plan change
     stage("chunk_router_state") {
-      writeRouterState(s, sfDir, storeDir)
+      writeRouterState(s, storeDir)
     }
     stage("chunk_routed") {
-      writeRouted(s, sfDir, storeDir)
+      writeRouted(s, storeDir)
     }
     writeMeta(s, sfDir, storeDir)
     lastStageSeconds = stage.seconds
@@ -260,28 +260,32 @@ object IndexBuild {
       s"only=router rebuilds INTO an existing store; $storeDir has no " +
         "INDEX_META.json — run the full build first")
     stage("chunk_router_state") {
-      writeRouterState(s, sfDir, storeDir)
+      writeRouterState(s, storeDir)
     }
     stage("chunk_routed") {
-      writeRouted(s, sfDir, storeDir)
+      writeRouted(s, storeDir)
     }
     writeMeta(s, sfDir, storeDir)
     lastStageSeconds = stage.seconds
   }
 
-  private def writeRouterState(s: SparkSession, sfDir: String,
-      storeDir: String): Unit =
-    graft.ops.ChunkRouter.stateDerive(s, sfDir)
+  /** The store's chunk vectors, which both router stages read: the build
+    * session has no store configured, so [[Search.chunkVectors]] would
+    * derive them a second time. */
+  private def storedVectors(s: SparkSession, storeDir: String): DataFrame =
+    s.read.parquet(s"$storeDir/${IndexStore.chunkVectors}")
+
+  private def writeRouterState(s: SparkSession, storeDir: String): Unit =
+    graft.ops.ChunkRouter.stateDerive(s, storedVectors(s, storeDir))
       .write.mode("overwrite").parquet(s"$storeDir/${IndexStore.chunkRouterState}")
 
   // the routed inverted lists under the epoch-0 panel just written —
   // routing is a BUILD cost, not a per-query cost
   // (ChunkRouter.routedVectors' contract); an epoch close rewrites
   // this relation (QuantizerClose.closeChunkRouter)
-  private def writeRouted(s: SparkSession, sfDir: String,
-      storeDir: String): Unit = {
+  private def writeRouted(s: SparkSession, storeDir: String): Unit = {
     val st = s.read.parquet(s"$storeDir/${IndexStore.chunkRouterState}")
-    graft.ops.ChunkRouter.routedOf(Search.chunkVectors(s, sfDir),
+    graft.ops.ChunkRouter.routedOf(storedVectors(s, storeDir),
       graft.ops.ChunkRouter.panelOf(st))
       .write.mode("overwrite").parquet(s"$storeDir/${IndexStore.chunkRouted}")
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
 
 /** Cross-session index persistence ([[graft.ops.IndexStore]] +
   * [[graft.tools.IndexBuild]]): a store built once must serve IDENTICAL
@@ -143,6 +144,19 @@ class IndexPersistSpec extends SparkSpec {
         rows(ops.Similarity.standingQuantizerStateDerive(spark, sf).drop("epoch")),
         "persisted quantizer state (latest epoch) diverged from the derivation")
     } finally spark.conf.unset(ops.IndexStore.indexDirConf)
+  }
+
+  test("a full build derives the chunk vectors once: the router stages read the store's copy") {
+    def spills: Set[String] = {
+      val ls = java.nio.file.Files.list(ops.SpillMemo.scratchRoot)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(s"graft-${ops.IndexStore.chunkVectors}-")).toSet
+      finally ls.close()
+    }
+    val before = spills
+    // a fresh session, so that no earlier spill can stand in for one
+    tools.IndexBuild.buildTo(spark.newSession(), sf, ops.SpillMemo.scratchDir("graft-idxonce-"))
+    assert(spills == before)
   }
 
   test("the streamed serving twin reads the persisted index: conf propagates to the stream session") {

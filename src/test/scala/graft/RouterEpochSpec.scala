@@ -32,7 +32,7 @@ class RouterEpochSpec extends SparkSpec {
     // not be poisoned with non-default-k state for the other suites.
     spark.conf.set("spark.graft.chunkRouterCells", "16")
     try {
-      val cells = ops.ChunkRouter.stateDerive(spark, sf)
+      val cells = ops.ChunkRouter.stateDerive(spark, ops.Search.chunkVectors(spark, sf))
         .select(col("cluster")).distinct().collect().map(_.getLong(0))
       assert(cells.length > 1 && cells.length <= 16,
         s"expected 2..16 live cells at k=16, got ${cells.length}")
@@ -49,7 +49,7 @@ class RouterEpochSpec extends SparkSpec {
       ops.Search.standingChunkVectors(spark, sf)).count()
     spark.conf.set("spark.graft.chunkRouterTrainCap", (standing / 4).toString)
     try {
-      val st = ops.ChunkRouter.stateDerive(spark, sf)
+      val st = ops.ChunkRouter.stateDerive(spark, ops.Search.chunkVectors(spark, sf))
       val counted = st.filter(col("dim") === 0L)
         .agg(sum(col("n0"))).head.getLong(0)
       assert(counted == standing,
@@ -95,7 +95,7 @@ class RouterEpochSpec extends SparkSpec {
     // a PARTIAL store carrying only the router state (partial stores are
     // legal — every other relation falls back to its session derivation)
     val store = ops.SpillMemo.scratchDir("graft-routerepoch-")
-    ops.ChunkRouter.stateDerive(spark, sf)
+    ops.ChunkRouter.stateDerive(spark, ops.Search.chunkVectors(spark, sf))
       .write.mode("overwrite")
       .parquet(s"$store/${ops.IndexStore.chunkRouterState}")
 
