@@ -12,7 +12,8 @@
   *    sessionization, temporal joins, funnels, multimodal plumbing,
   *    iterative-lineage control (`Lineage`).
   *  - [[graft.streaming]] — the Structured Streaming vertical:
-  *    `EventPipeline` (watermark → sliding-window agg → keyed-upsert sink),
+  *    `EventPipeline` (watermark → sliding-window counts → keyed-upsert
+  *    sink; the consumer query counts them in panes, `SlidingPanes`),
   *    `UpsertSink`, `StatefulDedup`, `RateEvents`, `LagMonitor`,
   *    `Shutdown`, `KafkaBridge`.
   *  - [[graft.functions]] — native Catalyst kernels (`shingles3`,

@@ -10,16 +10,21 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, FlatMapGroupsWith
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.ObjectType
 
 /** The reference consumer's streaming core, C4–C10 of SURVEY §2.2:
   * null-filter → event-time watermark → sliding-window grouped count →
   * window-struct flatten, run as a Structured Streaming query into a
   * keyed-upsert sink (`/root/reference/consumer/consumer.py:108-174`).
   *
-  * One transform serves batch and stream ([[windowCounts]] — the batch twin
-  * [[graft.ops.WindowAgg]] delegates here with no watermark), which is what
-  * makes the streaming-vs-batch golden test meaningful: identical lineage,
-  * only the execution mode differs.
+  * One transform serves batch and the bounded replays ([[windowCounts]] —
+  * the batch twin [[graft.ops.WindowAgg]] delegates here with no
+  * watermark, and [[streamedWindows]] streams it), which is what makes the
+  * streaming-vs-batch golden test meaningful: identical lineage, only the
+  * execution mode differs. The consumer query ([[start]]) counts the same
+  * windows in panes ([[SlidingPanes]]) instead; its equivalence with the
+  * update-mode [[windowCounts]], batch by batch and late data included, is
+  * proven by `PaneSpec`, not by lineage.
   *
   * Sink contract: the reference runs `outputMode("append")` into a Mongo
   * *upsert* (`consumer/consumer.py:158,173`). Append+upsert and update+upsert
@@ -30,10 +35,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * emit-on-watermark-close semantics (C9) are exercised by the MemoryStream
   * suite in `src/test/scala/graft/StreamingSpec.scala`.
   *
-  * Scale: state is bounded by |open windows| × |entities| (watermark evicts
-  * closed windows); the only shuffle is the streaming aggregation's exchange
-  * on (window, key) — the output key — and each micro-batch's sink write is
-  * bounded by keys touched per trigger, not event volume.
+  * Scale: the consumer's state is one row per entity with its open panes
+  * (the watermark closes a pane once both its windows have ended, and a
+  * timeout removes an entity whose panes all closed); the only shuffle is
+  * the pane operator's exchange on the entity, and each micro-batch's sink
+  * write is bounded by the windows touched per trigger, not event volume.
+  * [[windowCounts]] keeps one state row per (open window, entity).
   */
 object EventPipeline {
 
@@ -156,7 +163,9 @@ object EventPipeline {
       case _: Aggregate => append
       case j: Join => j.left.isStreaming && j.right.isStreaming &&
         !(j.joinType.isInstanceOf[InnerLike] || j.joinType == LeftSemi)
-      case _: FlatMapGroupsWithState | _: TransformWithState => true
+      case f: FlatMapGroupsWithState =>
+        f.outputObjAttr.dataType != ObjectType(classOf[PaneWindow])
+      case _: TransformWithState => true
       case _ => false
     }))
     val provider =
@@ -181,9 +190,11 @@ object EventPipeline {
     *    emitted once the watermark passes its end), a stream-stream join
     *    other than inner or semi (outer null rows, anti rows wait on the
     *    watermark), and any `flatMapGroupsWithState`/`transformWithState`
-    *    (their timers fire in no-data batches). Everywhere else — update
-    *    and complete mode, inner/semi joins and streaming dedup (they emit
-    *    on arrival) — a no-data batch only evicts state, at the price of a
+    *    (their timers fire in no-data batches) but [[SlidingPanes]]'
+    *    operator, known by its output class, whose timeouts only remove
+    *    state. Everywhere else — update and complete mode, inner/semi
+    *    joins, streaming dedup (they emit on arrival) and the pane
+    *    operator — a no-data batch only evicts state, at the price of a
     *    whole trigger (planning, state load, an empty sink delta): the
     *    closing trigger of every `AvailableNow` catch-up. Closed state is
     *    evicted by the next data batch instead; the output is the same.
@@ -232,17 +243,28 @@ object EventPipeline {
     }
   }
 
-  /** One streaming query: windowed counts → upsert deltas (S3) with a
-    * per-query checkpoint (S6, `consumer/consumer.py:143-144`). */
+  /** One consumer query: the 10-minute windows sliding by 5 minutes of
+    * [[windowCounts]], under a 10-minute watermark, counted in panes
+    * ([[SlidingPanes]]: one state row per key, not one per window) →
+    * update-mode upsert deltas (S3) with a per-query checkpoint (S6,
+    * `consumer/consumer.py:143-144`). Each batch emits the rows the
+    * update-mode window aggregate would (`PaneSpec`).
+    *
+    * The pane operator's `numRowsDroppedByWatermark` counts dropped
+    * (window, key) rows per input partition: events of one key and pane
+    * late for both their windows count twice, late for the earlier one
+    * only once, however many they are.
+    *
+    * A checkpoint written by the window aggregate does not resume here:
+    * the restart fails on the changed stateful operator
+    * (`STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA`). */
   def start(
       events: DataFrame,
       key: String,
       sinkDir: String,
       checkpointDir: String,
-      outputMode: String = "update",
-      watermark: String = "10 minutes",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startQuery(windowCounts(events, key, Some(watermark)), outputMode, checkpointDir, trigger)(
+    startQuery(SlidingPanes.counts(events, key, "10 minutes"), "update", checkpointDir, trigger)(
       UpsertSink.writeBatch(_, _, sinkDir))
 
   /** C10: multi-query fan-out — user and type KPI queries from one source
@@ -263,7 +285,9 @@ object EventPipeline {
     * batch would be dropped and the oracle would diverge — fine for a live
     * pipeline, wrong for a bounded replay). Update mode + the upsert sink
     * keeps state finite for the finite input; the operational 10-minute
-    * configuration is exercised by [[startBoth]] and the streaming suites. */
+    * configuration is exercised by [[startBoth]] and the streaming suites.
+    * It keeps the window aggregate, not [[start]]'s panes: under this
+    * watermark no pane of a key would ever close. */
   def streamedWindows(s: SparkSession, sfDir: String, key: String): DataFrame =
     runToSink(s, "graft-stream-", "update", Seq("window_start", "window_end", key)) { ss =>
       windowCounts(fileStream(ss, sfDir), key, Some("3650 days"))

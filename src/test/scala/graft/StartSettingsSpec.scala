@@ -4,12 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{EventPipeline, KeyedEvent, Scd2Event, Scd2Stream, StatefulDedup}
+import graft.streaming.{EventPipeline, KeyedEvent, Scd2Event, Scd2Stream, SlidingPanes, StatefulDedup}
 
 /** The stream starter reads two engine settings off the query plan
   * (`EventPipeline.runSettings`): no-data micro-batches stay on only if
-  * a streaming node can emit during one, and `transformWithState` gets
-  * the RocksDB state store. One row per query shape. */
+  * a streaming node can emit during one (the consumer's pane operator, a
+  * `flatMapGroupsWithState` whose timeouts only remove state, cannot), and
+  * `transformWithState` gets the RocksDB state store. One row per query
+  * shape. */
 class StartSettingsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -46,6 +48,9 @@ class StartSettingsSpec extends SparkSpec {
       ("left-outer stream-stream join", streamJoin("left_outer"), "append", (true, None)),
       ("flatMapGroupsWithState", StatefulDedup.dedupe(MemoryStream[KeyedEvent].toDS()).toDF(),
         "append", (true, None)),
+      ("update-mode pane operator (its timeouts only remove state)",
+        SlidingPanes.counts(MemoryStream[Evt].toDF(), "user_id", "10 minutes"), "update",
+        (false, None)),
       ("transformWithState (event time)", scd2, "append", (true, rocks)),
       ("append stream-static join, static-side groupBy",
         events.join(staticAgg, Seq("user_id")), "append", (false, None)))

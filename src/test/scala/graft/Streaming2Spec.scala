@@ -83,14 +83,6 @@ class Streaming2Spec extends SparkSpec {
       assert(spark.read.parquet(s"$sink/$d").isEmpty, s"unexpected rows in replayed delta $d")
     }
 
-    // append mode emits on the watermark, so it keeps its closing no-data batch
-    val appendCkpt = s"$scratch/append-ckpt"
-    val q3 = EventPipeline.start(EventPipeline.fileStream(spark, sf), "user_id",
-      s"$scratch/append-sink", appendCkpt, outputMode = "append")
-    q3.awaitTermination()
-    assert(emptyBatches(q3, appendCkpt).nonEmpty, "append mode must run its no-data batch")
-    assert(callerConf == before)
-
     // The drainToSink path starts through the same rule; its checkpoint is
     // the sink's sibling `ckpt`. A no-data batch re-commits its
     // predecessor's source offsets (lines after the version and metadata).
@@ -111,6 +103,14 @@ class Streaming2Spec extends SparkSpec {
       assert(childConfs == confs, s"$prefix: start must restore the child session's confs")
       ckptOf(sinkDir)
     }
+
+    // append mode emits on the watermark, so it keeps its closing no-data batch
+    val appendCkpt = s"$scratch/append-ckpt"
+    EventPipeline.drain(EventPipeline.windowCounts(EventPipeline.fileStream(spark, sf),
+      "user_id", Some("10 minutes")), "append", appendCkpt)(
+      UpsertSink.writeBatch(_, _, s"$scratch/append-sink"))
+    assert(noDataCommits(appendCkpt).nonEmpty, "append mode must run its no-data batch")
+    assert(callerConf == before)
 
     // append dedup emits on arrival: no closing no-data batch
     val dedupCkpt = drained("graft-s6-dedup-", "append") { ss =>
