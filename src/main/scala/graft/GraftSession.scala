@@ -6,9 +6,8 @@ import org.apache.spark.sql.SparkSession
   * under, so a measurement tool times the same session the graded runs
   * build: local mode at [[cpus]] cores with as many shuffle partitions,
   * shuffle/block scratch on the fast medium, UTC, no UI, and the library's
-  * session extensions (native functions + the `FusePrefixCosines` optimizer
-  * rule, pinned by `ExtensionsSpec`) active exactly as a user's production
-  * session would have them. */
+  * session extensions (the native functions, pinned by `ExtensionsSpec`)
+  * active exactly as a user's production session would have them. */
 object GraftSession {
   /** Core count, from `SPARK_GRAFT_CPUS`. 32 = the graded configuration
     * (local[32]). Claims once measured at a "4" default in Bench

@@ -100,9 +100,8 @@ object CosineKernels {
 
   /** All prefix cosines in ONE left-to-right pass: `out(j)` is bit-equal to
     * `cosine_sim(slice(a, 1, dims(j)), slice(b, 1, dims(j)))` — INCLUDING
-    * every edge of the slice formulation, so the fusion rule
-    * ([[graft.plans.FusePrefixCosines]]) is semantics-preserving on ANY
-    * input, not just equal-length pairs:
+    * every edge of the slice formulation, so the kernel can stand in for
+    * the per-slice form on ANY input, not just equal-length pairs:
     *
     *  - checkpoint m ≤ min(len a, len b): both slices have length m, the
     *    accumulators at element m ARE the sliced fold's sums — finite value;
@@ -378,14 +377,10 @@ object GraftFunctions {
   val extensionsClass: String = "graft.functions.GraftExtensions"
 }
 
-/** Session-extensions entry point: inject the native functions and the
-  * kernel-fusion optimizer rule at session build time
-  * (`.config("spark.sql.extensions", "graft.functions.GraftExtensions")`).
-  * On an already-built session the same rule is one line away:
-  * `spark.experimental.extraOptimizations ++= Seq(graft.plans.FusePrefixCosines)`. */
+/** Session-extensions entry point: inject the native functions at session
+  * build time (`.config("spark.sql.extensions", "graft.functions.GraftExtensions")`).
+  * On an already-built session, [[GraftFunctions.register]] does the same. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
     GraftFunctions.functions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.FusePrefixCosines)
-  }
 }

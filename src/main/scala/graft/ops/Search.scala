@@ -325,7 +325,7 @@ object Search {
         .select(col("doc_id"), col("text")),
       ingestIndex(s, d))
 
-  // -------- CHUNK-LEVEL RETRIEVAL (RAG shape — r15 verdict #8) --------
+  // -------- CHUNK-LEVEL RETRIEVAL (RAG shape) --------
 
   /** Chunk-key synthesis: `doc_id · chunkKeyMod + chunk_id`. 2²⁰ chunks
     * per doc covers a ~25M-word document at the [[graft.ops.TextAnalysis]]
@@ -475,7 +475,7 @@ object Search {
         (col("chunk_key") % chunkKeyMod).as("chunk_id"),
         col("score_m"), col("n_terms"), col("rnk"))
 
-  // ---- DENSE CHUNK RETRIEVAL (r16 verdict #7): the RAG tier's dense leg ----
+  // ---- DENSE CHUNK RETRIEVAL: the RAG tier's dense leg ----
 
   /** Deterministic hash-projection TEXT vector over a (id, text) frame —
     * the [[simSql]] token device mean-pooled per unit: each token maps to
@@ -558,7 +558,7 @@ object Search {
     * (multi-probe), and only candidates sharing a probed cell are
     * exactly rescored. The router REPLACED a static sign router that
     * measurably degenerated on this corpus (2/256 buckets held 75% of
-    * the chunks — r17 verdict #1; [[ChunkRouter]]'s scaladoc has the
+    * the chunks; [[ChunkRouter]]'s scaladoc has the
     * measurements). At 100 TB the cell assignment is one in-row fold
     * against the broadcast epoch panel riding the persisted chunk-vector
     * scan, and the scan prunes on the broadcast probe set; nothing
@@ -689,7 +689,7 @@ object Search {
     * analytics form takes brute — the production posture
     * ([[chunkDenseProbe]]'s scaladoc promise; the ×10 sweep measured the
     * brute leg's per-arrival cost growing WITH the corpus, which no
-    * serving path can carry — BASELINE.md round 17). The streamed twin
+    * serving path can carry — BASELINE.md). The streamed twin
     * ([[graft.streaming.IngestStream]]) runs THIS per micro-batch. */
   def chunkFusedIngestRollup(s: SparkSession, d: String): DataFrame = {
     val arriving = Tables.documents(s, d)
@@ -874,7 +874,7 @@ object Search {
     * pair-restricted matched-postings sum, NOT a second retrieval.
     * `SearchSpec` pins lm_fp equality with [[lmqlTopK]] on shared pairs.
     *
-    * SERVED, NOT RE-DERIVED (r15 verdict perf item): this relation feeds
+    * SERVED, NOT RE-DERIVED: this relation feeds
     * NINE queries (the feature emission itself, the CE rerank + its two
     * eval rows, distillation pairs, preference pairs, and the ingest/
     * streamed forms' eval joins) — at ~3.5–4 s a derivation that was ~30 s
@@ -1409,7 +1409,7 @@ object Search {
     * [[graft.functions.TopK.Cut]] (count desc, token asc — map-side
     * heaps of [[acTopN]], never a per-prefix window sort: a popular
     * 1-char prefix's completion list is vocabulary-sized, the same
-    * skewed-key trap the vocab/ngram heads retired in round 14). Serving
+    * skewed-key trap the vocab/ngram heads also avoid). Serving
     * reads the result as a static broadcast table. */
   def autocomplete(s: SparkSession, d: String): DataFrame =
     autocompleteDocs(Tables.documents(s, d))
@@ -1881,8 +1881,7 @@ object Search {
     * THE relation every position-aware operator resolves
     * ([[phraseIndexSearch]], [[phraseIndexSearchN]], [[proximityRerank]]).
     * Corpus-snapshot-static by construction, so it resolves like every
-    * other serving index (r16 verdict #1 — this was the ONE serving-family
-    * derivation that re-tokenized the corpus per run):
+    * other serving index and no run re-tokenizes the corpus:
     * [[IndexStore.served]] (the cross-session store built by
     * `graft.tools.IndexBuild` → session spill → derivation). */
   private[graft] def positionalIndex(s: SparkSession, d: String): DataFrame =
@@ -1929,7 +1928,7 @@ object Search {
     * deterministic cut every phrase query uses), null-padded to five word
     * slots so one schema carries all lengths. The four corpus-wide n-gram
     * minings this relation replaces were the dominant cost of
-    * `x_search_phrase_n` (r16 verdict #1); like the postings it is
+    * `x_search_phrase_n`; like the postings it is
     * snapshot-static, so: [[IndexStore]] → session spill → derivation. */
   private[graft] def phraseWorkloadTable(s: SparkSession, d: String): DataFrame =
     IndexStore.served(s, IndexStore.phraseWorkload, d)(phraseWorkloadDerive(s, d))
@@ -2015,7 +2014,7 @@ object Search {
     Seq(2 -> 2, 3 -> 2, 4 -> 1, 5 -> 1)
 
   /** N-token phrase search over the positional inverted index —
-    * round-13 verdict #3: real phrase queries are 2-5 tokens. The
+    * real phrase queries are 2-5 tokens. The
     * workload is the corpus's own top n-grams per length 2-5
     * ([[phraseWidths]]; deterministic cut, ties on the words), so every
     * supported length is exercised without a config knob. Matching is
@@ -2035,10 +2034,9 @@ object Search {
     * postings scans + n−1 shuffled intersection joins per leg — 14 scans
     * and ~24 exchanges across the workload, pure stage overhead at any
     * scale.) Index and workload are store/memo-served
-    * ([[positionalIndex]], [[phraseWorkloadTable]] — r16 verdict #1: the
-    * four corpus-wide n-gram minings plus the positional pass this query
-    * re-derived per run were the one serving-family derivation not
-    * persisted). Output: one row per (phrase, doc) with the phrase
+    * ([[positionalIndex]], [[phraseWorkloadTable]]), so a run does not
+    * repeat the four corpus-wide n-gram minings or the positional pass.
+    * Output: one row per (phrase, doc) with the phrase
     * spelled out, its token count, occurrence count and first 1-based
     * match position — `SearchSpec` pins set-equality with the exhaustive
     * in-row scan. */
@@ -2379,22 +2377,13 @@ object Search {
        |       CAST(chunk_key % $chunkKeyMod AS BIGINT) AS chunk_id, rnk
        |FROM dbrk WHERE rnk <= $chunkK""".stripMargin
 
-  /** Recall of the bucketed rung vs the brute rung — the
-    * `Similarity.recallOf` arithmetic in SQL over `drk`/`dbrk`. */
+  /** Recall of the bucketed rung vs the brute rung over `drk`/`dbrk`,
+    * through the shared [[Similarity.recallTailSql]] on `chunk_key`. */
   private def chunkRecallTail: String =
     s""",
        |rtb AS (SELECT query_id, chunk_key FROM drk WHERE rnk <= $chunkK),
        |rta AS (SELECT query_id, chunk_key FROM dbrk WHERE rnk <= $chunkK),
-       |rnb AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_brute FROM rtb GROUP BY 1),
-       |rna AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_bucket FROM rta GROUP BY 1),
-       |rnc AS (SELECT b.query_id, CAST(count(*) AS BIGINT) AS n_common
-       |        FROM rtb b JOIN rta a ON a.query_id = b.query_id AND a.chunk_key = b.chunk_key
-       |        GROUP BY 1)
-       |SELECT rnb.query_id, rnb.n_brute,
-       |       COALESCE(rna.n_bucket, 0) AS n_bucket,
-       |       COALESCE(rnc.n_common, 0) AS n_common,
-       |       CAST(round(CAST(COALESCE(rnc.n_common, 0) AS DOUBLE) * 10000 / rnb.n_brute) AS BIGINT) AS recall_bp
-       |FROM rnb LEFT JOIN rna USING (query_id) LEFT JOIN rnc USING (query_id)""".stripMargin
+       |${Similarity.recallTailSql("rtb", "rta", "n_bucket", key = "chunk_key")}""".stripMargin
 
   /** The dense passage-hit tail over `drk`. */
   private def chunkDenseTail: String =
@@ -3058,10 +3047,7 @@ object Search {
        |         list_dot_product(vq.qv, vc.v)
        |           / (vq.qn * sqrt(list_dot_product(vc.v, vc.v))) AS score
        |       FROM vc, vq WHERE vc.vec_id <> vq.query_id),
-       |rv AS (SELECT query_id, neighbor_id,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rnk
-       |       FROM sv),
+       |${Similarity.rankCte("rv", "sv")},
        |vl AS (SELECT query_id, neighbor_id, rnk FROM rv WHERE rnk <= $topK),
        |legs AS (SELECT * FROM tl UNION ALL SELECT * FROM vl),
        |fused AS (SELECT query_id, neighbor_id,

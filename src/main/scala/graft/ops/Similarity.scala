@@ -446,7 +446,7 @@ object Similarity {
       .filter(col("cluster") =!= col("prev")).isEmpty
   }
 
-  // ---- MAINTAINED QUANTIZER (r16 verdict #6): the centroid table kept
+  // ---- MAINTAINED QUANTIZER: the centroid table kept
   // ---- current as vectors arrive, instead of trained-once-and-frozen.
 
   /** The STANDING quantizer state — per (cluster, dim): the µ-unit
@@ -464,7 +464,7 @@ object Similarity {
       k: Int = defaultKClusters): DataFrame = {
     // store rows are built at defaultKClusters (IndexBuild bakes the
     // tunable in); a caller asking for a DIFFERENT k must not be served
-    // the default-k state silently (ADVICE r17), so the store read is
+    // the default-k state silently, so the store read is
     // bypassed and the k it asked for is derived per-session instead
     val stored =
       if (k == defaultKClusters) IndexStore.latest(s, IndexStore.quantizerState, d)
@@ -958,8 +958,8 @@ object Similarity {
     * query is ≤ 1 + beamWidth·graphDegree·graphHops — with these values
     * ≤ 769 exact scorings, independent of corpus size, vs a full-corpus
     * scan for brute force and vs [[kmeansRerankTopK]]'s
-    * nProbe/k = half-corpus fan-out. Beam width was retuned 8 → 16 in
-    * round 12 (r11 verdict #4: recall at sf0.1 must clear 90%): the
+    * nProbe/k = half-corpus fan-out. Beam width is 16, not 8, so that
+    * recall at sf0.1 clears 90%: the
     * per-hop fixed cost (checkpoint round-trips) dominates wall time, so
     * doubling the beam bought corpus recall 87.5% → 92.5% and ingest
     * recall 83.4% → 94.7% at sf0.1 for NO measured wall-clock change
@@ -1032,7 +1032,7 @@ object Similarity {
     // bounded dedup-heap exchange ([[graft.functions.TopK.topKDistinct]]).
     // The score is a pure function of the endpoints, so duplicate pairs
     // carry equal scores and in-heap dedup ≡ the distinct-then-top-k this
-    // replaced. What that bought at ×10 (BASELINE.md round 18): the old
+    // replaced. What that bought at ×10 (BASELINE.md): the old
     // shape shuffled the n·(2·degree)² candidate list THREE times per
     // descent round (a `.distinct()` exchange + two vector-fetch join
     // exchanges); now the candidate list never shuffles at all — it flows
@@ -1148,7 +1148,7 @@ object Similarity {
   }
 
   /** The frontier-tracked beam loop shared by the corpus-member and ingest
-    * searches (round 11). Two disciplines, both oracle-mirrored:
+    * searches. Two disciplines, both oracle-mirrored:
     *
     *  - FRONTIER TRACKING: each hop's beam is the top-[[beamWidth]]
     *    visited candidates NOT YET EXPANDED — without the exclusion a
@@ -1401,8 +1401,8 @@ object Similarity {
 
   /** GRAPH-INDEX MAINTENANCE (`x_sim_graph_insert`): INSERT the arriving
     * vectors into the navigable graph — the write path
-    * [[graphBeamIngestTopK]]'s read-only serving deliberately excludes
-    * (r11 verdict #3). The HNSW insertion recipe, distributively:
+    * [[graphBeamIngestTopK]]'s read-only serving deliberately excludes.
+    * The HNSW insertion recipe, distributively:
     *
     *  1. each arriving vector's out-edges are its beam-search results
     *     (the memoized ingest search — the index answers its own insert's
@@ -2008,6 +2008,43 @@ object Similarity {
   private val cosSql =
     "list_dot_product(q.qv, c.v) / (q.qn * sqrt(list_dot_product(c.v, c.v)))"
 
+  /** The oracle ranking rule, [[graft.functions.TopKOrder.scored]]'s
+    * DuckDB twin: CTE `name` numbers each `partition` group of `scored`
+    * (`score`, `neighbor_id`) by score desc, then neighbor_id asc, as
+    * BIGINT `rnk`. Every score-ordered top-k oracle ranks here. */
+  private[ops] def rankCte(name: String, scored: String,
+      partition: String = "query_id"): String =
+    s"""$name AS (SELECT $partition, neighbor_id,
+       |    row_number() OVER (PARTITION BY $partition ORDER BY score DESC, neighbor_id ASC) AS rnk
+       |  FROM $scored)""".stripMargin
+
+  /** The exact-cosine truth leg (no leading comma) — [[bruteTruth]]'s
+    * twin over `corpus` (vec_id, v) and `queries` (query_id, qv, qn),
+    * aliased `c`/`q` in `corpusPred`: `sb` scores, `rb` ranks, `tb`
+    * keeps the top [[topK]] (query_id, neighbor_id). */
+  private[ops] def bruteLegCtes(corpus: String, queries: String, corpusPred: String): String =
+    s"""sb AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
+       |       FROM $corpus c, $queries q WHERE $corpusPred),
+       |${rankCte("rb", "sb")},
+       |tb AS (SELECT query_id, neighbor_id FROM rb WHERE rnk <= $topK)""".stripMargin
+
+  /** [[recallOf]]'s twin (no leading comma; ends the query): per query of
+    * `truth`, its hit count `n_brute`, the approximate hit count
+    * `nApprox` from `approx`, the hits both share on (query_id, `key`)
+    * and `recall_bp` = n_common / n_brute in rounded basis points. */
+  private[ops] def recallTailSql(truth: String, approx: String, nApprox: String,
+      key: String = "neighbor_id"): String =
+    s"""nb AS (SELECT query_id, count(*) AS n_brute FROM $truth GROUP BY 1),
+       |na AS (SELECT query_id, count(*) AS $nApprox FROM $approx GROUP BY 1),
+       |cm AS (SELECT $truth.query_id, count(*) AS n_common
+       |       FROM $truth JOIN $approx USING (query_id, $key) GROUP BY 1)
+       |SELECT nb.query_id, nb.n_brute,
+       |       COALESCE(na.$nApprox, 0) AS $nApprox,
+       |       COALESCE(cm.n_common, 0) AS n_common,
+       |       CAST(round(CAST(COALESCE(cm.n_common, 0) AS DOUBLE) * 10000 / nb.n_brute)
+       |            AS BIGINT) AS recall_bp
+       |FROM nb LEFT JOIN na USING (query_id) LEFT JOIN cm USING (query_id)""".stripMargin
+
   /** CTE chain (no leading WITH) ending in `cvs` (vec_id → SQ8 code list,
     * double-typed) — the [[sq8Corpus]] codec twin, shared by the
     * `x_sim_topk_sq8` and `x_sim_recall_sq8` oracles. */
@@ -2088,10 +2125,7 @@ object Similarity {
        |       FROM qh),
        |scored AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
        |           FROM cb c JOIN pr q ON c.bucket = q.probe AND c.vec_id <> q.query_id),
-       |ranked AS (SELECT query_id, neighbor_id,
-       |             CAST(row_number() OVER (PARTITION BY query_id
-       |                    ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rnk
-       |           FROM scored)""".stripMargin
+       |${rankCte("ranked", "scored")}""".stripMargin
   }
 
   /** CTE chain (no leading WITH) ending in `ka` (vec_id → cluster, dist2) —
@@ -2365,10 +2399,43 @@ object Similarity {
        |$hops,
        |fin AS (SELECT query_id, cand_id AS neighbor_id, score
        |        FROM s$hopCount WHERE cand_id <> query_id),
-       |rk AS (SELECT query_id, neighbor_id,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rnk
-       |       FROM fin)""".stripMargin
+       |${rankCte("rk", "fin")}""".stripMargin
+  }
+
+  /** The graph oracles' head: [[graphSqlCtes]], the walk's top-[[topK]]
+    * `ta` (query_id, neighbor_id, rnk) and the exact-cosine truth `tb`
+    * over the same `cc`/`qs`. A corpus member's truth is every other
+    * member; an arriving query's is the standing corpus. */
+  private def graphVsBruteCtes(ingest: Boolean): String = {
+    val corpusPred =
+      if (ingest) s"c.vec_id % $knnBatchMod <> 7" else "c.vec_id <> q.query_id"
+    s"""${graphSqlCtes(ingest)},
+       |ta AS (SELECT query_id, neighbor_id, rnk FROM rk WHERE rnk <= $topK),
+       |${bruteLegCtes("cc", "qs", corpusPred)}""".stripMargin
+  }
+
+  /** [[evalRank]]'s twin (with `ingest`, [[evalRankIngest]]'s): MRR and
+    * nDCG@[[topK]] of the graph walk's `ta` against the exact truth `tb`,
+    * in the engine's fixed-point units. */
+  private def evalRankSql(ingest: Boolean): String = {
+    val wList = dcgW.mkString("[", ", ", "]")
+    val psList = dcgPrefix.mkString("[", ", ", "]")
+    s"""${graphVsBruteCtes(ingest)},
+       |hits AS (SELECT ta.query_id, min(ta.rnk) AS first_hit,
+       |           count(*) AS n_hits,
+       |           CAST(sum(($wList)[ta.rnk]) AS BIGINT) AS dcg_fp
+       |         FROM ta JOIN tb USING (query_id, neighbor_id) GROUP BY 1),
+       |nt AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_truth FROM tb GROUP BY 1)
+       |SELECT nt.query_id, nt.n_truth,
+       |  CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
+       |  CAST(COALESCE(h.first_hit, 0) AS BIGINT) AS first_hit,
+       |  CAST(CASE WHEN h.first_hit IS NULL THEN 0
+       |            ELSE 1000000 // h.first_hit END AS BIGINT) AS mrr_fp,
+       |  CAST(COALESCE(h.dcg_fp, 0) AS BIGINT) AS dcg_fp,
+       |  CAST(($psList)[least(nt.n_truth, $topK)] AS BIGINT) AS idcg_fp,
+       |  CAST((10000 * COALESCE(h.dcg_fp, 0))
+       |         // (($psList)[least(nt.n_truth, $topK)]) AS BIGINT) AS ndcg_bp
+       |FROM nt LEFT JOIN hits h USING (query_id)""".stripMargin
   }
 
   /** [[pcaBasis]]'s unrolled twin: the same Gram sums (via a self-join
@@ -2571,45 +2638,11 @@ object Similarity {
          |UNION ALL
          |SELECT src, dst, rnk, FALSE AS is_new FROM itrim""".stripMargin,
     "x_sim_recall_graph_in" ->
-      s"""${graphSqlCtes(ingest = true)},
-         |ta AS (SELECT query_id, neighbor_id FROM rk WHERE rnk <= $topK),
-         |sb AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
-         |       FROM cc c, qs q WHERE c.vec_id % $knnBatchMod <> 7),
-         |rb AS (SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |                ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |       FROM sb),
-         |tb AS (SELECT query_id, neighbor_id FROM rb WHERE rnk <= $topK),
-         |nb AS (SELECT query_id, count(*) AS n_brute FROM tb GROUP BY 1),
-         |na AS (SELECT query_id, count(*) AS n_graph_in FROM ta GROUP BY 1),
-         |cm AS (SELECT tb.query_id, count(*) AS n_common
-         |       FROM tb JOIN ta USING (query_id, neighbor_id) GROUP BY 1)
-         |SELECT nb.query_id, nb.n_brute,
-         |       COALESCE(na.n_graph_in, 0) AS n_graph_in,
-         |       COALESCE(cm.n_common, 0) AS n_common,
-         |       CAST(round(CAST(COALESCE(cm.n_common, 0) AS DOUBLE) * 10000 / nb.n_brute)
-         |            AS BIGINT) AS recall_bp
-         |FROM nb LEFT JOIN na USING (query_id) LEFT JOIN cm USING (query_id)""".stripMargin,
+      s"""${graphVsBruteCtes(ingest = true)},
+         |${recallTailSql("tb", "ta", "n_graph_in")}""".stripMargin,
     "x_sim_recall_graph" ->
-      s"""${graphSqlCtes()},
-         |ta AS (SELECT query_id, neighbor_id FROM rk WHERE rnk <= $topK),
-         |sb AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
-         |       FROM cc c, qs q WHERE c.vec_id <> q.query_id),
-         |rb AS (SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |                ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |       FROM sb),
-         |tb AS (SELECT query_id, neighbor_id FROM rb WHERE rnk <= $topK),
-         |nb AS (SELECT query_id, count(*) AS n_brute FROM tb GROUP BY 1),
-         |na AS (SELECT query_id, count(*) AS n_graph FROM ta GROUP BY 1),
-         |cm AS (SELECT tb.query_id, count(*) AS n_common
-         |       FROM tb JOIN ta USING (query_id, neighbor_id) GROUP BY 1)
-         |SELECT nb.query_id, nb.n_brute,
-         |       COALESCE(na.n_graph, 0) AS n_graph,
-         |       COALESCE(cm.n_common, 0) AS n_common,
-         |       CAST(round(CAST(COALESCE(cm.n_common, 0) AS DOUBLE) * 10000 / nb.n_brute)
-         |            AS BIGINT) AS recall_bp
-         |FROM nb LEFT JOIN na USING (query_id) LEFT JOIN cm USING (query_id)""".stripMargin,
+      s"""${graphVsBruteCtes(ingest = false)},
+         |${recallTailSql("tb", "ta", "n_graph")}""".stripMargin,
     "x_sim_topk_mp" ->
       s"""$multiProbeSqlCtes
          |SELECT query_id, neighbor_id, rnk FROM ranked WHERE rnk <= $topK""".stripMargin,
@@ -2617,85 +2650,16 @@ object Similarity {
       s"""${graphSqlCtes()}
          |SELECT query_id, neighbor_id, rnk FROM rk
          |WHERE rnk > $topK AND rnk <= ${2 * topK}""".stripMargin,
-    "x_sim_eval_rank" -> {
-      val wList = dcgW.mkString("[", ", ", "]")
-      val psList = dcgPrefix.mkString("[", ", ", "]")
-      s"""${graphSqlCtes()},
-         |ta AS (SELECT query_id, neighbor_id, rnk FROM rk WHERE rnk <= $topK),
-         |sb AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
-         |       FROM cc c, qs q WHERE c.vec_id <> q.query_id),
-         |rb AS (SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |                ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |       FROM sb),
-         |tb AS (SELECT query_id, neighbor_id FROM rb WHERE rnk <= $topK),
-         |hits AS (SELECT ta.query_id, min(ta.rnk) AS first_hit,
-         |           count(*) AS n_hits,
-         |           CAST(sum(($wList)[ta.rnk]) AS BIGINT) AS dcg_fp
-         |         FROM ta JOIN tb USING (query_id, neighbor_id) GROUP BY 1),
-         |nt AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_truth FROM tb GROUP BY 1)
-         |SELECT nt.query_id, nt.n_truth,
-         |  CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-         |  CAST(COALESCE(h.first_hit, 0) AS BIGINT) AS first_hit,
-         |  CAST(CASE WHEN h.first_hit IS NULL THEN 0
-         |            ELSE 1000000 // h.first_hit END AS BIGINT) AS mrr_fp,
-         |  CAST(COALESCE(h.dcg_fp, 0) AS BIGINT) AS dcg_fp,
-         |  CAST(($psList)[least(nt.n_truth, $topK)] AS BIGINT) AS idcg_fp,
-         |  CAST((10000 * COALESCE(h.dcg_fp, 0))
-         |         // (($psList)[least(nt.n_truth, $topK)]) AS BIGINT) AS ndcg_bp
-         |FROM nt LEFT JOIN hits h USING (query_id)""".stripMargin
-    },
-    "x_sim_eval_rank_in" -> {
-      val wList = dcgW.mkString("[", ", ", "]")
-      val psList = dcgPrefix.mkString("[", ", ", "]")
-      s"""${graphSqlCtes(ingest = true)},
-         |ta AS (SELECT query_id, neighbor_id, rnk FROM rk WHERE rnk <= $topK),
-         |sb AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
-         |       FROM cc c, qs q WHERE c.vec_id % $knnBatchMod <> 7),
-         |rb AS (SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |                ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |       FROM sb),
-         |tb AS (SELECT query_id, neighbor_id FROM rb WHERE rnk <= $topK),
-         |hits AS (SELECT ta.query_id, min(ta.rnk) AS first_hit,
-         |           count(*) AS n_hits,
-         |           CAST(sum(($wList)[ta.rnk]) AS BIGINT) AS dcg_fp
-         |         FROM ta JOIN tb USING (query_id, neighbor_id) GROUP BY 1),
-         |nt AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_truth FROM tb GROUP BY 1)
-         |SELECT nt.query_id, nt.n_truth,
-         |  CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-         |  CAST(COALESCE(h.first_hit, 0) AS BIGINT) AS first_hit,
-         |  CAST(CASE WHEN h.first_hit IS NULL THEN 0
-         |            ELSE 1000000 // h.first_hit END AS BIGINT) AS mrr_fp,
-         |  CAST(COALESCE(h.dcg_fp, 0) AS BIGINT) AS dcg_fp,
-         |  CAST(($psList)[least(nt.n_truth, $topK)] AS BIGINT) AS idcg_fp,
-         |  CAST((10000 * COALESCE(h.dcg_fp, 0))
-         |         // (($psList)[least(nt.n_truth, $topK)]) AS BIGINT) AS ndcg_bp
-         |FROM nt LEFT JOIN hits h USING (query_id)""".stripMargin
-    },
+    "x_sim_eval_rank" -> evalRankSql(ingest = false),
+    "x_sim_eval_rank_in" -> evalRankSql(ingest = true),
     "x_sim_recall_mp" ->
       s"""$multiProbeSqlCtes,
          |ta AS (SELECT query_id, neighbor_id FROM ranked WHERE rnk <= $topK),
          |cc AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |cq AS (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qn
          |       FROM cc WHERE vec_id % $queryStride = 0),
-         |sb AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
-         |       FROM cc c, cq q WHERE c.vec_id <> q.query_id),
-         |rb AS (SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |                ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |       FROM sb),
-         |tb AS (SELECT query_id, neighbor_id FROM rb WHERE rnk <= $topK),
-         |nb AS (SELECT query_id, count(*) AS n_brute FROM tb GROUP BY 1),
-         |na AS (SELECT query_id, count(*) AS n_mp FROM ta GROUP BY 1),
-         |cm AS (SELECT tb.query_id, count(*) AS n_common
-         |       FROM tb JOIN ta USING (query_id, neighbor_id) GROUP BY 1)
-         |SELECT nb.query_id, nb.n_brute,
-         |       COALESCE(na.n_mp, 0) AS n_mp,
-         |       COALESCE(cm.n_common, 0) AS n_common,
-         |       CAST(round(CAST(COALESCE(cm.n_common, 0) AS DOUBLE) * 10000 / nb.n_brute)
-         |            AS BIGINT) AS recall_bp
-         |FROM nb LEFT JOIN na USING (query_id) LEFT JOIN cm USING (query_id)""".stripMargin,
+         |${bruteLegCtes("cc", "cq", "c.vec_id <> q.query_id")},
+         |${recallTailSql("tb", "ta", "n_mp")}""".stripMargin,
     "x_sim_topk_ivfpq" ->
       s"""$ivfpqSqlCtes
          |SELECT query_id, neighbor_id, rnk FROM ranked WHERE rnk <= $topK""".stripMargin,
@@ -2705,23 +2669,8 @@ object Similarity {
          |cc AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
          |cq AS (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qn
          |       FROM cc WHERE vec_id % $queryStride = 0),
-         |sb AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
-         |       FROM cc c, cq q WHERE c.vec_id <> q.query_id),
-         |rb AS (SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |                ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |       FROM sb),
-         |tb AS (SELECT query_id, neighbor_id FROM rb WHERE rnk <= $topK),
-         |nb AS (SELECT query_id, count(*) AS n_brute FROM tb GROUP BY 1),
-         |na AS (SELECT query_id, count(*) AS n_ann FROM ta GROUP BY 1),
-         |cm AS (SELECT tb.query_id, count(*) AS n_common
-         |       FROM tb JOIN ta USING (query_id, neighbor_id) GROUP BY 1)
-         |SELECT nb.query_id, nb.n_brute,
-         |       COALESCE(na.n_ann, 0) AS n_ann,
-         |       COALESCE(cm.n_common, 0) AS n_common,
-         |       CAST(round(CAST(COALESCE(cm.n_common, 0) AS DOUBLE) * 10000 / nb.n_brute)
-         |            AS BIGINT) AS recall_bp
-         |FROM nb LEFT JOIN na USING (query_id) LEFT JOIN cm USING (query_id)""".stripMargin,
+         |${bruteLegCtes("cc", "cq", "c.vec_id <> q.query_id")},
+         |${recallTailSql("tb", "ta", "n_ann")}""".stripMargin,
     "x_embed_pq" ->
       s"""WITH e AS (
          |  SELECT vec_id,
@@ -2758,28 +2707,10 @@ object Similarity {
          |       FROM cc WHERE vec_id % $queryStride = 0),
          |si AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
          |       FROM cc c JOIN cq q ON c.cluster = q.qcluster AND c.vec_id <> q.query_id),
-         |ri AS (SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |                ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |       FROM si),
+         |${rankCte("ri", "si")},
          |ta AS (SELECT query_id, neighbor_id FROM ri WHERE rnk <= $topK),
-         |sb AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
-         |       FROM cc c, cq q WHERE c.vec_id <> q.query_id),
-         |rb AS (SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |                ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |       FROM sb),
-         |tb AS (SELECT query_id, neighbor_id FROM rb WHERE rnk <= $topK),
-         |nb AS (SELECT query_id, count(*) AS n_brute FROM tb GROUP BY 1),
-         |na AS (SELECT query_id, count(*) AS n_kivf FROM ta GROUP BY 1),
-         |cm AS (SELECT tb.query_id, count(*) AS n_common
-         |       FROM tb JOIN ta USING (query_id, neighbor_id) GROUP BY 1)
-         |SELECT nb.query_id, nb.n_brute,
-         |       COALESCE(na.n_kivf, 0) AS n_kivf,
-         |       COALESCE(cm.n_common, 0) AS n_common,
-         |       CAST(round(CAST(COALESCE(cm.n_common, 0) AS DOUBLE) * 10000 / nb.n_brute)
-         |            AS BIGINT) AS recall_bp
-         |FROM nb LEFT JOIN na USING (query_id) LEFT JOIN cm USING (query_id)""".stripMargin,
+         |${bruteLegCtes("cc", "cq", "c.vec_id <> q.query_id")},
+         |${recallTailSql("tb", "ta", "n_kivf")}""".stripMargin,
     "x_embed_quantize" ->
       """WITH v AS (
         |  SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim, CAST(embedding[i] AS DOUBLE) AS x
@@ -2812,10 +2743,7 @@ object Similarity {
          |               / (sqrt(list_dot_product(list_slice(q.qv, 1, m.m), list_slice(q.qv, 1, m.m)))
          |                  * sqrt(list_dot_product(list_slice(c.v, 1, m.m), list_slice(c.v, 1, m.m)))) AS score
          |           FROM c, q, m WHERE c.vec_id <> q.query_id),
-         |ranked AS (SELECT query_id, m, neighbor_id,
-         |             row_number() OVER (PARTITION BY query_id, m
-         |                    ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |           FROM scored),
+         |${rankCte("ranked", "scored", "query_id, m")},
          |top AS (SELECT query_id, m, neighbor_id FROM ranked WHERE rnk <= $topK),
          |truth AS (SELECT query_id, neighbor_id FROM top WHERE m = ${mrlDims.last}),
          |tot AS (SELECT count(*) AS n_truth FROM truth),
@@ -2834,10 +2762,7 @@ object Similarity {
          |      FROM c WHERE vec_id % $queryStride = 0),
          |scored AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
          |           FROM c, q WHERE c.vec_id <> q.query_id),
-         |ranked AS (SELECT query_id, neighbor_id,
-         |             CAST(row_number() OVER (PARTITION BY query_id
-         |                    ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rnk
-         |           FROM scored)
+         |${rankCte("ranked", "scored")}
          |SELECT query_id, neighbor_id, rnk FROM ranked WHERE rnk <= $topK""".stripMargin,
     "x_sim_topk_ivf" ->
       s"""WITH c AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
@@ -2846,10 +2771,7 @@ object Similarity {
          |      FROM c WHERE vec_id % $queryStride = 0),
          |scored AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
          |           FROM c JOIN q ON c.label = q.qlabel AND c.vec_id <> q.query_id),
-         |ranked AS (SELECT query_id, neighbor_id,
-         |             CAST(row_number() OVER (PARTITION BY query_id
-         |                    ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rnk
-         |           FROM scored)
+         |${rankCte("ranked", "scored")}
          |SELECT query_id, neighbor_id, rnk FROM ranked WHERE rnk <= $topK""".stripMargin,
     "x_sim_topk_sign" ->
       s"""WITH sgn AS (
@@ -2865,10 +2787,7 @@ object Similarity {
          |                          + list_dot_product(c.cb, c.cb)
          |                          - 2 * list_dot_product(q.qb, c.cb)) AS score
          |           FROM sgn c, q WHERE c.vec_id <> q.query_id),
-         |ranked AS (SELECT query_id, neighbor_id,
-         |             CAST(row_number() OVER (PARTITION BY query_id
-         |                    ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rnk
-         |           FROM scored)
+         |${rankCte("ranked", "scored")}
          |SELECT query_id, neighbor_id, rnk FROM ranked WHERE rnk <= $topK""".stripMargin,
     "x_sim_recall_sign" ->
       s"""WITH sgn AS (
@@ -2880,14 +2799,7 @@ object Similarity {
          |cf AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |qf AS (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qn
          |       FROM cf WHERE vec_id % $queryStride = 0),
-         |sb AS (SELECT qf.query_id, cf.vec_id AS neighbor_id,
-         |         list_dot_product(qf.qv, cf.v) / (qf.qn * sqrt(list_dot_product(cf.v, cf.v))) AS score
-         |       FROM cf, qf WHERE cf.vec_id <> qf.query_id),
-         |tb AS (SELECT query_id, neighbor_id
-         |       FROM (SELECT query_id, neighbor_id,
-         |               row_number() OVER (PARTITION BY query_id
-         |                      ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |             FROM sb) WHERE rnk <= $topK),
+         |${bruteLegCtes("cf", "qf", "c.vec_id <> q.query_id")},
          |q AS (SELECT vec_id AS query_id, cb AS qb FROM sgn
          |      WHERE vec_id % $queryStride = 0),
          |s1 AS (SELECT q.query_id, c.vec_id AS neighbor_id,
@@ -2895,116 +2807,49 @@ object Similarity {
          |                      + list_dot_product(c.cb, c.cb)
          |                      - 2 * list_dot_product(q.qb, c.cb)) AS score
          |       FROM sgn c, q WHERE c.vec_id <> q.query_id),
-         |t1 AS (SELECT query_id, neighbor_id
-         |       FROM (SELECT query_id, neighbor_id,
-         |               row_number() OVER (PARTITION BY query_id
-         |                      ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |             FROM s1) WHERE rnk <= $topK),
-         |nb AS (SELECT query_id, count(*) AS n_brute FROM tb GROUP BY 1),
-         |n1 AS (SELECT query_id, count(*) AS n_sign FROM t1 GROUP BY 1),
-         |cm AS (SELECT tb.query_id, count(*) AS n_common
-         |       FROM tb JOIN t1 USING (query_id, neighbor_id) GROUP BY 1)
-         |SELECT nb.query_id, nb.n_brute,
-         |       COALESCE(n1.n_sign, 0) AS n_sign,
-         |       COALESCE(cm.n_common, 0) AS n_common,
-         |       CAST(round(CAST(COALESCE(cm.n_common, 0) AS DOUBLE) * 10000 / nb.n_brute)
-         |            AS BIGINT) AS recall_bp
-         |FROM nb LEFT JOIN n1 USING (query_id) LEFT JOIN cm USING (query_id)""".stripMargin,
+         |${rankCte("r1", "s1")},
+         |t1 AS (SELECT query_id, neighbor_id FROM r1 WHERE rnk <= $topK),
+         |${recallTailSql("tb", "t1", "n_sign")}""".stripMargin,
     "x_sim_topk_sq8" ->
       s"""WITH $sq8SqlCtes,
          |q AS (SELECT vec_id AS query_id, cv AS cq FROM cvs
          |      WHERE vec_id % $queryStride = 0),
          |scored AS (SELECT q.query_id, c.vec_id AS neighbor_id, $sq8CosSql AS score
          |           FROM cvs c, q WHERE c.vec_id <> q.query_id),
-         |ranked AS (SELECT query_id, neighbor_id,
-         |             CAST(row_number() OVER (PARTITION BY query_id
-         |                    ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rnk
-         |           FROM scored)
+         |${rankCte("ranked", "scored")}
          |SELECT query_id, neighbor_id, rnk FROM ranked WHERE rnk <= $topK""".stripMargin,
     "x_sim_recall_sq8" ->
       s"""WITH $sq8SqlCtes,
          |cf AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |qf AS (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qn
          |       FROM cf WHERE vec_id % $queryStride = 0),
-         |sb AS (SELECT qf.query_id, cf.vec_id AS neighbor_id,
-         |         list_dot_product(qf.qv, cf.v) / (qf.qn * sqrt(list_dot_product(cf.v, cf.v))) AS score
-         |       FROM cf, qf WHERE cf.vec_id <> qf.query_id),
-         |tb AS (SELECT query_id, neighbor_id
-         |       FROM (SELECT query_id, neighbor_id,
-         |               row_number() OVER (PARTITION BY query_id
-         |                      ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |             FROM sb) WHERE rnk <= $topK),
+         |${bruteLegCtes("cf", "qf", "c.vec_id <> q.query_id")},
          |q AS (SELECT vec_id AS query_id, cv AS cq FROM cvs
          |      WHERE vec_id % $queryStride = 0),
          |s8 AS (SELECT q.query_id, c.vec_id AS neighbor_id, $sq8CosSql AS score
          |       FROM cvs c, q WHERE c.vec_id <> q.query_id),
-         |t8 AS (SELECT query_id, neighbor_id
-         |       FROM (SELECT query_id, neighbor_id,
-         |               row_number() OVER (PARTITION BY query_id
-         |                      ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |             FROM s8) WHERE rnk <= $topK),
-         |nb AS (SELECT query_id, count(*) AS n_brute FROM tb GROUP BY 1),
-         |n8 AS (SELECT query_id, count(*) AS n_sq8 FROM t8 GROUP BY 1),
-         |cm AS (SELECT tb.query_id, count(*) AS n_common
-         |       FROM tb JOIN t8 USING (query_id, neighbor_id) GROUP BY 1)
-         |SELECT nb.query_id, nb.n_brute,
-         |       COALESCE(n8.n_sq8, 0) AS n_sq8,
-         |       COALESCE(cm.n_common, 0) AS n_common,
-         |       CAST(round(CAST(COALESCE(cm.n_common, 0) AS DOUBLE) * 10000 / nb.n_brute)
-         |            AS BIGINT) AS recall_bp
-         |FROM nb LEFT JOIN n8 USING (query_id) LEFT JOIN cm USING (query_id)""".stripMargin,
+         |${rankCte("rs8", "s8")},
+         |t8 AS (SELECT query_id, neighbor_id FROM rs8 WHERE rnk <= $topK),
+         |${recallTailSql("tb", "t8", "n_sq8")}""".stripMargin,
     "x_sim_recall" ->
       s"""WITH c AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
          |q AS (SELECT vec_id AS query_id, label AS qlabel, v AS qv,
          |             sqrt(list_dot_product(v, v)) AS qn
          |      FROM c WHERE vec_id % $queryStride = 0),
-         |sb AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
-         |       FROM c, q WHERE c.vec_id <> q.query_id),
-         |rb AS (SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |                ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |       FROM sb),
-         |tb AS (SELECT query_id, neighbor_id FROM rb WHERE rnk <= $topK),
+         |${bruteLegCtes("c", "q", "c.vec_id <> q.query_id")},
          |si AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
          |       FROM c JOIN q ON c.label = q.qlabel AND c.vec_id <> q.query_id),
-         |ri AS (SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |                ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |       FROM si),
+         |${rankCte("ri", "si")},
          |ti AS (SELECT query_id, neighbor_id FROM ri WHERE rnk <= $topK),
-         |nb AS (SELECT query_id, count(*) AS n_brute FROM tb GROUP BY 1),
-         |ni AS (SELECT query_id, count(*) AS n_ivf FROM ti GROUP BY 1),
-         |cm AS (SELECT tb.query_id, count(*) AS n_common
-         |       FROM tb JOIN ti USING (query_id, neighbor_id) GROUP BY 1)
-         |SELECT nb.query_id, nb.n_brute,
-         |       COALESCE(ni.n_ivf, 0) AS n_ivf,
-         |       COALESCE(cm.n_common, 0) AS n_common,
-         |       CAST(round(CAST(COALESCE(cm.n_common, 0) AS DOUBLE) * 10000 / nb.n_brute)
-         |            AS BIGINT) AS recall_bp
-         |FROM nb LEFT JOIN ni USING (query_id) LEFT JOIN cm USING (query_id)""".stripMargin,
+         |${recallTailSql("tb", "ti", "n_ivf")}""".stripMargin,
     "x_sim_topk_rerank" ->
       s"""WITH ${rerankSqlCtes()}
          |SELECT query_id, neighbor_id, rnk FROM rr WHERE rnk <= $topK""".stripMargin,
     "x_sim_recall_rerank" ->
       s"""WITH ${rerankSqlCtes()},
          |ta AS (SELECT query_id, neighbor_id FROM rr WHERE rnk <= $topK),
-         |sb AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
-         |       FROM cc c, cq q WHERE c.vec_id <> q.query_id),
-         |rb AS (SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |                ORDER BY score DESC, neighbor_id ASC) AS rnk
-         |       FROM sb),
-         |tb AS (SELECT query_id, neighbor_id FROM rb WHERE rnk <= $topK),
-         |nb AS (SELECT query_id, count(*) AS n_brute FROM tb GROUP BY 1),
-         |na AS (SELECT query_id, count(*) AS n_rr FROM ta GROUP BY 1),
-         |cm AS (SELECT tb.query_id, count(*) AS n_common
-         |       FROM tb JOIN ta USING (query_id, neighbor_id) GROUP BY 1)
-         |SELECT nb.query_id, nb.n_brute,
-         |       COALESCE(na.n_rr, 0) AS n_rr,
-         |       COALESCE(cm.n_common, 0) AS n_common,
-         |       CAST(round(CAST(COALESCE(cm.n_common, 0) AS DOUBLE) * 10000 / nb.n_brute)
-         |            AS BIGINT) AS recall_bp
-         |FROM nb LEFT JOIN na USING (query_id) LEFT JOIN cm USING (query_id)""".stripMargin)
+         |${bruteLegCtes("cc", "cq", "c.vec_id <> q.query_id")},
+         |${recallTailSql("tb", "ta", "n_rr")}""".stripMargin)
 
   /** Oracle twin of [[kmeansRerankTopK]]: the unrolled Lloyd chain
     * ([[kmeansConvSqlCtes]]) to the converged assignment, the M-step
@@ -3034,9 +2879,6 @@ object Similarity {
        |sr AS (SELECT q.query_id, c.vec_id AS neighbor_id, $cosSql AS score
        |      FROM cc c JOIN pr ON c.cluster = pr.cluster
        |      JOIN cq q ON q.query_id = pr.query_id AND c.vec_id <> q.query_id),
-       |rr AS (SELECT query_id, neighbor_id,
-       |        CAST(row_number() OVER (PARTITION BY query_id
-       |               ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rnk
-       |      FROM sr)""".stripMargin
+       |${rankCte("rr", "sr")}""".stripMargin
   }
 }

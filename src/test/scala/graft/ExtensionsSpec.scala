@@ -1,25 +1,21 @@
 package graft
 
-import graft.functions.{CosinePrefixSims, GraftExtensions}
-import graft.plans.FusePrefixCosines
+import graft.functions.GraftExtensions
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every main (Verify, Bench, the tools) builds through `GraftSession` with
   * `spark.sql.extensions=GraftFunctions.extensionsClass` — the same entry
-  * point a production user sets — so the native function registry and the
-  * `FusePrefixCosines` optimizer rule are load-bearing in graded runs, not
-  * test-only machinery (r11 verdict #5). The conf-string path only fires
-  * when the session also CREATES its SparkContext (exactly the Verify /
+  * point a production user sets — so the native function registry is
+  * load-bearing in graded runs, not test-only machinery. The conf-string
+  * path only fires when the session also CREATES its SparkContext (exactly the Verify /
   * Bench situation: first session in the JVM; in this test JVM a context
   * already exists and `getOrCreate` skips conf-declared extensions with a
   * WARN). So the pin is split: (a) reflectively instantiate the conf
   * string the way `SparkSession.Builder` does — a typo'd class name or a
   * wrong ctor signature fails here, not silently in the graded run; (b)
   * build a session through the SAME extensions object via
-  * `Builder.withExtensions` and pin the optimizer rule, SQL-resolved
-  * native functions, and fusion with no `extraOptimizations`
-  * scaffolding. */
+  * `Builder.withExtensions` and pin the SQL-resolved native functions. */
 class ExtensionsSpec extends AnyFunSuite {
 
   test("the conf string names a loadable (SparkSessionExtensions => Unit) class") {
@@ -68,14 +64,6 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("session built through GraftExtensions carries the fusion rule in its optimizer") {
-    withExtensionsSession { ss =>
-      assert(ss.sessionState.optimizer.extendedOperatorOptimizationRules
-        .contains(FusePrefixCosines),
-        "FusePrefixCosines must be injected by GraftExtensions at session build")
-    }
-  }
-
   test("native functions resolve in SQL without an explicit register() call") {
     withExtensionsSession { ss =>
       val r = ss.sql(
@@ -83,24 +71,6 @@ class ExtensionsSpec extends AnyFunSuite {
           "array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE))) AS c")
         .head().getDouble(0)
       assert(math.abs(r - 1.0) < 1e-12)
-    }
-  }
-
-  test("portable per-slice form fuses with no extraOptimizations scaffolding") {
-    withExtensionsSession { ss =>
-      // Parquet-backed source so ConvertToLocalRelation can't collapse the
-      // plan before the rule sees it (same caveat as PlanFusionSpec).
-      val df = Tables.embeddings(ss, "/root/testdata/sf0.001")
-        .selectExpr("vec_id",
-          "transform(embedding, x -> CAST(x AS DOUBLE)) AS a",
-          "transform(reverse(embedding), x -> CAST(x AS DOUBLE)) AS b")
-        .selectExpr("vec_id",
-          "cosine_sim(slice(a, 1, 4), slice(b, 1, 4)) AS c4",
-          "cosine_sim(slice(a, 1, 8), slice(b, 1, 8)) AS c8")
-      val fused = df.queryExecution.optimizedPlan.expressions
-        .map(_.collect { case e: CosinePrefixSims => e }.size).sum
-      assert(fused == 2,
-        "both prefix depths must read from the fused kernel under the extensions session")
     }
   }
 }

@@ -71,6 +71,24 @@ class FunnelRecallSpec extends SparkSpec {
     }
   }
 
+  test("recallOf: a query with no approximate hits keeps its row; basis points round half up") {
+    // (query, truth size, approximate hits inside the truth, hits outside it)
+    val cases = Seq((1L, 3, 1, 1), (2L, 3, 2, 1), (3L, 6, 1, 0), (4L, 7, 5, 0), (5L, 2, 0, 0))
+    val truth = cases.flatMap { case (q, n, _, _) => (1 to n).map(i => (q, i.toLong)) }
+      .toDF("query_id", "neighbor_id")
+    val approx = cases.flatMap { case (q, _, in, out) =>
+      (1 to in).map(i => (q, i.toLong)) ++ (1 to out).map(i => (q, 100L + i))
+    }.toDF("query_id", "neighbor_id")
+    val got = Similarity.recallOf(truth, approx, "n_x")
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+    assert(got == Set(
+      (1L, 3L, 2L, 1L, 3333L), // 1/3
+      (2L, 3L, 3L, 2L, 6667L), // 2/3
+      (3L, 6L, 1L, 1L, 1667L), // 1/6
+      (4L, 7L, 5L, 5L, 7143L), // 5/7
+      (5L, 2L, 0L, 0L, 0L)))   // no approximate rows at all
+  }
+
   test("ingest-kNN probe is batching-invariant: two micro-batches equal the batch form") {
     // s_knn_stream's correctness claim is NO single-batch assumption (the
     // probe is stateless stream-static, so each ingest vector's top-k

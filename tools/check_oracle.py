@@ -7,6 +7,15 @@ rows by all columns, and compares values exactly (floats bit-exact, with a
 reported max-abs-diff fallback so near-misses are visible).
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+
+Equivalence mode, for a change that rewrites oracle SQL text:
+
+  python3 tools/check_oracle.py <sfDir> <new oracle_sql.json | verifyOutDir> \
+      --against <old oracle_sql.json>
+
+For each name in both dumps it prints SAME (byte-identical text) or, for a
+changed text, runs both strings in DuckDB and compares the canonicalized
+results the same way (EQUIV / DIFF). Names in only one dump are listed.
 """
 import json
 import math
@@ -40,12 +49,36 @@ def cmp_cell(a, b):
     return a == b
 
 
-def main(sf_dir, out_dir):
+def connect(sf_dir):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    return con
+
+
+def diff(exp, got, x, y):
+    """None if frames exp (named x) and got (named y) match after canon(),
+    else why not."""
+    exp, got = canon(exp), canon(got)
+    if list(exp.columns) != list(got.columns):
+        return f"columns differ: {x}={list(exp.columns)} {y}={list(got.columns)}"
+    if len(exp) != len(got):
+        return f"row counts differ: {x}={len(exp)} {y}={len(got)}"
+    for c in exp.columns:
+        for i, (a, b) in enumerate(zip(exp[c].tolist(), got[c].tolist())):
+            if not cmp_cell(a, b):
+                return f"first diff at col={c} row={i}: {x}={a!r} {y}={b!r}"
+    return None
+
+
+def load_oracle(path):
+    return json.load(open(path if path.endswith(".json") else f"{path}/oracle_sql.json"))
+
+
+def main(sf_dir, out_dir):
+    con = connect(sf_dir)
+    oracle = load_oracle(out_dir)
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         try:
@@ -61,28 +94,9 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: spark output missing: {e}")
             n_fail += 1
             continue
-        exp, got = canon(exp), canon(got)
-        if list(exp.columns) != list(got.columns):
-            print(f"FAIL {name}: columns differ: oracle={list(exp.columns)} spark={list(got.columns)}")
-            n_fail += 1
-            continue
-        if len(exp) != len(got):
-            print(f"FAIL {name}: row counts differ: oracle={len(exp)} spark={len(got)}")
-            n_fail += 1
-            continue
-        # dtype-level compare via pandas; fall back to cell loop on mismatch
-        bad = None
-        for c in exp.columns:
-            ev, gv = exp[c].tolist(), got[c].tolist()
-            for i, (a, b) in enumerate(zip(ev, gv)):
-                if not cmp_cell(a, b):
-                    bad = (c, i, a, b)
-                    break
-            if bad:
-                break
+        bad = diff(exp, got, "oracle", "spark")
         if bad:
-            c, i, a, b = bad
-            print(f"FAIL {name}: first diff at col={c} row={i}: oracle={a!r} spark={b!r}")
+            print(f"FAIL {name}: {bad}")
             n_fail += 1
         else:
             print(f"PASS {name} ({len(exp)} rows, {len(exp.columns)} cols)")
@@ -91,5 +105,33 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 
+def against(sf_dir, new_path, old_path):
+    con = connect(sf_dir)
+    new, old = load_oracle(new_path), load_oracle(old_path)
+    for name in sorted(set(new) ^ set(old)):
+        print(f"ONLY {'new' if name in new else 'old'} {name}")
+    n_same = n_equiv = n_diff = 0
+    for name in sorted(set(new) & set(old)):
+        if new[name] == old[name]:
+            print(f"SAME {name}")
+            n_same += 1
+            continue
+        try:
+            bad = diff(con.sql(old[name]).df(), con.sql(new[name]).df(), "old", "new")
+        except Exception as e:
+            bad = f"SQL error: {e}"
+        if bad:
+            print(f"DIFF {name}: {bad}")
+            n_diff += 1
+        else:
+            print(f"EQUIV {name}")
+            n_equiv += 1
+    print(f"== {n_same} same, {n_equiv} changed text with equal results, {n_diff} differ")
+    return 1 if n_diff or set(new) != set(old) else 0
+
+
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    args = sys.argv[1:]
+    if len(args) == 4 and args[2] == "--against":
+        sys.exit(against(args[0], args[1], args[3]))
+    sys.exit(main(args[0], args[1]))
