@@ -291,7 +291,7 @@ object GraftFunctions {
         require(exprs.length == 2,
           s"stopword_hits expects (words, stoplist literal), got ${exprs.length} args")
         // The stoplist must fold to a constant array of strings (e.g.
-        // array('the', 'a')) — it becomes a plan-time constant in the kernel.
+        // array('of', 'and')) — it becomes a plan-time constant in the kernel.
         val stops = exprs(1) match {
           case e if e.foldable && e.dataType.isInstanceOf[ArrayType] =>
             val arr = e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]

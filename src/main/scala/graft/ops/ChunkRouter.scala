@@ -65,19 +65,17 @@ object ChunkRouter {
     * ≥ the sign router's on both fixture scales (BASELINE.md round 18). */
   private[graft] val probeCells = 12
 
-  /** Conf overrides for the two tunables — how a deployment GROWS the
+  /** Conf override for the cell count — how a deployment GROWS the
     * router with its corpus without an engine edit (the k ≈ √n rule the
-    * object scaladoc states; BASELINE.md round 18 measures it at ×10).
-    * Every engine path except the [[routerCtes]] oracle text is
-    * k-agnostic already (the panel is DATA — [[probeSql]] sorts whatever
-    * cells it carries), so only seeding and the probe fan-out read these.
-    * The DuckDB oracles unroll training at the DEFAULTS: oracle-checked
-    * runs leave both confs unset (the driver's Verify does), exactly the
-    * un-closed-store caveat's shape ([[graft.tools.QuantizerClose]]). */
+    * object scaladoc states). Every engine path except the [[routerCtes]]
+    * oracle text is k-agnostic already (the panel is DATA — [[probeSql]]
+    * sorts whatever cells it carries), so only seeding reads it. The
+    * DuckDB oracles unroll training at the DEFAULT: oracle-checked runs
+    * leave the conf unset, exactly the un-closed-store caveat's shape
+    * ([[graft.tools.QuantizerClose]]). The probe fan-out is the constant
+    * [[probeCells]]. */
   private[graft] def cellsOf(s: SparkSession): Int =
     s.conf.getOption("spark.graft.chunkRouterCells").map(_.toInt).getOrElse(cells)
-  private[graft] def probesOf(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.chunkRouterProbes").map(_.toInt).getOrElse(probeCells)
 
   /** Training-sample cap — the object scaladoc's "at 100 TB the training
     * pass moves to a bounded sample" made real. A standing corpus at or

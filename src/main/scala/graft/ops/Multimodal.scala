@@ -1345,7 +1345,7 @@ object MultimodalPipeline {
     // TextAnalysis.modelGateSqlCtes) with the alignment CTEs above and
     // rolls up per stratum.
     "x_mm_curation" ->
-      s"""WITH ${TextAnalysis.modelGateSqlCtes},
+      s"""WITH ${TextAnalysis.modelGateSqlCtes()},
         |dd AS (SELECT doc_id, 8 + doc_id % 9 AS w2, 8 + (doc_id * 3) % 9 AS h2
         |       FROM documents),
         |xs AS (SELECT doc_id, w2, h2, unnest(range(0, w2)) AS x FROM dd),
@@ -1378,7 +1378,7 @@ object MultimodalPipeline {
     // The three-gate funnel: the curation chain above composed with the
     // visual dedup gate's min-id keep policy (phash CTEs + all-pairs hit)
     "x_mm_curation_dedup" ->
-      s"""WITH ${TextAnalysis.modelGateSqlCtes},
+      s"""WITH ${TextAnalysis.modelGateSqlCtes()},
         |${phashSqlCtes(withVariants = false)},
         |ghit2 AS (SELECT a.doc_id, min(b.doc_id) AS dup_of
         |          FROM ph a JOIN ph b ON b.doc_id < a.doc_id

@@ -33,9 +33,8 @@ object Sampling {
 
   /** [[quotaSample]] over any frame with (doc_id, lang, source).
     *
-    * Bounded-heap cut (round 14 — the BM25 index-prune lesson applied to
-    * the sampling tier): a `row_number` window partitioned by
-    * (lang, source) puts each STRATUM's entire candidate set in one
+    * Bounded-heap cut, not a window: a `row_number` window partitioned by
+    * (lang, source) would put each STRATUM's entire candidate set in one
     * window partition — strata number in the dozens, so at 100 TB that is
     * a handful of multi-TB single-task sorts. The heap aggregation
     * ([[graft.functions.TopK.Cut]], bottom-`quota` by
@@ -460,10 +459,9 @@ object Sampling {
 
   /** [[percentileGate]] over any frame with (doc_id, lang, source, text).
     *
-    * HISTOGRAM TWO-PASS (round 14): the direct form — one rank window per
+    * HISTOGRAM TWO-PASS: the direct form — one rank window per
     * (lang, source) stratum — caps parallelism at the stratum count and
-    * single-task-sorts each stratum (the same shape the round-13 verdict
-    * flagged in the BM25 build). Since the rank key `n_words` is a
+    * single-task-sorts each stratum. Since the rank key `n_words` is a
     * bounded-cardinality integer, the exact rank decomposes: aggregate a
     * per-stratum LENGTH HISTOGRAM (|strata|·|distinct lengths| rows —
     * dashboard-sized), take the strictly-above cumulative on the histogram
@@ -519,11 +517,10 @@ object Sampling {
     * 64 Ki-row buckets keep the bucket relation corpus/2¹⁶-sized. */
   private[graft] val packBucketWidth = 65536L
 
-  /** DISTRIBUTED PER-STRATUM PREFIX SUM (round 14): the exact running
+  /** DISTRIBUTED PER-STRATUM PREFIX SUM: the exact running
     * total `out = Σ value over rows before this one in `ord` order within
-    * `strat`` — WITHOUT one sequential cumsum window per stratum (whole
-    * strata through |strat| tasks, the low-cardinality-window shape the
-    * round-14 sweep retired everywhere else). Classic two-level scan:
+    * `strat`` — WITHOUT one sequential cumsum window per stratum, which
+    * would push whole strata through |strat| tasks. Classic two-level scan:
     * rows bucket by `ord div bucketW` (monotone ⇒ order-preserving across
     * buckets); per-(stratum, bucket) totals aggregate into a corpus/B-row
     * relation whose own per-stratum cumulative is a window over BUCKET
@@ -857,22 +854,12 @@ object Sampling {
          |SELECT doc_id, lang, n_words, weight, ticket
          |FROM t ORDER BY ticket, doc_id LIMIT $weightedK""".stripMargin,
     "x_curate_shard" ->
-      s"""WITH w AS (SELECT doc_id, lang, source, text,
-         |             string_split(text, ' ') AS words FROM documents),
-         |b AS (SELECT doc_id, lang, text,
-         |        CAST(len(words) AS BIGINT) AS n_words,
-         |        CAST(len(list_filter(words,
-         |          x -> list_contains(['the', 'a', 'of', 'and', 'is'], x))) AS BIGINT) AS n_stop
-         |      FROM w),
-         |q AS (SELECT * FROM b
-         |      WHERE n_words >= 20 AND n_words <= 2000 AND n_stop >= 1),
-         |k AS (SELECT CAST(min(doc_id) AS BIGINT) AS doc_id FROM q GROUP BY md5(text)),
-         |kd AS (SELECT doc_id, lang, n_words, md5(CAST(doc_id AS VARCHAR)) AS h
-         |       FROM q WHERE doc_id IN (SELECT doc_id FROM k)),
+      s"""WITH ${TextAnalysis.curatedSqlCtes("lang")},
+         |kh AS (SELECT doc_id, lang, n_words, md5(CAST(doc_id AS VARCHAR)) AS h FROM kd),
          |s AS (SELECT doc_id, lang, n_words, h,
          |        CAST((instr('0123456789abcdef', substr(h, 1, 1)) - 1) % $nShards
          |             AS BIGINT) AS shard
-         |      FROM kd)
+         |      FROM kh)
          |SELECT doc_id, lang, n_words, shard,
          |       CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id)
          |            AS BIGINT) AS pos

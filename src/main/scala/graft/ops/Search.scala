@@ -586,8 +586,7 @@ object Search {
       .withColumn("q", expr("transform(qv, x -> CAST(x AS BIGINT))"))
       .crossJoin(broadcast(panel))
       .select(col("query_id"), col("qv"),
-        explode(expr(ChunkRouter.probeSql("q",
-          ChunkRouter.probesOf(queryDocs.sparkSession)))).as("bucket"))
+        explode(expr(ChunkRouter.probeSql("q"))).as("bucket"))
     TopK.topK(
       cv.join(Hints.broadcastSmall(probes), Seq("bucket"))
         .filter(expr(s"chunk_key div $chunkKeyMod") =!= col("query_id"))

@@ -1713,14 +1713,6 @@ object Similarity {
     * handful of components (outlier pruning, diversity binning). */
   private[graft] val pcaK = 4
 
-  /** Engine-portable floor division for a SIGNED numerator and positive
-    * divisor: Spark's `div` truncates toward zero, DuckDB's `//` floors —
-    * they disagree on negatives. Subtracting the positive modulus first
-    * makes the numerator exactly divisible, where truncation and floor
-    * coincide. Both oracle builders interpolate the same identity. */
-  private def floorDivSql(a: String, b: String): String =
-    s"($a - (($a % $b + $b) % $b)) div $b"
-
   /** X-PCA: the corpus's dominant principal direction by fixed-point POWER
     * ITERATION — the training step behind embedding whitening/PCA that
     * pipelines run before quantization or semantic dedup (rotating to the
@@ -1746,7 +1738,9 @@ object Similarity {
     *    reaches the driver.
     *  - All arithmetic is exact integer: milli-quantized inputs
     *    ([[pcaQScale]]), and each round max-abs-rescales to [[pcaVScale]]
-    *    via `Math.floorDiv` — the oracle's [[floorDivSql]] twin — so the
+    *    via `Math.floorDiv` — the oracle floors the same way by
+    *    subtracting the positive modulus first (`(a − ((a % b + b) % b))
+    *    // b`, exactly divisible, so truncation and floor agree) — so the
     *    iterate is bit-identical across engines (the quantized-k-means
     *    trick applied to an eigensolver).
     *
@@ -1929,8 +1923,10 @@ object Similarity {
     * Exactness: the quadratic form reaches ~2·10²⁵ at the documented
     * iterate bounds — beyond Long, comfortably inside 128-bit — so the
     * driver computes in BigInt and the oracle in DuckDB HUGEINT, the SAME
-    * exact integers; the floor-to-BIGINT at the end uses the
-    * [[floorDivSql]] identity on both sides, and the final narrowing is
+    * exact integers; the floor-to-BIGINT at the end uses the identity
+    * ⌊a/b⌋ = (a − ((a mod b + b) mod b)) / b (b > 0; the numerator is then
+    * exactly divisible, so truncating and flooring division agree) on both
+    * sides, and the final narrowing is
     * `longValueExact` vs HUGEINT→BIGINT cast — loud on both. Driver-side
     * on the corpus-independent d² matrix like the basis itself
     * ([[pcaBasis]]): nothing here scales with corpus size. */
@@ -2443,9 +2439,9 @@ object Similarity {
     * same max-abs Gram rescale to [[pcaGScale]], then per component
     * [[pcaRounds]] matvec + rescale + (for components past the first)
     * modified-Gram-Schmidt CTEs generated from the same constants, with the
-    * DuckDB spelling of [[floorDivSql]] (`//` floors where Spark's `div`
-    * truncates; the subtracted-modulus numerator is exactly divisible,
-    * where the two agree). Component c's final iterate lands in CTE `w{c}`.
+    * floor division spelled `(a − ((a % b + b) % b)) // b` (`//` floors
+    * where Spark's `div` truncates; the subtracted-modulus numerator is
+    * exactly divisible, where the two agree). Component c's final iterate lands in CTE `w{c}`.
     * Any overflow raises on DuckDB's HUGEINT→BIGINT casts — the same loud
     * failure as the engine's `multiplyExact`. */
   private def pcaCtes(k: Int): String = {

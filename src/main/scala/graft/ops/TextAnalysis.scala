@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.functions.{TopK, TopKOrder}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,6 +39,42 @@ object TextAnalysis {
     s"len(list_filter($words, x -> list_contains([$arr], x)))"
   }
 
+  /** The curation gate's per-document features: the `keep` columns
+    * (evaluated over `docs` plus its `words` split), then `n_words`, the
+    * English stopword count `n_stop` and the punctuation count `n_punct`.
+    * The one projection every gate consumer reads ([[quality]],
+    * [[docBase]], [[curatedOf]], [[gateMapSide]], [[modelTrainDocs]]);
+    * columns a consumer drops prune away in Catalyst. Callers must have
+    * [[graft.functions.GraftFunctions.register]]ed the session. */
+  private[graft] def gateFeatures(docs: DataFrame, keep: Column*): DataFrame =
+    docs.withColumn("words", split(col("text"), " "))
+      .select(keep ++ Seq(
+        size(col("words")).cast("long").as("n_words"),
+        expr(hitsExpr("words", stoplists.toMap.apply("en"))).cast("long").as("n_stop"),
+        expr("CAST(regexp_count(text, '[^a-z0-9 ]') AS BIGINT)").as("n_punct")): _*)
+
+  /** [[gateFeatures]]' oracle twin, the CTE pair `w`/`f`: per document
+    * `doc_id`, the `pass` columns of `documents`, `n_words`, `n_stop` and
+    * `n_punct`. */
+  private def gateFeatureSqlCtes(pass: String*): String = {
+    val keep = "doc_id" +: pass
+    s"""w AS (SELECT ${(keep :+ "text").distinct.mkString(", ")}, string_split(text, ' ') AS words
+       |           FROM documents),
+       |f AS (SELECT ${keep.mkString(", ")},
+       |        CAST(len(words) AS BIGINT) AS n_words,
+       |        CAST(${hitsSql("words", stoplists.toMap.apply("en"))} AS BIGINT) AS n_stop,
+       |        CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS BIGINT) AS n_punct
+       |      FROM w)""".stripMargin
+  }
+
+  /** The heuristic quality rule over (n_words, n_stop): 20 to 2000 words
+    * and at least one English stopword. */
+  private[graft] val qualityRule: Column =
+    col("n_words") >= 20 && col("n_words") <= 2000 && col("n_stop") >= 1
+
+  /** [[qualityRule]]'s oracle twin. */
+  private val qualitySql = "n_words >= 20 AND n_words <= 2000 AND n_stop >= 1"
+
   /** Language ID: argmax of per-language stopword hit counts, deterministic
     * tie-break in stoplist order (de, en, es, fr). */
   def langId(s: SparkSession, d: String): DataFrame = {
@@ -60,20 +96,14 @@ object TextAnalysis {
     * the usual cheap pre-filters before expensive dedup/training steps. */
   def quality(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val en = stoplists.toMap.apply("en")
-    Tables.documents(s, d)
-      .select(col("doc_id"), col("text"), split(col("text"), " ").as("words"))
-      .select(
-        col("doc_id"),
-        size(col("words")).cast("long").as("n_words"),
-        length(col("text")).cast("long").as("n_chars_m"),
-        expr(hitsExpr("words", en)).cast("long").as("n_stop"))
+    gateFeatures(Tables.documents(s, d),
+        col("doc_id"), length(col("text")).cast("long").as("n_chars_m"))
+      .select(col("doc_id"), col("n_words"), col("n_chars_m"), col("n_stop"))
       .withColumn("avg_word_len_c",
         expr("CAST(round(CAST(n_chars_m - (n_words - 1) AS DOUBLE) / n_words * 100) AS BIGINT)"))
       .withColumn("stop_bp",
         expr("CAST(round(CAST(n_stop AS DOUBLE) * 10000 / n_words) AS BIGINT)"))
-      .withColumn("is_quality",
-        col("n_words") >= 20 && col("n_words") <= 2000 && col("n_stop") >= 1)
+      .withColumn("is_quality", qualityRule)
   }
 
   /** Token counting: whitespace tokens and a BPE-ish regex segmentation
@@ -109,10 +139,10 @@ object TextAnalysis {
     * counting pass behind tokenizer/vocab construction. Plan: explode →
     * partial count map-side (the heavy reduction happens before the shuffle;
     * only distinct (lang, token) partials move) → final count → per-lang
-    * bounded-heap head cut ([[graft.functions.TopK.Cut]], round 14):
-    * the earlier per-lang `row_number` window capped parallelism at
-    * |langs| and sorted each language's ENTIRE aggregated vocab in one
-    * task — at web scale a language's distinct-token table is 10⁸+ rows.
+    * bounded-heap head cut ([[graft.functions.TopK.Cut]]), not a per-lang
+    * `row_number` window, which would cap parallelism at |langs| and sort
+    * each language's ENTIRE aggregated vocab in one task — at web scale a
+    * language's distinct-token table is 10⁸+ rows.
     * The aggregator's map-side partials bound state at 20 per partition
     * per lang at the tf relation's full parallelism, and `posexplode` of
     * the sorted survivors IS the rank — no window, no vocab-wide sort. */
@@ -188,6 +218,23 @@ object TextAnalysis {
         expr("(100 * bits_sum) div n_tokens").as("mean_bits_c"))
   }
 
+  /** CTE chain ending in `surp` (doc_id, n_tokens, bits_sum, mean_bits_c),
+    * [[surprisalDocs]]' oracle twin. Bit length via binary printf is the
+    * integer-exact twin of Spark's `length(bin(x))`; the HUGEINT sum is
+    * cast back per the house rule. */
+  private val surprisalSqlCtes =
+    """t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
+      |tk AS (SELECT doc_id, token FROM t WHERE length(token) > 0),
+      |tf AS (SELECT token, count(*) AS tf FROM tk GROUP BY 1),
+      |n AS (SELECT CAST(sum(tf) AS BIGINT) AS n_corpus FROM tf),
+      |sagg AS (SELECT doc_id, count(*) AS n_tokens,
+      |           CAST(sum(length(printf('%b', n.n_corpus))
+      |                    - length(printf('%b', tf.tf))) AS BIGINT) AS bits_sum
+      |         FROM tk JOIN tf USING (token) CROSS JOIN n GROUP BY 1),
+      |surp AS (SELECT doc_id, n_tokens, bits_sum,
+      |           CAST((100 * bits_sum) // n_tokens AS BIGINT) AS mean_bits_c
+      |         FROM sagg)""".stripMargin
+
   /** Log₂-bucketed token-count histogram — the sequence-length profile a
     * training-data pipeline computes BEFORE choosing context length and
     * packing strategy ([[graft.ops.Sampling]]'s `ctxLen`/`x_pack_sequences`
@@ -256,18 +303,9 @@ object TextAnalysis {
   private[ops] def docBase(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     SpillMemo.spill(s, "docbase", d) {
-      val en = stoplists.toMap.apply("en")
       val docs = Tables.documents(s, d)
-      val mapSide = docs
-        .select(col("doc_id"), col("lang"), col("text"),
-          split(col("text"), " ").as("words"))
-        .select(
-          col("doc_id"), col("lang"),
-          size(col("words")).cast("long").as("n_words"),
-          length(col("text")).cast("long").as("n_chars_m"),
-          expr(hitsExpr("words", en)).cast("long").as("n_stop"),
-          expr("CAST(regexp_count(text, '[^a-z0-9 ]') AS BIGINT)").as("n_punct"),
-          md5(col("text")).as("h"))
+      val mapSide = gateFeatures(docs, col("doc_id"), col("lang"),
+        length(col("text")).cast("long").as("n_chars_m"), md5(col("text")).as("h"))
       val sp = surprisalDocs(docs).select(col("doc_id"), col("n_tokens"), col("bits_sum"))
       // LEFT join: the surprisal leg only has docs with ≥1 non-empty token
       // (its tokenizer filters empty strings), but the base relation must
@@ -286,12 +324,12 @@ object TextAnalysis {
     * heuristic [[quality]] gates (length / stopword coverage), the
     * corpus-LM [[surprisal]] score, and an exact-duplicate flag (has a
     * lower-id doc with identical content hash — the [[graft.ops.Dedup]]
-    * survivor convention). All three now come off the ONE materialized
-    * [[docBase]] relation (round-9 verdict #2: the previous composition
-    * re-scanned the corpus three times and sort-merge-joined the results;
-    * the dup flag's window and the derived ratios run over the compact
-    * integer base instead). At 100 TB this is the table you export once
-    * per corpus snapshot and train every downstream policy against. */
+    * survivor convention). All three come off the ONE materialized
+    * [[docBase]] relation, so the corpus is scanned once and the dup
+    * flag's window and the derived ratios run over the compact integer
+    * base, with no join of per-family results. At 100 TB this is the
+    * table you export once per corpus snapshot and train every downstream
+    * policy against. */
   def docFeatures(s: SparkSession, d: String): DataFrame = {
     val dupW = Window.partitionBy(col("h"))
     docBase(s, d)
@@ -303,7 +341,7 @@ object TextAnalysis {
       .select(
         col("doc_id"), col("n_words"),
         expr("CAST(round(CAST(n_stop AS DOUBLE) * 10000 / n_words) AS BIGINT)").as("stop_bp"),
-        (col("n_words") >= 20 && col("n_words") <= 2000 && col("n_stop") >= 1).as("is_quality"),
+        qualityRule.as("is_quality"),
         col("n_tokens"), col("bits_sum"),
         expr("(100 * bits_sum) div n_tokens").as("mean_bits_c"),
         col("is_dup"))
@@ -461,7 +499,7 @@ object TextAnalysis {
           expr(s"slice(words, CAST(start_w + 1 AS INT), $chunkLen)"))).as("chunk_h"))
 
   /** Chunk rows WITH their text — what chunk-level retrieval indexes
-    * ([[graft.ops.Search]] RAG family, r15 verdict #8): same geometry
+    * ([[graft.ops.Search]] RAG family): same geometry
     * expansion as [[chunksDocs]], the final chunk running short rather
     * than re-reading the tail. Map-side explode, zero shuffles. */
   private[graft] def chunkTextDocs(docs: DataFrame): DataFrame =
@@ -482,10 +520,10 @@ object TextAnalysis {
     *
     * Plan: map-side kernel + explode, one shuffle for the (lang, shingle)
     * count with map-side partial aggregation, then the per-lang
-    * bounded-heap head cut ([[graft.functions.TopK.Cut]], round 14
-    * — the [[vocab]] rewrite applied here too, where it matters MORE: the
-    * distinct-shingle table dwarfs the vocab at any scale, and a per-lang
-    * window sorted all of it in |langs| tasks). Deterministic cut:
+    * bounded-heap head cut ([[graft.functions.TopK.Cut]], as in [[vocab]],
+    * where it matters MORE: the distinct-shingle table dwarfs the vocab at
+    * any scale, and a per-lang window would sort all of it in |langs|
+    * tasks). Deterministic cut:
     * (df desc, shingle asc); `posexplode` of the sorted survivors is the
     * rank. */
   def ngramTopK(s: SparkSession, d: String): DataFrame = {
@@ -736,27 +774,21 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_emails"), col("n_ips"), col("n_nums"), col("scrub_h"))
   }
 
-  /** The full curation funnel in ONE composed query — quality gate →
-    * exact-dedup survivor selection → per-(lang, source) corpus stats —
-    * because a training-data engine is judged on composed pipelines, not
-    * single operators. Stage fusion is Catalyst's job: the quality gate is a
-    * map-side filter fused into the scan, dedup survival is one
-    * content-hash aggregation joined back semi-style, and the rollup reuses
-    * the already-filtered stream. Per-stage doc counts are carried through
-    * so the output shows the funnel (total → quality → kept) per stratum. */
-  /** Quality gate → exact-dedup keep-list, the curated document set both
-    * [[curation]] (the funnel rollup) and [[packCurated]] (the training-set
-    * assembly) consume. */
+  /** Quality gate → exact-dedup keep-list, the curated document set
+    * [[curation]] (the funnel rollup), [[packCurated]] (the training-set
+    * assembly) and [[Sampling.curateShard]] consume. */
   private[graft] def curatedDocs(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val en = stoplists.toMap.apply("en")
-    val base = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("source"), col("text"),
-        split(col("text"), " ").as("words"))
-      .withColumn("n_words", size(col("words")).cast("long"))
-      .withColumn("n_stop", expr(hitsExpr("words", en)).cast("long"))
-    val quality = base
-      .filter(col("n_words") >= 20 && col("n_words") <= 2000 && col("n_stop") >= 1)
+    curatedOf(Tables.documents(s, d))
+  }
+
+  /** [[curatedDocs]] over any (doc_id, lang, source, text) frame: the
+    * [[gateFeatures]] rows passing [[qualityRule]], each kept only if it
+    * is the lowest doc_id among the passing rows with its exact text.
+    * Callers must have registered the kernels. */
+  private[graft] def curatedOf(docs: DataFrame): DataFrame = {
+    val quality = gateFeatures(docs, col("doc_id"), col("lang"), col("source"), col("text"))
+      .filter(qualityRule)
     val keep = quality
       .groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
@@ -764,6 +796,23 @@ object TextAnalysis {
     quality.join(keep, Seq("doc_id"), "left_semi")
   }
 
+  /** [[curatedOf]]'s oracle twin, a CTE chain ending in `kd`: the gate
+    * features with `text` and the `pass` columns carried (`w`/`f`), the
+    * rows passing [[qualitySql]] (`q`), the lowest doc_id per exact text
+    * (`k`) and the kept rows (`kd`). */
+  private[ops] def curatedSqlCtes(pass: String*): String =
+    s"""${gateFeatureSqlCtes(pass :+ "text": _*)},
+       |q AS (SELECT * FROM f WHERE $qualitySql),
+       |k AS (SELECT CAST(min(doc_id) AS BIGINT) AS doc_id FROM q GROUP BY md5(text)),
+       |kd AS (SELECT * FROM q WHERE doc_id IN (SELECT doc_id FROM k))""".stripMargin
+
+  /** The full curation funnel in ONE composed query — quality gate →
+    * exact-dedup survivor selection → per-(lang, source) corpus stats —
+    * because a training-data engine is judged on composed pipelines, not
+    * single operators. Stage fusion is Catalyst's job: the quality gate is a
+    * map-side filter fused into the scan, dedup survival is one
+    * content-hash aggregation joined back semi-style, and the rollup reuses
+    * the already-filtered stream. */
   def curation(s: SparkSession, d: String): DataFrame =
     curatedDocs(s, d)
       .groupBy(col("lang"), col("source"))
@@ -816,17 +865,27 @@ object TextAnalysis {
     gateScore(docBase(s, d)
       .select(col("doc_id"), col("n_words"), col("n_stop"), col("n_punct")))
 
+  /** Per-mille stopword and punctuation rates over (n_words, n_stop,
+    * n_punct): the features both [[gateScore]] and [[trainFeatures]] read. */
+  private val stopPm = expr("n_stop * 1000 div n_words")
+  private val punctPm = expr("n_punct * 1000 div n_words")
+
   /** The gate's scoring columns over any frame with (n_words, n_stop,
     * n_punct) — ONE definition of the decision arithmetic, shared by the
     * batch gate (off the memoized base) and the streamed ingest gate (off
     * map-side counts), so the weights cannot drift between the two. */
   private def gateScore(df: DataFrame): DataFrame =
-    df.withColumn("stop_pm", expr("n_stop * 1000 div n_words"))
-      .withColumn("punct_pm", expr("n_punct * 1000 div n_words"))
+    df.withColumn("stop_pm", stopPm)
+      .withColumn("punct_pm", punctPm)
       .withColumn("score_m",
         expr(s"$gwStop * stop_pm + ($gwPunct) * punct_pm" +
           s" + $gwLen * least(n_words, $gwLenCap) + ($gwBias)"))
       .withColumn("is_admit", col("score_m") >= 0)
+
+  /** [[gateScore]]'s logit in DuckDB, over (stop_pm, punct_pm, n_words). */
+  private val gateScoreSql =
+    s"""$gwStop * stop_pm + ($gwPunct) * punct_pm
+       |             + $gwLen * least(n_words, $gwLenCap) + ($gwBias)""".stripMargin
 
   /** PER-LANGUAGE SCORE CALIBRATION (`x_quality_calibrate`): each
     * document's quality-gate score re-expressed as its PERCENTILE WITHIN
@@ -839,10 +898,9 @@ object TextAnalysis {
     * `pct_bp = (rank − 1)·10000 div (n_lang − 1)`: integer-exact, 0 for
     * each language's worst document, 10000 for its best.
     *
-    * Plan (round 14 — the histogram form its own scaladoc used to only
-    * name): the gate score comes off the memoized per-doc feature base
-    * ([[docBase]] — corpus text is not re-read). The per-language rank no
-    * longer runs as one window per language (parallelism ceiling |langs|,
+    * Plan: the gate score comes off the memoized per-doc feature base
+    * ([[docBase]] — corpus text is not re-read). The per-language rank
+    * does not run as one window per language (parallelism ceiling |langs|,
     * one task sorting each language): `score_m` is a bounded integer, so
     * the rank decomposes through a per-language SCORE HISTOGRAM —
     * aggregate (lang, score_m) counts, take the strictly-below cumulative
@@ -934,17 +992,8 @@ object TextAnalysis {
     * no memo, no shuffle, so it is exactly what a streaming micro-batch
     * can run (caller must have registered the kernels on the session that
     * OWNS the frame). Keeps `lang` for the per-stratum rollup. */
-  private[graft] def gateMapSide(docs: DataFrame): DataFrame = {
-    val en = stoplists.toMap.apply("en")
-    gateScore(docs
-      .select(col("doc_id"), col("lang"), col("text"),
-        split(col("text"), " ").as("words"))
-      .select(
-        col("doc_id"), col("lang"),
-        size(col("words")).cast("long").as("n_words"),
-        expr(hitsExpr("words", en)).cast("long").as("n_stop"),
-        expr("CAST(regexp_count(text, '[^a-z0-9 ]') AS BIGINT)").as("n_punct")))
-  }
+  private[graft] def gateMapSide(docs: DataFrame): DataFrame =
+    gateScore(gateFeatures(docs, col("doc_id"), col("lang")))
 
   /** [[gateMapSide]] rolled up per (lang, decision) — the census the
     * streamed gate maintains in update mode (and the spec's batch
@@ -957,25 +1006,10 @@ object TextAnalysis {
   /** The streamed gate's oracle: the batch gate CTEs widened with `lang`,
     * rolled up per (lang, decision) — shared with `s_model_gate_stream`. */
   private[graft] def gateRollupSql: String =
-    s"""WITH w AS (SELECT doc_id, lang, text, string_split(text, ' ') AS words
-       |           FROM documents),
-       |f AS (SELECT doc_id, lang,
-       |        CAST(len(words) AS BIGINT) AS n_words,
-       |        CAST(${hitsSql("words", stoplists.toMap.apply("en"))} AS BIGINT) AS n_stop,
-       |        CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS BIGINT) AS n_punct
-       |      FROM w),
-       |p AS (SELECT doc_id, lang,
-       |        CAST(n_stop * 1000 // n_words AS BIGINT) AS stop_pm,
-       |        CAST(n_punct * 1000 // n_words AS BIGINT) AS punct_pm,
-       |        n_words
-       |      FROM f),
-       |g AS (SELECT doc_id, lang,
-       |        CAST($gwStop * stop_pm + ($gwPunct) * punct_pm
-       |             + $gwLen * least(n_words, $gwLenCap) + ($gwBias) AS BIGINT) AS score_m
-       |      FROM p)
-       |SELECT lang, score_m >= 0 AS is_admit, count(*) AS n_docs,
+    s"""WITH ${modelGateSqlCtes("lang")}
+       |SELECT lang, is_admit, count(*) AS n_docs,
        |       CAST(sum(score_m) AS BIGINT) AS score_m_sum
-       |FROM g GROUP BY 1, 2""".stripMargin
+       |FROM mg GROUP BY 1, 2""".stripMargin
 
   /** Perceptron training rounds for [[modelTrain]] — a fixed hyperparameter
     * like `Similarity.pcaRounds`; the oracle unrolls exactly this many. */
@@ -1002,30 +1036,21 @@ object TextAnalysis {
     * driver. Emits (round, n_mis, weights) per round: the training curve
     * IS the output, so convergence is oracle-checkable. */
   def modelTrain(s: SparkSession, d: String): DataFrame =
-    modelTrainFeats(docBase(s, d).select(
-      when(col("lang") === "en", 1L).otherwise(-1L).as("y"),
-      expr("n_stop * 1000 div n_words").as("stop_pm"),
-      expr("n_punct * 1000 div n_words").as("punct_pm"),
-      expr(s"least(n_words, $gwLenCap)").as("len_c")))
+    modelTrainFeats(trainFeatures(docBase(s, d)))
 
   /** [[modelTrain]] over any frame with (lang, text) — exposed for the
     * hand-computed spec (caller must have registered the kernels). */
-  private[graft] def modelTrainDocs(docs: DataFrame): DataFrame = {
-    val en = stoplists.toMap.apply("en")
-    modelTrainFeats(Lineage.cut(
-      docs
-        .select(col("lang"), col("text"),
-          split(col("text"), " ").as("words"))
-        .select(
-          when(col("lang") === "en", 1L).otherwise(-1L).as("y"),
-          size(col("words")).cast("long").as("n_words"),
-          expr(hitsExpr("words", en)).cast("long").as("n_stop"),
-          expr("CAST(regexp_count(text, '[^a-z0-9 ]') AS BIGINT)").as("n_punct"))
-        .select(col("y"),
-          expr("n_stop * 1000 div n_words").as("stop_pm"),
-          expr("n_punct * 1000 div n_words").as("punct_pm"),
-          expr(s"least(n_words, $gwLenCap)").as("len_c"))))
-  }
+  private[graft] def modelTrainDocs(docs: DataFrame): DataFrame =
+    modelTrainFeats(Lineage.cut(trainFeatures(gateFeatures(docs, col("lang")))))
+
+  /** The perceptron's rows (y, stop_pm, punct_pm, len_c) over any frame
+    * with (lang, n_words, n_stop, n_punct): label +1 for English, −1
+    * otherwise. */
+  private def trainFeatures(df: DataFrame): DataFrame =
+    df.select(
+      when(col("lang") === "en", 1L).otherwise(-1L).as("y"),
+      stopPm.as("stop_pm"), punctPm.as("punct_pm"),
+      expr(s"least(n_words, $gwLenCap)").as("len_c"))
 
   /** The perceptron loop over an already-materialized feature relation
     * (parquet-backed [[docBase]] projection or a lineage-cut derivation —
@@ -1125,8 +1150,9 @@ object TextAnalysis {
 
   /** [[modelTrain]]'s unrolled twin: the [[modelGate]] feature CTEs plus
     * one (gradient, weights) CTE pair per round generated from
-    * [[trainRounds]]. Pure comparisons and additions — no division at all,
-    * so there is no floor/truncation seam between the engines. */
+    * [[trainRounds]]. The rounds are pure comparisons and additions over
+    * the gate's non-negative per-mille rates, so there is no
+    * floor/truncation seam between the engines. */
   private def modelTrainSql: String = {
     val margin = "y * (ws * stop_pm + wp * punct_pm + wl * len_c + wb)"
     val rounds = (1 to trainRounds).map { r =>
@@ -1136,7 +1162,7 @@ object TextAnalysis {
          |         CAST(coalesce(sum(y * punct_pm), 0) AS BIGINT) AS gp,
          |         CAST(coalesce(sum(y * len_c), 0) AS BIGINT) AS gl,
          |         CAST(coalesce(sum(y), 0) AS BIGINT) AS gb
-         |  FROM p, r${r - 1} WHERE $margin <= 0),
+         |  FROM tx, r${r - 1} WHERE $margin <= 0),
          |r$r AS (
          |  SELECT g$r.n_mis AS n_mis, ws + gs AS ws, wp + gp AS wp,
          |         wl + gl AS wl, wb + gb AS wb
@@ -1146,18 +1172,10 @@ object TextAnalysis {
       s"""SELECT CAST($r AS BIGINT) AS round, n_mis, ws AS w_stop, wp AS w_punct,
          |       wl AS w_len, wb AS w_bias FROM r$r""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH w AS (SELECT doc_id, lang, text, string_split(text, ' ') AS words
-       |           FROM documents),
-       |f AS (SELECT doc_id, lang,
-       |        CAST(len(words) AS BIGINT) AS n_words,
-       |        CAST(${hitsSql("words", stoplists.toMap.apply("en"))} AS BIGINT) AS n_stop,
-       |        CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS BIGINT) AS n_punct
-       |      FROM w),
-       |p AS (SELECT CAST(CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS BIGINT) AS y,
-       |        CAST(n_stop * 1000 // n_words AS BIGINT) AS stop_pm,
-       |        CAST(n_punct * 1000 // n_words AS BIGINT) AS punct_pm,
-       |        CAST(least(n_words, $gwLenCap) AS BIGINT) AS len_c
-       |      FROM f),
+    s"""WITH ${modelGateSqlCtes("lang")},
+       |tx AS (SELECT CAST(CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS BIGINT) AS y,
+       |         stop_pm, punct_pm, CAST(least(n_words, $gwLenCap) AS BIGINT) AS len_c
+       |       FROM p),
        |r0 AS (SELECT CAST(0 AS BIGINT) AS ws, CAST(0 AS BIGINT) AS wp,
        |              CAST(0 AS BIGINT) AS wl, CAST(0 AS BIGINT) AS wb),
        |$rounds
@@ -1165,35 +1183,30 @@ object TextAnalysis {
   }
 
   /** CTE chain ending in `mg` — the model-gate decision per document
-    * (features → per-mille rates → integer logit → `is_admit`). Shared by
-    * the `x_model_gate` oracle and the multimodal curation ledger's
-    * ([[MultimodalPipeline]] `x_mm_curation`), so the gate arithmetic has
-    * one SQL spelling. */
-  private[graft] def modelGateSqlCtes: String =
-    s"""w AS (SELECT doc_id, text, string_split(text, ' ') AS words
-       |           FROM documents),
-       |f AS (SELECT doc_id,
-       |        CAST(len(words) AS BIGINT) AS n_words,
-       |        CAST(${hitsSql("words", stoplists.toMap.apply("en"))} AS BIGINT) AS n_stop,
-       |        CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS BIGINT) AS n_punct
-       |      FROM w),
-       |p AS (SELECT doc_id, n_words, n_stop, n_punct,
+    * (features → per-mille rates `p` → integer logit → `is_admit`), with
+    * `doc_id` and the `pass` columns of `documents` carried. Shared by the
+    * gate, calibration, curriculum, training and streamed-gate oracles and
+    * the multimodal curation ledger ([[MultimodalPipeline]]
+    * `x_mm_curation`), so the gate arithmetic has one SQL spelling. */
+  private[graft] def modelGateSqlCtes(pass: String*): String = {
+    val keep = ("doc_id" +: pass).mkString(", ")
+    s"""${gateFeatureSqlCtes(pass: _*)},
+       |p AS (SELECT $keep, n_words, n_stop, n_punct,
        |        CAST(n_stop * 1000 // n_words AS BIGINT) AS stop_pm,
        |        CAST(n_punct * 1000 // n_words AS BIGINT) AS punct_pm
        |      FROM f),
-       |mg AS (SELECT doc_id, n_words, n_stop, n_punct, stop_pm, punct_pm,
-       |        CAST($gwStop * stop_pm + ($gwPunct) * punct_pm
-       |             + $gwLen * least(n_words, $gwLenCap) + ($gwBias) AS BIGINT) AS score_m,
-       |        ($gwStop * stop_pm + ($gwPunct) * punct_pm
-       |             + $gwLen * least(n_words, $gwLenCap) + ($gwBias)) >= 0 AS is_admit
+       |mg AS (SELECT $keep, n_words, n_stop, n_punct, stop_pm, punct_pm,
+       |        CAST($gateScoreSql AS BIGINT) AS score_m,
+       |        ($gateScoreSql) >= 0 AS is_admit
        |       FROM p)""".stripMargin
+  }
 
   val oracle: Map[String, String] = {
     val hits = (l: String) => hitsSql("words", stoplists.toMap.apply(l))
     Map(
       "x_model_train" -> modelTrainSql,
       "x_model_gate" ->
-        s"""WITH $modelGateSqlCtes
+        s"""WITH ${modelGateSqlCtes()}
            |SELECT doc_id, n_words, n_stop, n_punct, stop_pm, punct_pm,
            |       score_m, is_admit
            |FROM mg""".stripMargin,
@@ -1212,47 +1225,20 @@ object TextAnalysis {
            |FROM ck JOIN top ON top.rnk <= ck.n_vocab CROSS JOIN tot
            |GROUP BY ck.n_vocab, tot.total_tokens""".stripMargin,
       "x_quality_calibrate" ->
-        s"""WITH w AS (SELECT doc_id, lang, text, string_split(text, ' ') AS words
-           |           FROM documents),
-           |f AS (SELECT doc_id, lang,
-           |        CAST(len(words) AS BIGINT) AS n_words,
-           |        CAST(${hitsSql("words", stoplists.toMap.apply("en"))} AS BIGINT) AS n_stop,
-           |        CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS BIGINT) AS n_punct
-           |      FROM w),
-           |sc AS (SELECT doc_id, lang,
-           |         CAST($gwStop * (n_stop * 1000 // n_words)
-           |              + ($gwPunct) * (n_punct * 1000 // n_words)
-           |              + $gwLen * least(n_words, $gwLenCap) + ($gwBias) AS BIGINT) AS score_m
-           |       FROM f),
+        s"""WITH ${modelGateSqlCtes("lang")},
            |r AS (SELECT doc_id, lang, score_m,
            |        CAST(row_number() OVER (PARTITION BY lang ORDER BY score_m, doc_id) AS BIGINT) AS rnk,
            |        CAST(count(*) OVER (PARTITION BY lang) AS BIGINT) AS n_lang
-           |      FROM sc)
+           |      FROM mg)
            |SELECT doc_id, lang, score_m, rnk, n_lang,
            |       ((rnk - 1) * 10000) // greatest(n_lang - 1, 1) AS pct_bp
            |FROM r""".stripMargin,
       "x_curriculum_order" ->
-        s"""WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS words
-           |           FROM documents),
-           |f AS (SELECT doc_id,
-           |        CAST(len(words) AS BIGINT) AS n_words,
-           |        CAST(${hitsSql("words", stoplists.toMap.apply("en"))} AS BIGINT) AS n_stop,
-           |        CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS BIGINT) AS n_punct
-           |      FROM w),
-           |p AS (SELECT doc_id, n_words,
-           |        CAST(n_stop * 1000 // n_words AS BIGINT) AS stop_pm,
-           |        CAST(n_punct * 1000 // n_words AS BIGINT) AS punct_pm
-           |      FROM f),
-           |sc AS (SELECT doc_id,
-           |         CAST($gwStop * stop_pm + ($gwPunct) * punct_pm
-           |              + $gwLen * least(n_words, $gwLenCap) + ($gwBias) AS BIGINT) AS score_m
-           |       FROM p),
-           |adm AS (SELECT s.doc_id, d.lang, d.source, s.score_m
-           |        FROM sc s JOIN documents d ON s.doc_id = d.doc_id),
+        s"""WITH ${modelGateSqlCtes("lang", "source")},
            |wv AS (SELECT doc_id, lang, source, score_m,
            |         CAST(row_number() OVER (PARTITION BY lang, source
            |                ORDER BY score_m DESC, doc_id) AS BIGINT) AS wave
-           |       FROM adm)
+           |       FROM mg)
            |SELECT doc_id, lang, source, score_m, wave,
            |       CAST(row_number() OVER (ORDER BY wave, lang, source) AS BIGINT) AS pos
            |FROM wv""".stripMargin,
@@ -1386,32 +1372,13 @@ object TextAnalysis {
            |SELECT doc_id, n_emails, n_ips, n_nums, scrub_h FROM s3""".stripMargin
       },
       "x_curation_pipeline" ->
-        s"""WITH w AS (SELECT doc_id, lang, source, text,
-           |             string_split(text, ' ') AS words FROM documents),
-           |b AS (SELECT doc_id, lang, source, text,
-           |        CAST(len(words) AS BIGINT) AS n_words,
-           |        CAST(${hitsSql("words", Seq("the", "a", "of", "and", "is"))} AS BIGINT) AS n_stop
-           |      FROM w),
-           |q AS (SELECT * FROM b
-           |      WHERE n_words >= 20 AND n_words <= 2000 AND n_stop >= 1),
-           |k AS (SELECT CAST(min(doc_id) AS BIGINT) AS doc_id FROM q GROUP BY md5(text))
+        s"""WITH ${curatedSqlCtes("lang", "source")}
            |SELECT lang, source, count(*) AS n_kept,
            |       CAST(sum(n_words) AS BIGINT) AS n_tokens,
            |       CAST(min(doc_id) AS BIGINT) AS min_doc_id
-           |FROM q WHERE doc_id IN (SELECT doc_id FROM k)
-           |GROUP BY 1, 2""".stripMargin,
+           |FROM kd GROUP BY 1, 2""".stripMargin,
       "x_pack_curated" ->
-        s"""WITH w AS (SELECT doc_id, lang, source, text,
-           |             string_split(text, ' ') AS words FROM documents),
-           |b AS (SELECT doc_id, lang, source, text,
-           |        CAST(len(words) AS BIGINT) AS n_words,
-           |        CAST(${hitsSql("words", Seq("the", "a", "of", "and", "is"))} AS BIGINT) AS n_stop
-           |      FROM w),
-           |q AS (SELECT * FROM b
-           |      WHERE n_words >= 20 AND n_words <= 2000 AND n_stop >= 1),
-           |k AS (SELECT CAST(min(doc_id) AS BIGINT) AS doc_id FROM q GROUP BY md5(text)),
-           |kd AS (SELECT doc_id, lang, n_words FROM q
-           |       WHERE doc_id IN (SELECT doc_id FROM k)),
+        s"""WITH ${curatedSqlCtes("lang")},
            |c AS (SELECT doc_id, lang, n_words,
            |        sum(n_words) OVER (PARTITION BY lang ORDER BY doc_id
            |              ROWS UNBOUNDED PRECEDING) - n_words AS start_off
@@ -1483,15 +1450,13 @@ object TextAnalysis {
            |        WHEN s_es >= s_fr THEN 'es' ELSE 'fr' END) = lang AS is_match
            |FROM scored""".stripMargin,
       "x_text_quality" ->
-        s"""WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS words FROM documents),
-           |base AS (SELECT doc_id, CAST(len(words) AS BIGINT) AS n_words,
-           |    CAST(length(text) AS BIGINT) AS n_chars_m,
-           |    CAST(${hits("en")} AS BIGINT) AS n_stop
-           |  FROM w)
+        s"""WITH ${gateFeatureSqlCtes("text")},
+           |base AS (SELECT doc_id, n_words, CAST(length(text) AS BIGINT) AS n_chars_m, n_stop
+           |  FROM f)
            |SELECT doc_id, n_words, n_chars_m, n_stop,
            |  CAST(round(CAST(n_chars_m - (n_words - 1) AS DOUBLE) / n_words * 100) AS BIGINT) AS avg_word_len_c,
            |  CAST(round(CAST(n_stop AS DOUBLE) * 10000 / n_words) AS BIGINT) AS stop_bp,
-           |  (n_words >= 20 AND n_words <= 2000 AND n_stop >= 1) AS is_quality
+           |  ($qualitySql) AS is_quality
            |FROM base""".stripMargin,
       "x_text_entropy" ->
         s"""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
@@ -1519,39 +1484,15 @@ object TextAnalysis {
           |  CAST(round(CAST(sum(tf.tf) AS DOUBLE) / count(*) * 100) AS BIGINT) AS mean_tf_c
           |FROM tk JOIN tf USING (token) GROUP BY 1""".stripMargin,
       "x_text_surprisal" ->
-        // bitlen via binary printf — integer-exact twin of Spark's
-        // length(bin(x)); the HUGEINT sum is cast back per the house rule.
-        """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-          |tk AS (SELECT doc_id, token FROM t WHERE length(token) > 0),
-          |tf AS (SELECT token, count(*) AS tf FROM tk GROUP BY 1),
-          |n AS (SELECT CAST(sum(tf) AS BIGINT) AS n_corpus FROM tf),
-          |agg AS (SELECT doc_id, count(*) AS n_tokens,
-          |          CAST(sum(length(printf('%b', n.n_corpus))
-          |                   - length(printf('%b', tf.tf))) AS BIGINT) AS bits_sum
-          |        FROM tk JOIN tf USING (token) CROSS JOIN n GROUP BY 1)
-          |SELECT doc_id, n_tokens, bits_sum,
-          |       CAST((100 * bits_sum) // n_tokens AS BIGINT) AS mean_bits_c
-          |FROM agg""".stripMargin,
+        s"""WITH $surprisalSqlCtes
+           |SELECT doc_id, n_tokens, bits_sum, mean_bits_c FROM surp""".stripMargin,
       "x_doc_features" ->
-        s"""WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS words FROM documents),
-           |qb AS (SELECT doc_id, CAST(len(words) AS BIGINT) AS n_words,
-           |         CAST(${hitsSql("words", stoplists.toMap.apply("en"))} AS BIGINT) AS n_stop
-           |       FROM w),
+        s"""WITH ${gateFeatureSqlCtes()},
            |qual AS (SELECT doc_id, n_words,
            |           CAST(round(CAST(n_stop AS DOUBLE) * 10000 / n_words) AS BIGINT) AS stop_bp,
-           |           (n_words >= 20 AND n_words <= 2000 AND n_stop >= 1) AS is_quality
-           |         FROM qb),
-           |t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-           |tk AS (SELECT doc_id, token FROM t WHERE length(token) > 0),
-           |tf AS (SELECT token, count(*) AS tf FROM tk GROUP BY 1),
-           |n AS (SELECT CAST(sum(tf) AS BIGINT) AS n_corpus FROM tf),
-           |sagg AS (SELECT doc_id, count(*) AS n_tokens,
-           |           CAST(sum(length(printf('%b', n.n_corpus))
-           |                    - length(printf('%b', tf.tf))) AS BIGINT) AS bits_sum
-           |         FROM tk JOIN tf USING (token) CROSS JOIN n GROUP BY 1),
-           |surp AS (SELECT doc_id, n_tokens, bits_sum,
-           |           CAST((100 * bits_sum) // n_tokens AS BIGINT) AS mean_bits_c
-           |         FROM sagg),
+           |           ($qualitySql) AS is_quality
+           |         FROM f),
+           |$surprisalSqlCtes,
            |dup AS (SELECT doc_id,
            |          doc_id > min(doc_id) OVER (PARTITION BY md5(text)) AS is_dup
            |        FROM documents)

@@ -305,7 +305,7 @@ object IndexBuild {
          |    "graph_degree": ${Similarity.graphDegree},
          |    "minhash_seeds": ${Dedup.nSeeds},
          |    "chunk_router_cells": ${graft.ops.ChunkRouter.cellsOf(s)},
-         |    "chunk_router_probes": ${graft.ops.ChunkRouter.probesOf(s)},
+         |    "chunk_router_probes": ${graft.ops.ChunkRouter.probeCells},
          |    "chunk_router_rounds": ${graft.ops.ChunkRouter.maxRounds},
          |    "n_phrases": ${Search.nPhrases},
          |    "phrase_widths": "${Search.phraseWorkloadWidths.map { case (n, w) => s"$n:$w" }.mkString(",")}"

@@ -25,7 +25,6 @@ class RouterEpochSpec extends SparkSpec {
   test("router tunables: defaults pin the oracle constants; conf override retrains at the asked k") {
     // defaults = the constants the DuckDB oracle unrolls (conf unset)
     assert(ops.ChunkRouter.cellsOf(spark) == 64)
-    assert(ops.ChunkRouter.probesOf(spark) == 12)
     // override: training seeds (and therefore cells) follow the conf —
     // the k ≈ √n growth path a deployment takes without an engine edit.
     // stateDerive (not standingState) on purpose: the session memo must
